@@ -5,8 +5,7 @@ Importing :mod:`apache_beam_challange_spark.plans.canonical` (and sibling
 modules) populates the registry via the :func:`query` decorator.
 
 Two tiers, with :data:`DRIVER_ORDER` as the SINGLE source of tier truth
-(since round 5 — rotation is a one-list edit, nothing to flip on the
-decorators):
+(rotation is a one-list edit, nothing to flip on the decorators):
 
 - **Driver tier** (the names in :data:`DRIVER_ORDER`, exported through
   ``__spark_entry__.queries()``): exactly 50 entries — the driver's
@@ -35,63 +34,31 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: Exact driver-facing export order — priority first (reference-canonical
-#: queries, then this round's rotated-in entries, then the driver-green
-#: tail, which is the safest to lose to a shrinking window).
+#: Exact driver-facing export order, highest priority first: the
+#: reference-canonical core, then the rotated entries, with the
+#: oldest-verdict refresh tail last (the safest to lose to a shrinking
+#: window).
 #:
-#: ROTATION POLICY (since round 3): the driver gate reads at most 50
-#: entries, so each round swaps already-twice-driver-green tail entries
-#: out to the extended tier (still gated locally by
-#: tools/check_correctness.py and pytest every round) and rotates in
-#: extended queries that have never had a driver verdict. Over rounds
-#: this retires the never-driver-checked risk query by query while every
-#: past-green query keeps its local gate.
-#:
-#: Round 6 rotation (VERDICT r5 asks #2 and #4): rotated IN the full
-#: 34-query never-driver-checked pool recorded last round — the five
-#: first-session round-5 queries (SCD-2, quarantine routing, benchmark
-#: decontamination, curation funnel, audio features) plus the 29-query
-#: traindata family — and rotated OUT every round-5 driver entry that
-#: earned its verdict (the 18-query round-5 rotation plus the round-4
-#: second-verdict block). Per VERDICT r5 #4 the now-verdicted
-#: brute-force / train-at-query-time baselines (embedding_near_dup_pairs
-#: and the inline ivf/ivfpq/pq/opq quartet) leave the driver tier for
-#: good — their at-rest indexed twins hold the watch slots, and the
-#: bucketed ``embedding_near_dup_lsh`` takes the slot VERDICT reserved
-#: for it. After this round the never-driver-checked set is exactly the
-#: queries round 6 adds (the two new streaming batch-twins, rotated in
-#: below per VERDICT r5 #8).
-#:
-#: Round 8 rotation (VERDICT r7 #1): the complete 19-query round-8
-#: pool — every query round 7 added after its tier froze, all
-#: judge-verified green at sf0.01 but never driver-checked — rotates
-#: IN right after the canonical core. Rotating OUT: the 9 serving-watch
-#: entries (driver-green in BOTH r6 and r7 — their second verdict ends
-#: the continuous-watch obligation; the local gate still runs them
-#: every round) and the 10 once-green round-7 entries that carry an
-#: INDEPENDENT in-engine verification route (9 facade-portable
-#: two-route equality members in tests/test_sql_facade.py, plus the
-#: roster-simple weekly_revenue_wow) — the once-green entries kept in
-#: the tier are the ones whose only cross-engine check is the DuckDB
-#: oracle. A SECOND wave rotates in the ELEVEN queries round 8 itself
-#: builds (batched NSW/LSH/MIPS/IVFPQ serving, the PNG codec pair, the
-#: SemDeDup-k32 watch, the three MERGE routes incl. the streaming
-#: foreachBatch fold, and filtered ANN), displacing eleven
-#: heavily-pytest-covered once-green members, so after this round's
-#: gate the never-driver-checked set is EMPTY.
+#: TIER POLICY: the driver gate reads at most 50 entries. The core is
+#: pinned; the other 45 slots are filled by priority —
+#:   (1) queries added this round;
+#:   (2) queries whose ENGINE CODE changed since their last driver
+#:       verdict (operator/plan modules they execute through);
+#:   (3) oldest-driver-verdict refresh for everything else, ties
+#:       alphabetical — skipping the documented extended-by-design
+#:       members (near-duplicate route variants and deliberately-
+#:       quadratic baselines whose scale-safe twins hold tier slots,
+#:       e.g. cosine_topk_pandas_vec0, jaccard_pairs_by_source).
+#: A query rotated out keeps its local oracle gate and pytest coverage.
 DRIVER_ORDER: list[str] = [
-    # reference-canonical core (pinned every round)
+    # reference-canonical core (pinned)
     "q1_sql_top_pairs",
     "q2_top_pairs_ops",
     "q3_station_distances",
     "q4_total_distance",
     "q4_total_distance_by_name",
-    # Round-12 rotation (VERDICT r11 #1): the FINAL never-driver-checked
-    # pool — the 10-query wave5 remainder documented in last round's
-    # comment — rotates in, so after this round's gate every registered
-    # query has earned a driver verdict at least once, a first. Rotating
-    # OUT: the 45 round-11 members that went green in CORRECTNESS_r11
-    # (all stay in the local oracle gate + pytest every round).
+    # the last never-driver-checked pool: the wave5 remainder and the
+    # labeled rows-only perf twin
     "trimmed_mean_value_by_type",
     "order_to_ship_latency_quantiles",
     "return_rate_by_brand_wilson",
@@ -101,37 +68,20 @@ DRIVER_ORDER: list[str] = [
     "abc_xyz_parts",
     "kendall_w_hourly_revenue_ranking",
     "price_elasticity_by_brand",
-    "simhash_signatures_xxhash64_perf",  # the labeled rows-only perf twin
-    # Round-12 additions (VERDICT r11 #3 and #6) — straight into the tier
-    # so they never join a never-checked backlog: MJPEG/AVI video decode
-    # over the proven JPEG decoder, and multi-layer HNSW single + batched.
+    "simhash_signatures_xxhash64_perf",
+    # (1) additions: MJPEG/AVI video decode, multi-layer HNSW single +
+    # batched, HTML boilerplate removal
     "multimodal_decode_mjpeg",
     "hnsw_topk_vec0",
     "hnsw_knn_join_vec10",
     "multimodal_demux_avi",
     "html_boilerplate_extraction",
-    # STEADY-STATE TIER POLICY (VERDICT r11 #7), in force from round 13:
-    # with the never-checked backlog empty, the 45 non-canonical slots
-    # are filled by priority —
-    #   (1) queries added this round (always, as above);
-    #   (2) queries whose ENGINE CODE changed since their last driver
-    #       verdict (operator/plan modules they execute through);
-    #   (3) oldest-driver-verdict refresh for everything else, ties
-    #       alphabetical — skipping the documented extended-by-design
-    #       members (near-duplicate route variants and deliberately-
-    #       quadratic baselines whose scale-safe twins hold tier slots,
-    #       e.g. cosine_topk_pandas_vec0, jaccard_pairs_by_source; the
-    #       local gate still runs them every round).
-    # The r12 tier below IS the policy's first application.
-    # (2) code changed since their r11 verdicts: the JPEG decode fixes
-    # (SOS Td|Ta selector, AC run bound) and the shared parallelism
-    # guard touch all three JPEG-family queries.
+    # (2) engine code changed since their last verdict: the JPEG decoder
+    # and the shared parallelism guard behind all three JPEG queries
     "multimodal_decode_jpeg",
     "multimodal_decode_jpeg_color",
     "image_jpeg_dct_phash",
-    # (3) oldest-verdict refresh: every remaining round-1 verdict (14),
-    # every round-2 verdict (10), then the alphabetically-first round-3
-    # verdicts (5) to fill the tier to exactly 50.
+    # (3) oldest-verdict refresh
     "argmax_order_per_customer",
     "dataset_split_counts",
     "distinct_pairs",
@@ -159,10 +109,6 @@ DRIVER_ORDER: list[str] = [
     "asof_join_last_event_per_order",
     "column_profile_rides",
     "countmin_user_estimates",
-    # (dedup_exact_docs and embedding_norms_by_label, the would-be 29th
-    # and 30th refresh slots, yield their places to the round-12 late
-    # additions multimodal_demux_avi and html_boilerplate_extraction per
-    # policy priority (1) > (3); they refresh in round 13.)
 ]
 
 

@@ -1,35 +1,21 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line with per-query wall seconds.
+"""The build driver's benchmark record.
 
-Methodology (round 3): every query runs REPEATS times and reports its
-MEDIAN wall; the totals are sums of medians. A single-shot bench on a
-shared host has ±15-30% run-to-run noise (PERF.md; round-2 verdict
-"What's wrong" #4), which made round-over-round deltas unadjudicable —
-medians make the driver's recorded number variance-robust. Two series:
+Times the frozen 15-query HEADLINE plus a core-scaling canary over the
+test corpus at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS], writes BENCH_DETAIL.json and prints the compact
+record as its FINAL stdout line — the line the driver parses (`value`, the
+sum of headline medians, and `queries`). The judged benchmark is
+perfbench/ (BENCHMARK.json); this file only keeps the driver's record.
 
-- HEADLINE: the 15-query continuity series, frozen since round 1 so
-  BENCH_r1/r2/r3 stay comparable ("value" remains this series' total).
-- FLAGSHIPS: round-2/3 operators (CC dedup chain, TF-IDF, at-rest IVF+PQ,
-  funnel, and the servable ANN pair), reported as "flagships"/
-  "flagships_total" so the new subsystems get tracked wall numbers too.
-- CURATION: the round-4 batch-curation operators (sessionize, snapshot,
-  stratified sample, histogram quantiles, Bloom membership, quality
-  decile, anti join, Q6), reported as "curation"/"curation_total".
-- ABLATIONS (round 5): labeled train-at-query-time baselines kept OUT of
-  the serving series (VERDICT r4 #2) — the inline IVFPQ-refined route
-  re-trains sub-codebooks per query by design; its at-rest indexed twin
-  in FLAGSHIPS is the deployment shape.
+    python bench.py                  # headline + canary, the driver record
+    python bench.py name [name ...]  # time these registry queries instead
 
-Per-query spread: every query also reports {min, max} across its REPEATS
-(the "spread" field), so a regression is distinguishable from host noise
-without cross-referencing PERF.md (VERDICT r4 #6).
-
-Execution is forced with the noop sink (full compute, no driver collect),
-except streaming queries whose callables already run to completion.
-Queries that materialize a warehouse layer on first touch (hypertable
-rollup, at-rest indexes) amortize it across repeats; the median reports
-steady-state serving cost, which is the number that matters.
+Every timing goes through `_measure`: SPARK_GRAFT_BENCH_REPEATS (default 3)
+runs into the noop sink (full compute, no driver collect), reported as
+median/min/max wall plus the host's CPU steal share over the runs. A
+failing query is recorded as null with its error kept in the detail; it
+never stops the run. `noise_ref` times a tiny fixed aggregate before and
+after the queries — a host-state barometer for reading the walls.
 """
 
 from __future__ import annotations
@@ -39,250 +25,17 @@ import os
 import statistics
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
+NOISE_REPS = 5
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
 
-#: Noise normalization + single-place pin adjudication (VERDICT r11 #4).
-#: Every wall on this host rides the shared-host state that noise_ref
-#: measures, so cross-round ratios only carry meaning after dividing the
-#: noise drift out:   normalized(w, prev_w) = (w / prev_w) * (prev_noise /
-#: noise_ref).  r11's nominal 1.13x headline was 0.84x normalized — the
-#: nominal number alone misreads an improvement as a regression. The
-#: records now carry BOTH; signal pins FIRE only when the NORMALIZED
-#: ratio exceeds PIN_FIRE_MARGIN (the margin PERF.md previously applied
-#: in prose: the observed same-roster run-to-run spread at steady
-#: noise_ref is +-30%, so 1.5x normalized is beyond host noise).
-PIN_FIRE_MARGIN = 1.5
-
-#: Previous round's headline walls + noise_ref (BENCH_r11 parsed record,
-#: REPEATS=3 medians at sf0.1) — the vs_prev / vs_prev_normalized base.
-#: Updated each round the headline roster is re-recorded.
-R11_PREV_NOISE_REF = 0.364
-R11_PREV = {
-    "q1_sql_top_pairs": 0.727,
-    "q2_top_pairs_ops": 0.595,
-    "q3_station_distances": 1.044,
-    "q4_total_distance": 1.256,
-    "pricing_summary": 0.422,
-    "join_broadcast_revenue": 0.396,
-    "window_rank_orders": 0.371,
-    "hypertable_rollup_hourly": 0.333,
-    "dedup_exact_docs": 0.212,
-    "jaccard_on_lsh_candidates": 0.819,
-    "minhash_candidate_pairs": 0.514,
-    "cosine_topk_vec0": 0.462,
-    "ann_lsh_topk_vec0": 0.611,
-    "multimodal_image_features": 0.347,
-    "streaming_tumbling_counts": 0.812,
-}
-
-#: The de-facto perf baseline (VERDICT r5 #7): BENCH_r01.json's parsed
-#: per-query medians at sf0.1 — the first complete engine. BASELINE.md's
-#: guardrail is "within 2x of driver BASELINE at the same sf"; every bench
-#: run emits per-query wall / r1 wall ("vs_r1") for the queries the r1
-#: series shares with today's headline, so the claim is checkable at a
-#: glance. (r1 ran three since-retired headline members — events_hourly_
-#: counts, distinct_pairs, jaccard_pairs_by_source — hence 12 ratios, not
-#: 15.)
-R1_BASELINE = {
-    "q1_sql_top_pairs": 1.148,
-    "q2_top_pairs_ops": 0.676,
-    "q3_station_distances": 1.206,
-    "q4_total_distance": 1.796,
-    "pricing_summary": 0.505,
-    "join_broadcast_revenue": 0.525,
-    "window_rank_orders": 0.543,
-    "minhash_candidate_pairs": 2.381,
-    "cosine_topk_vec0": 0.538,
-    "ann_lsh_topk_vec0": 0.759,
-    "multimodal_image_features": 1.158,
-    "streaming_tumbling_counts": 1.408,
-}
-
-#: Per-group noise-class pins for the round8b/round8c series (VERDICT r8
-#: #6 — the headline set has R1_BASELINE; these series' first full-round
-#: record is BENCH_r08/BENCH_DETAIL @ noise_ref 0.357, pinned here as
-#: their reference walls). Each member is classed once, from the PIN,
-#: not from the current run: "noise" if the pinned wall sits under
-#: 3x the pinned noise_ref (~1.07 s — the band where BENCH_r08's q1 blip
-#: showed host state dominates structure), else "signal". Future rounds
-#: auto-adjudicate: a swing on a noise-class member reads against
-#: noise_ref; only signal-class ratios (emitted as vs_r8, max as
-#: vs_r8_signal_max) carry regression meaning on their own.
-R8_PINS_NOISE_REF = 0.357
-R8_PINS = {
-    "tpch_q2_min_cost_supplier": 1.288,
-    "tpch_q4_priority_check": 0.613,
-    "tpch_q7_volume_shipping": 0.983,
-    "tpch_q8_market_share": 1.141,
-    "tpch_q9_product_profit": 0.966,
-    "tpch_q11_important_parts": 0.701,
-    "tpch_q12_shipmode_priority": 0.604,
-    "tpch_q13_customer_distribution": 0.479,
-    "tpch_q14_promo_revenue": 0.434,
-    "tpch_q15_top_supplier": 0.483,
-    "tpch_q16_supplier_part_counts": 1.282,
-    "tpch_q18_large_volume_customers": 0.874,
-    "tpch_q19_disjunctive_revenue": 0.654,
-    "tpch_q20_excess_share_suppliers": 1.221,
-    "pca_power_iteration_top_component": 1.167,
-    "pca_projection_extremes": 0.731,
-    "kcenter_diversity_sample": 3.52,
-    "pareto_abc_parts": 0.811,
-    "pit_scd2_state_before_purchase": 1.001,
-    "batch_interval_join_binned": 0.479,
-    "equi_depth_value_bins": 0.75,
-    "basket_part_pairs_topk": 1.682,
-    "session_window_native": 0.467,
-    "linreg_value_on_hour_by_type": 0.336,
-    "skyline_parts_price_size": 0.362,
-    "psi_weekend_drift_by_type": 0.534,
-    "group_kfold_split_audit": 0.75,
-    "km_time_to_purchase": 0.465,
-    "bootstrap_ci_value_by_type": 2.778,
-    "kcore_part_graph": 2.003,
-    "data_quality_expectations": 0.786,
-    "window_feature_pack": 0.9,
-    "quantile_normalize_values": 1.897,
-    "hrw_shard_rebalance_audit": 0.488,
-    "markov_backtest_accuracy": 0.761,
-    "ewma_forecast_backtest": 0.378,
-    "ks_test_weekend_value": 0.818,
-    "grouping_sets_revenue": 0.668,
-    "gini_revenue_inequality": 1.486,
-    "chi2_type_dow_independence": 0.405,
-    "fellegi_sunter_part_links": 0.345,
-    "vocab_js_drift_src0": 0.409,
-    "mde_power_analysis": 0.264,
-    "chow_break_daily_revenue": 0.619,
-    "winsorized_mean_value": 0.743,
-    "negative_sampling_triplets": 2.097,
-    "target_encoding_oof": 0.541,
-    "multitouch_attribution": 1.49,
-    "association_rules_topk": 2.03,
-    "cohort_ltv_curve": 0.626,
-    "rfm_segment_counts": 2.438,
-    "growth_accounting_wau": 0.631,
-    "clamped_ledger_balances": 0.727,
-}
-R8_NOISE_CLASS = {
-    n: ("noise" if w < 3 * R8_PINS_NOISE_REF else "signal")
-    for n, w in R8_PINS.items()
-}
-
-#: Per-query noise-class pins for the round9/wave5/wave6 series (VERDICT
-#: r10 #4, carried from r9 #5): the round-10 close's clean-host run
-#: (BENCH_DETAIL @ noise_ref 0.269, REPEATS=3 medians at sf0.1) is the
-#: reference wall for every member of the three newest series. Same
-#: adjudication rule as R8_PINS: classed once FROM THE PIN — "noise" if
-#: the pinned wall sits under 3x the pinned noise_ref (~0.81 s), where
-#: host state dominates plan structure — and only signal-class ratios
-#: (emitted as vs_r10, max as vs_r10_signal_max) carry regression
-#: meaning on their own; noise-class swings read against the current
-#: run's noise_ref.
-R10_PINS_NOISE_REF = 0.269
-R10_PINS = {
-    "asof_payload_last_click_before_purchase": 0.376,
-    "mann_whitney_auc_purchase": 0.242,
-    "spearman_value_hour_by_type": 1.028,
-    "lift_gain_deciles_value": 0.959,
-    "token_hapax_stats_by_source": 0.336,
-    "acf_daily_revenue": 0.554,
-    "ivf_retrain_topk_vec0": 1.063,
-    "kendall_tau_value_hour_by_type": 2.043,
-    "asof_forward_next_purchase_after_click": 0.347,
-    "bradley_terry_part_prefs": 1.765,
-    "holt_forecast_backtest": 0.403,
-    "mann_kendall_sen_trend_daily": 0.702,
-    "seasonal_decompose_daily": 0.523,
-    "did_estimate_by_type": 0.448,
-    "anova_f_value_by_type": 0.37,
-    "kruskal_wallis_value_by_type": 0.722,
-    "nelson_aalen_hazard_to_purchase": 0.306,
-    "logrank_purchase_by_parity": 0.357,
-    "hhi_nation_revenue_concentration": 0.491,
-    "theil_index_revenue": 0.316,
-    "ccf_clicks_purchases_daily": 0.452,
-    "loo_group_influence_on_slope": 0.367,
-    "stratified_ate_weekend_value": 0.311,
-    "ece_calibration_value_deciles": 0.313,
-    "average_precision_purchase_by_value": 0.235,
-    "isotonic_purchase_rate_by_value_bin": 0.572,
-    "zipf_fit_tokens": 0.331,
-    "fdr_bh_hourly_purchase_rate": 0.387,
-    "holt_winters_forecast_backtest": 0.638,
-    "km_greenwood_ci": 0.37,
-    "weighted_quantiles_value_by_type": 0.471,
-    "cmh_weekend_purchase_by_hour": 0.368,
-    "resample_linear_hourly": 0.674,
-    "wilson_ci_purchase_by_parity": 0.231,
-    "dispersion_index_hourly_counts": 0.381,
-    "granger_lite_clicks_purchases": 0.489,
-    "weekly_periodogram_power": 0.5,
-    "sprt_purchase_rate_monitor": 0.848,
-    "cohens_d_weekend_value": 0.323,
-    "energy_distance_weekend_value": 0.474,
-    "heaps_law_fit_tokens": 0.576,
-    "token_burstiness_top_terms": 0.51,
-    "cka_embedding_halves": 0.758,
-    "effective_rank_embeddings": 0.652,
-    "rmst_to_purchase": 0.465,
-    "msprt_always_valid_pvalue": 1.038,
-    "qte_weekend_value": 0.44,
-    "trimmed_mean_value_by_type": 0.503,
-    "fwl_weekend_effect_hour_fe": 0.335,
-    "theil_decomposition_by_nation": 0.623,
-    "mi_type_hour_dependence": 0.446,
-    "kendall_w_hourly_revenue_ranking": 0.361,
-    "abc_xyz_parts": 0.867,
-    "order_to_ship_latency_quantiles": 0.866,
-    "return_rate_by_brand_wilson": 0.442,
-    "price_elasticity_by_brand": 0.714,
-    "mad_value_by_type": 0.724,
-    "tukey_fence_outliers_by_type": 0.507,
-    "seasonal_naive_backtest": 0.303,
-    "brier_murphy_decomposition": 0.504,
-    "woe_iv_value_bins": 0.34,
-    "obf_group_sequential_monitor": 0.9,
-    "neyman_allocation_by_type": 0.372,
-    "t_closeness_audit": 0.453,
-    "ndcg_at_k_value_ranking": 0.895,
-    "jl_projection_distortion": 0.765,
-    "markov_removal_attribution": 4.614,
-    "hilbert_orders_keys": 0.568,
-    "ngram_novelty_by_source": 1.206,
-    "shapley_attribution": 1.291,
-    "conformal_value_intervals": 0.807,
-    "jackknife_ratio_variance": 0.524,
-    "delta_method_ratio_ci": 0.357,
-    "huber_location_by_type": 3.099,
-    "kish_effective_sample_size": 0.322,
-    "mcnemar_weekend_purchase": 0.229,
-    "ipf_raking_type_hour": 1.517,
-    "t_closeness_emd_audit": 1.69,
-    "association_effect_sizes_type_dow": 0.756,
-    "fs_em_parameter_estimation": 3.281,
-    "aalen_johansen_cif": 0.451,
-    "markov_entropy_rate": 3.249,
-    "good_turing_chao1_vocab": 0.42,
-    "audio_dominant_frequency": 1.601,
-    "image_dct_phash": 3.097,
-    "platt_scaling_value_purchase": 3.488,
-    "sbg_retention_fit": 0.878,
-    "qini_uplift_deciles": 0.471,
-    "graph_degree_assortativity": 2.152,
-    "evalue_sensitivity_weekend": 0.279,
-    "gumbel_block_maxima_fit": 0.327,
-    "hill_tail_index": 0.41,
-    "funnel_step_latency_quantiles": 0.693,
-}
-R10_NOISE_CLASS = {
-    n: ("noise" if w < 3 * R10_PINS_NOISE_REF else "signal")
-    for n, w in R10_PINS.items()
-}
-
+#: frozen since the first record so `value` stays comparable over time
 HEADLINE = [
     "q1_sql_top_pairs",
     "q2_top_pairs_ops",
@@ -300,789 +53,176 @@ HEADLINE = [
     "multimodal_image_features",
     "streaming_tumbling_counts",
 ]
-
-FLAGSHIPS = [
-    "dedup_connected_components",
-    "tfidf_top_terms",
-    "ivfpq_topk_indexed_vec0",
-    "event_funnel_counts",
-    "ann_lsh_multitable_topk_vec0",
-    "ann_lsh_multiprobe_topk_vec0",
-    "ivfpq_refined_topk_indexed_vec0",
-]
-
-ABLATIONS = [
-    "ivfpq_refined_topk_vec0",  # inline re-train per query — baseline only
-    "rp_jl_topk_vec0",  # JL dim-reduction ablation (recall collapses at n=2000)
-]
-
-#: The round-5 traindata family (serving-shape members; the JL ablation
-#: sits in ABLATIONS with the other labeled baseline), tracked as
-#: its own series; the five earlier round-5 queries (SCD-2, quarantine,
-#: contamination, funnel, audio) stay gate-timed in PERF.md to bound
-#: bench growth. prefix_filter (~4.7 s) is the family's one multi-second
-#: member — the exact global similarity join over all documents.
-TRAINDATA = [
-    "sequence_packing_by_shard",
-    "pii_redaction_counts",
-    "resample_locf_hourly",
-    "near_dup_triangle_stats",
-    "sq8_topk_vec0",
-    "bpe_pair_counts",
-    "prefix_filter_jaccard_pairs",
-    "weighted_doc_sample",
-    "entity_part_clusters",
-    "zorder_orders_keys",
-    "hll_sliding_distinct_users",
-    "sessions_overlapping_error_hours",
-    "streaming_ohlc_hourly",
-    "cusum_hourly_changepoints",
-    "multimodal_image_phash",
-    "split_leakage_pairs",
-    "daily_trend_slopes",
-    "session_covisit_pmi",
-    "timed_conversion_counts",
-    "station_grid_density",
-    "bigram_surprise_docs",
-    "quality_percentile_by_lang",
-    "mmr_diversified_topk_vec0",
-    "dq_verification_report",
-    "stations_within_radius_pairs",
-    "near_dup_k_core",
-    "cdc_snapshot_with_deletes",
-    "cdc_chunk_dedup_stats",
-    # round-6 streaming additions (VERDICT r5 #8) — availableNow runs to
-    # completion, so the wall includes the streaming engine's fixed
-    # per-query startup, not just the plan
-    "stream_stream_interval_join",
-    "stream_stream_left_outer_join",
-    "stream_stream_full_outer_join",
-    "streaming_dedup_within_watermark",
-    "stateful_user_session_stats",
-    "stateful_gap_sessions",
-    # round-6 tokenizer-pipeline family: BPE merge training (iterative —
-    # its wall includes BPE_ROUNDS vocab-table jobs), coverage curve,
-    # RAG chunking, robust MAD outliers
-    "bpe_train_merges",
-    "bpe_encode_token_counts",
-    "vocab_coverage_topk",
-    "chunk_overlap_dedup",
-    "robust_outlier_hours",
-    "enriched_orders_view_revenue",
-    "near_dup_label_propagation",
-]
-
-#: Round-6 continued-session families (published curation filters,
-#: evaluation/audit, coarse quantized ANN, density clustering) — their
-#: own series so the prior series' totals stay roster-comparable.
-#: station_dbscan_clusters (~6.7 s) is the one multi-second member
-#: (LSS CC round count on the 2-shuffle-per-round core subgraph).
-FILTERING = [
-    "gopher_quality_flags",
-    "dsir_importance_weights",
-    "duplicate_span_islands",
-    "adamic_adar_link_prediction",
-    "kmeans_silhouette",
-    "k_anonymity_audit",
-    "event_pattern_matches",
-    "containment_dup_pairs",
-    "dp_noisy_lang_counts",
-    "unpivot_returnflag_metrics",
-    "bq_topk_vec0",
-    "matryoshka_topk_vec0",
-    "station_dbscan_clusters",
-    "cluster_canonical_docs",
-]
-
-#: round-7 additions (VERDICT r6 #2-#4): decorrelated TPC-H Q17/Q22,
-#: NSW graph-ANN served from the at-rest neighbor graph, KLL quantile
-#: sketch. nsw amortizes its one-time graph build across repeats like
-#: the other at-rest indexes; the median is steady-state serving cost.
-ROUND7 = [
-    "tpch_q17_small_qty_revenue",
-    "tpch_q22_idle_customers",
-    "nsw_topk_vec0",
-    "kll_value_quantiles",
-    "tpch_q21_waiting_suppliers",
-    "range_frame_user_day_totals",
-    "semdedup_cluster_prune",
-    "mergeable_topk_user_counts",
-    "mips_topk_vec0",
-    "mips_augmented_lsh_topk_vec0",
-    "benford_price_audit",
-    "global_row_ids_orders",
-    "stream_stream_left_semi_join",
-    "lang_mixing_allocation",
-    "snapshot_diff_audit",
-    "l_diversity_audit",
-    "image_phash_dup_clusters",
-    "mips_augmented_lsh_topk_indexed_vec0",
-    "cuped_variance_reduction",
-]
-
-#: round-8 additions (VERDICT r7 #2-#8): batched ANN/MIPS serving from
-#: the at-rest indexes (query-set probes — the serving shape), the PNG
-#: codec round-trip, the SemDeDup k=32 production-shaped watch, and the
-#: MERGE INTO surface. The batch ANN members amortize their one-time
-#: index/graph builds across repeats like the other at-rest indexes.
-ROUND8 = [
-    "nsw_knn_join_vec10",
-    "knn_join_lsh_vec10",
-    "mips_knn_join_vec10",
-    "ivfpq_knn_join_vec10",
-    "multimodal_decode_png",
-    "multimodal_png_phash",
-    "semdedup_cluster_prune_k32",
-    "merge_into_cdc_snapshot",
-    "merge_full_sync_snapshot",
-    "ann_lsh_filtered_topk_vec0",
-    # foreachBatch + MERGE against the versioned at-rest target; the
-    # wall includes the per-repeat stream write + 4 micro-batches
-    "streaming_cdc_merge_snapshot",
-]
-
-#: round-8 second wave (same-session widening): the TPC-H completion,
-#: the PCA pair, k-center, the binned interval join, the equi-depth
-#: bucketizer, Pareto/ABC prefix sum, the point-in-time SCD2 join and
-#: basket pair mining — a NEW series so every prior series' roster
-#: stays comparable (membership pins unchanged there). pca_* shares
-#: one Gram pass per repeat; kcenter is 7 bounded broadcast rounds.
-ROUND8B = [
-    "tpch_q2_min_cost_supplier",
-    "tpch_q4_priority_check",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_parts",
-    "tpch_q12_shipmode_priority",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_disjunctive_revenue",
-    "tpch_q20_excess_share_suppliers",
-    "pca_power_iteration_top_component",
-    "pca_projection_extremes",
-    "kcenter_diversity_sample",
-    "pareto_abc_parts",
-    "pit_scd2_state_before_purchase",
-    "batch_interval_join_binned",
-    "equi_depth_value_bins",
-    "basket_part_pairs_topk",
-]
-
-#: round-8 third wave: native session_window, OLS, skyline, PSI,
-#: group-k-fold, Kaplan-Meier, Poisson bootstrap, k-core — the
-#: round-9 rotation pool's new-operator block, pinned as its own series.
-ROUND8C = [
-    "session_window_native",
-    "linreg_value_on_hour_by_type",
-    "skyline_parts_price_size",
-    "psi_weekend_drift_by_type",
-    "group_kfold_split_audit",
-    "km_time_to_purchase",
-    "bootstrap_ci_value_by_type",
-    "kcore_part_graph",
-    "data_quality_expectations",
-    "window_feature_pack",
-    "quantile_normalize_values",
-    "hrw_shard_rebalance_audit",
-    "markov_backtest_accuracy",
-    "ewma_forecast_backtest",
-    "ks_test_weekend_value",
-    "grouping_sets_revenue",
-    "gini_revenue_inequality",
-    "chi2_type_dow_independence",
-    "fellegi_sunter_part_links",
-    "vocab_js_drift_src0",
-    "mde_power_analysis",
-    "chow_break_daily_revenue",
-    "winsorized_mean_value",
-    "negative_sampling_triplets",
-    "target_encoding_oof",
-    "multitouch_attribution",
-    "association_rules_topk",
-    "cohort_ltv_curve",
-    "rfm_segment_counts",
-    "growth_accounting_wau",
-    "clamped_ledger_balances",
-]
-
-#: round-9 wave (built this round; pins land once BENCH_r09 records the
-#: first full-round walls): the payload as-of join, the exact rank
-#: statistics, lexical health, exact ACF.
-ROUND9 = [
-    "asof_payload_last_click_before_purchase",
-    "mann_whitney_auc_purchase",
-    "spearman_value_hour_by_type",
-    "lift_gain_deciles_value",
-    "token_hapax_stats_by_source",
-    "acf_daily_revenue",
-    "ivf_retrain_topk_vec0",
-    "kendall_tau_value_hour_by_type",
-    "asof_forward_next_purchase_after_click",
-    "bradley_terry_part_prefs",
-    "holt_forecast_backtest",
-    "mann_kendall_sen_trend_daily",
-    "seasonal_decompose_daily",
-    "did_estimate_by_type",
-]
-
-#: round-9 wave5 (experiment-analysis block, built this round; pins land
-#: once BENCH_r09/r10 records the first full-round walls): hypothesis
-#: tests, survival, concentration/inequality, calibration, ranking
-#: metrics, forecasting, multiple-testing — every member one
-#: map-side-combined aggregate plus domain-/calendar-bounded tails.
-WAVE5 = [
-    "anova_f_value_by_type",
-    "kruskal_wallis_value_by_type",
-    "nelson_aalen_hazard_to_purchase",
-    "logrank_purchase_by_parity",
-    "hhi_nation_revenue_concentration",
-    "theil_index_revenue",
-    "ccf_clicks_purchases_daily",
-    "loo_group_influence_on_slope",
-    "stratified_ate_weekend_value",
-    "ece_calibration_value_deciles",
-    "average_precision_purchase_by_value",
-    "isotonic_purchase_rate_by_value_bin",
-    "zipf_fit_tokens",
-    "fdr_bh_hourly_purchase_rate",
-    "holt_winters_forecast_backtest",
-    "km_greenwood_ci",
-    "weighted_quantiles_value_by_type",
-    "cmh_weekend_purchase_by_hour",
-    "resample_linear_hourly",
-    "wilson_ci_purchase_by_parity",
-    "dispersion_index_hourly_counts",
-    "granger_lite_clicks_purchases",
-    "weekly_periodogram_power",
-    "sprt_purchase_rate_monitor",
-    "cohens_d_weekend_value",
-    "energy_distance_weekend_value",
-    "heaps_law_fit_tokens",
-    "token_burstiness_top_terms",
-    "cka_embedding_halves",
-    "effective_rank_embeddings",
-    "rmst_to_purchase",
-    "msprt_always_valid_pvalue",
-    "qte_weekend_value",
-    "trimmed_mean_value_by_type",
-    "fwl_weekend_effect_hour_fe",
-    "theil_decomposition_by_nation",
-    "mi_type_hour_dependence",
-    "kendall_w_hourly_revenue_ranking",
-    "abc_xyz_parts",
-    "order_to_ship_latency_quantiles",
-    "return_rate_by_brand_wilson",
-    "price_elasticity_by_brand",
-    "mad_value_by_type",
-    "tukey_fence_outliers_by_type",
-    "seasonal_naive_backtest",
-]
-
-#: round-10 wave6 (evaluation / decision-science block): proper-scoring
-#: decomposition, feature diagnostics, group-sequential monitoring,
-#: survey-sampling allocation — extended as the round builds.
-WAVE6 = [
-    "brier_murphy_decomposition",
-    "woe_iv_value_bins",
-    "obf_group_sequential_monitor",
-    "neyman_allocation_by_type",
-    "t_closeness_audit",
-    "ndcg_at_k_value_ranking",
-    "jl_projection_distortion",
-    "markov_removal_attribution",
-    "hilbert_orders_keys",
-    "ngram_novelty_by_source",
-    "shapley_attribution",
-    "conformal_value_intervals",
-    "jackknife_ratio_variance",
-    "delta_method_ratio_ci",
-    "huber_location_by_type",
-    "kish_effective_sample_size",
-    "mcnemar_weekend_purchase",
-    "ipf_raking_type_hour",
-    "t_closeness_emd_audit",
-    "association_effect_sizes_type_dow",
-    "fs_em_parameter_estimation",
-    "aalen_johansen_cif",
-    "markov_entropy_rate",
-    "good_turing_chao1_vocab",
-    "audio_dominant_frequency",
-    "image_dct_phash",
-    "platt_scaling_value_purchase",
-    "sbg_retention_fit",
-    "qini_uplift_deciles",
-    "graph_degree_assortativity",
-    "evalue_sensitivity_weekend",
-    "gumbel_block_maxima_fit",
-    "hill_tail_index",
-    "funnel_step_latency_quantiles",
-]
-
-#: round-11 wave7 (VERDICT r10 #7 operator classes): the baseline JPEG
-#: codec round-trip and the Vamana (DiskANN-class) graph ANN — vamana
-#: amortizes its one-time at-rest graph+medoid build across repeats like
-#: the other indexed serving members; pins land once BENCH_r11 records
-#: the first full-round walls.
-WAVE7 = [
-    "multimodal_decode_jpeg",
-    "vamana_topk_vec0",
-    "vamana_knn_join_vec10",
-    "image_jpeg_dct_phash",
-    "multimodal_decode_jpeg_color",
-]
-
-#: round-12 wave8 (VERDICT r11 #3 and #6): MJPEG/AVI video decode and the
-#: multi-layer HNSW pair — hnsw amortizes its at-rest layered-graph +
-#: levels-sidecar build across repeats like the other indexed members.
-WAVE8 = [
-    "multimodal_decode_mjpeg",
-    "hnsw_topk_vec0",
-    "hnsw_knn_join_vec10",
-    "multimodal_demux_avi",
-    "html_boilerplate_extraction",
-]
-
-CURATION = [
-    "batch_sessionize_events",
-    "latest_event_per_user",
-    "stratified_sample_documents",
-    "histogram_quantiles_lineitem",
-    "bloom_membership_orders",
-    "top_decile_quality_by_lang",
-    "customers_without_urgent_orders",
-    "q6_forecast_revenue",
-    "pagerank_near_dup_graph",
-    "unigram_surprise_docs",
-    "phrase_search_positions",
-    "fuzzy_part_name_pairs",
-    "per_lang_doc_sample",
-    "bm25_top_docs",
-    "hybrid_rrf_vec0",
-]
+CANARY = "scaling_canary"
 
 
-def _scaling_canary(spark):
-    """Data-sized synthetic aggregate whose wall actually scales with the
-    core count (VERDICT r13 #3): every headline query at sf0.1 sits on
-    the ~0.2 s/stage scheduling floor, so the driver's 8-vs-32-core probe
-    reads ≈1 for all of them and cannot distinguish "parallelizes" from
-    "serial". This canary is pure JVM codegen work (chained xxhash64 over
-    40M synthetic rows, one small shuffle) partitioned at the session's
-    defaultParallelism — its 8-core wall should read ≈(32/8)× the 32-core
-    wall. Synthetic (spark.range), deterministic, no testdata dependency;
-    reported in `queries` as `scaling_canary` but NOT added to `value`
-    (the frozen 15-query headline total stays comparable round-over-round)."""
+def _noop(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies of the aggregate cpu line of /proc/stat."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
+
+
+def _measure(thunk, reps: int) -> dict | str:
+    """Run ``thunk()`` (which builds a DataFrame) into the noop sink
+    ``reps`` times. Returns {median, min, max, steal_pct} in seconds, or
+    the error as a one-line string (traceback on stderr)."""
+    walls = []
+    steal0, total0 = _cpu_jiffies()
+    try:
+        for _ in range(reps):
+            t0 = time.time()
+            _noop(thunk())
+            walls.append(time.time() - t0)
+    except Exception as exc:  # recorded, never fatal
+        traceback.print_exc()
+        return f"{type(exc).__name__}: {' '.join(str(exc).split())}"[:300]
+    steal1, total1 = _cpu_jiffies()
+    return {
+        "median": round(statistics.median(walls), 3),
+        "min": round(min(walls), 3),
+        "max": round(max(walls), 3),
+        "steal_pct": round(100 * (steal1 - steal0) / max(1, total1 - total0), 1),
+    }
+
+
+def _scaling_canary(spark, rows: int = 40_000_000):
+    """Synthetic aggregate whose wall scales with the core count: chained
+    xxhash64 over ``rows`` generated rows, split at the session's
+    defaultParallelism, then one small shuffle. Headline queries at sf0.1
+    sit on the per-stage scheduling floor, so they read about the same at
+    any core count; this one should not. It sums the top 32 bits of each
+    hash, so a bucket sum stays below 2^63 under ANSI for any row count
+    below 2^31. Reported in `queries`, never added to `value`."""
     from pyspark.sql import functions as F
 
     p = spark.sparkContext.defaultParallelism
-    df = spark.range(0, 40_000_000, 1, p).select(
-        F.xxhash64("id").alias("h0")
-    )
+    df = spark.range(0, rows, 1, p).select(F.xxhash64("id").alias("h0"))
     for i in range(3):
         df = df.select(F.xxhash64(f"h{i}").alias(f"h{i + 1}"))
     return df.groupBy(F.pmod(F.col("h3"), F.lit(4096)).alias("b")).agg(
-        F.count(F.lit(1)).alias("c"), F.sum("h3").alias("s")
+        F.count(F.lit(1)).alias("c"),
+        F.sum(F.shiftrightunsigned("h3", 32)).alias("s"),
     )
 
 
-#: detail-record series whose totals ride the compact final line
-_SERIES_KEYS = (
-    "flagships", "curation", "traindata", "ablations", "filtering",
-    "round7", "round8", "round8b", "round8c", "round9",
-    "wave5", "wave6", "wave7", "wave8",
-)
-
-
-def compact_line(detail: dict) -> str:
-    """Render the FINAL compact record (the line the driver parses into
-    BENCH_r{N}.json) from the full detail record. A pure function so a
-    unit test can pin the rendered length under the driver's ~2000-char
-    tail capture — BENCH_r12's final line outgrew it (`parsed: null`)
-    and cost two rounds of round-over-round geomean (VERDICT r13 #4)."""
-
-    def _mx(d):
-        return max(d.values()) if d else None
-
-    vs_r8_signal = {
-        n: r
-        for n, r in detail["vs_r8"].items()
-        if detail["r8_noise_class"][n] == "signal"
-    }
-    vs_r10_signal = {
-        n: r
-        for n, r in detail["vs_r10"].items()
-        if detail["r10_noise_class"][n] == "signal"
-    }
-    rec = {
-        "metric": detail["metric"],
-        "value": detail["value"],
-        "unit": detail["unit"],
-        "queries": detail["queries"],
-    }
-    for k in _SERIES_KEYS:
-        rec[f"{k}_total"] = round(sum(detail[k].values()), 3)
-    rec.update(
-        {
-            "vs_r1_max": _mx(detail["vs_r1"]),
-            "vs_r8_signal_max": _mx(vs_r8_signal),
-            "vs_r10_signal_max": _mx(vs_r10_signal),
-            "headline_per_noise": detail["headline_per_noise"],
-            "vs_prev_normalized_max": _mx(detail["vs_prev_normalized"]),
-            "vs_r8_signal_max_normalized": _mx(
-                detail["vs_r8_signal_normalized"]
-            ),
-            "vs_r10_signal_max_normalized": _mx(
-                detail["vs_r10_signal_normalized"]
-            ),
-            "pin_fire_margin": detail["pin_fire_margin"],
-            # only STANDING pins (adjudicated by the solo re-measure)
-            # ride the final line, with their solo ratios; raw firings +
-            # the full adjudication dict are in BENCH_DETAIL.json.
-            "pins_fired": detail["pins_fired"],
-            "pins_adjudicated": {
-                n: detail["pins_adjudicated"][n] for n in detail["pins_fired"]
-            },
-            "host_factor": detail["host_factor"],
-            "noise_ref": detail["noise_ref"],
-            # scaling probe visibility (VERDICT r13 #3): the effective
-            # parallelism the run actually used, so the driver's scaling
-            # comparison can confirm the $SPARK_GRAFT_CPUS contract from
-            # the record alone.
-            "parallelism": detail["parallelism"],
-            "shuffle_partitions": detail["shuffle_partitions"],
-            "detail": "BENCH_DETAIL.json",
-            "repeats": detail["repeats"],
-            "aggregation": detail["aggregation"],
-            "sf": detail["sf"],
-        }
+def _noise_df(spark, sf_dir: str):
+    return (
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        .groupBy("l_returnflag")
+        .count()
     )
-    return json.dumps(rec)
 
 
-def _bench_series(
-    qs, names, spark, sf_dir, spread: dict[str, dict[str, float]]
-) -> dict[str, float]:
-    timings: dict[str, float] = {}
-    for name in names:
-        fn = qs[name]
-        walls = []
-        for _ in range(REPEATS):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            walls.append(time.time() - t0)
-        timings[name] = round(statistics.median(walls), 3)
-        spread[name] = {
-            "min": round(min(walls), 3),
-            "max": round(max(walls), 3),
-        }
-    return timings
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-
-    from apache_beam_challange_spark.session import get_spark
-    import __spark_entry__ as e
-
-    spark = get_spark("bench")
-    # all_queries: the frozen continuity series predates the driver-tier
-    # rotation policy, so some of its members now live in the extended tier
-    qs = e.all_queries()
-
-    # Warm the JVM/codegen paths and the Python worker pool (session
-    # startup and first-query JIT are one-time costs, not per-query
-    # throughput) — untimed.
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
-        "l_returnflag"
-    ).count().write.mode("overwrite").format("noop").save()
+def _warm(spark, sf_dir: str) -> None:
+    """Untimed: JVM/codegen paths and the Python worker pool."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
-    def _noop_udf(s):
+    def _identity(s):
         return s
 
-    spark.range(1000).select(_noop_udf(F.col("id"))).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    _noop(_noise_df(spark, sf_dir))
+    _noop(spark.range(1000).select(_identity(F.col("id"))))
 
-    # noise_ref (VERDICT r6 #5): median wall of a tiny FIXED reference
-    # workload (the warmup aggregation, now timed, 5 reps) emitted with
-    # every record — a host-state barometer. A 9.0-vs-7.5 headline swing
-    # with noise_ref steady is a real regression; with noise_ref inflated
-    # by the same ratio it's host noise, adjudicable from the record
-    # alone. Clean-host reference value: PERF.md "noise_ref".
-    noise_walls = []
-    for _ in range(5):
-        t0 = time.time()
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
-            "l_returnflag"
-        ).count().write.mode("overwrite").format("noop").save()
-        noise_walls.append(time.time() - t0)
-    noise_ref = round(statistics.median(noise_walls), 3)
 
-    # Scaling canary (VERDICT r13 #3): timed like a query (REPEATS,
-    # median, noop sink) and reported inside `queries` so the driver's
-    # 8-vs-32-core probe sees at least one wall that moves with the core
-    # count; NOT added to `value` (headline continuity).
-    canary_walls = []
-    for _ in range(REPEATS):
-        t0 = time.time()
-        _scaling_canary(spark).write.mode("overwrite").format("noop").save()
-        canary_walls.append(time.time() - t0)
-    canary_sec = round(statistics.median(canary_walls), 3)
+def _noise_ref(spark, sf_dir: str) -> float | None:
+    m = _measure(lambda: _noise_df(spark, sf_dir), NOISE_REPS)
+    return m["median"] if isinstance(m, dict) else None
 
-    spread: dict[str, dict[str, float]] = {}
-    timings = _bench_series(qs, HEADLINE, spark, sf_dir, spread)
-    timings["scaling_canary"] = canary_sec
-    spread["scaling_canary"] = {
-        "min": round(min(canary_walls), 3),
-        "max": round(max(canary_walls), 3),
-    }
-    flagships = _bench_series(qs, FLAGSHIPS, spark, sf_dir, spread)
-    curation = _bench_series(qs, CURATION, spark, sf_dir, spread)
-    traindata = _bench_series(qs, TRAINDATA, spark, sf_dir, spread)
-    ablations = _bench_series(qs, ABLATIONS, spark, sf_dir, spread)
-    filtering = _bench_series(qs, FILTERING, spark, sf_dir, spread)
-    round7 = _bench_series(qs, ROUND7, spark, sf_dir, spread)
-    round8 = _bench_series(qs, ROUND8, spark, sf_dir, spread)
-    round8b = _bench_series(qs, ROUND8B, spark, sf_dir, spread)
-    round8c = _bench_series(qs, ROUND8C, spark, sf_dir, spread)
-    round9 = _bench_series(qs, ROUND9, spark, sf_dir, spread)
-    wave5 = _bench_series(qs, WAVE5, spark, sf_dir, spread)
-    wave6 = _bench_series(qs, WAVE6, spark, sf_dir, spread)
-    wave7 = _bench_series(qs, WAVE7, spark, sf_dir, spread)
-    wave8 = _bench_series(qs, WAVE8, spark, sf_dir, spread)
 
-    # headline continuity: `value` stays the frozen 15-query total — the
-    # canary is deliberately excluded (it rides only in `queries`).
-    total = round(sum(timings[n] for n in HEADLINE), 3)
-    # Membership pin (VERDICT r7 #5): every series' query COUNT and an
-    # md5 of its sorted member list ride in both records, so a
-    # group-total swing across rounds is adjudicable from the record
-    # alone — same count+hash means same roster (host noise or real
-    # regression, read noise_ref), different hash means the roster moved.
-    series_names = {
-        "headline": HEADLINE,
-        "flagships": FLAGSHIPS,
-        "curation": CURATION,
-        "traindata": TRAINDATA,
-        "ablations": ABLATIONS,
-        "filtering": FILTERING,
-        "round7": ROUND7,
-        "round8": ROUND8,
-        "round8b": ROUND8B,
-        "round8c": ROUND8C,
-        "round9": ROUND9,
-        "wave5": WAVE5,
-        "wave6": WAVE6,
-        "wave7": WAVE7,
-        "wave8": WAVE8,
-    }
-    import hashlib
-
-    group_counts = {k: len(v) for k, v in series_names.items()}
-    group_members_md5 = {
-        k: hashlib.md5(",".join(sorted(v)).encode()).hexdigest()[:8]
-        for k, v in series_names.items()
-    }
-    vs_r1 = {
-        n: round(timings[n] / R1_BASELINE[n], 2)
-        for n in timings
-        if n in R1_BASELINE
-    } if sf == 0.1 else {}
-    # round8b/8c auto-adjudication (VERDICT r8 #6): per-query ratios vs
-    # the pinned r8 walls, split by the PINNED noise class — only
-    # signal-class maxima carry regression meaning on their own.
-    r8bc_walls = {**round8b, **round8c}
-    vs_r8 = {
-        n: round(w / R8_PINS[n], 2)
-        for n, w in r8bc_walls.items()
-        if n in R8_PINS
-    } if sf == 0.1 else {}
-    vs_r8_signal = {
-        n: r for n, r in vs_r8.items() if R8_NOISE_CLASS[n] == "signal"
-    }
-    r10_walls = {**round9, **wave5, **wave6}
-    vs_r10 = {
-        n: round(w / R10_PINS[n], 2)
-        for n, w in r10_walls.items()
-        if n in R10_PINS
-    } if sf == 0.1 else {}
-    vs_r10_signal = {
-        n: r for n, r in vs_r10.items() if R10_NOISE_CLASS[n] == "signal"
-    }
-    # Noise-normalized ratios + pin adjudication (VERDICT r11 #4): divide
-    # the host-state drift out of every cross-round ratio, and fire pins
-    # ONLY on normalized regressions beyond PIN_FIRE_MARGIN.
-    headline_per_noise = round(total / noise_ref, 2) if noise_ref else None
-    vs_prev = {
-        n: round(timings[n] / R11_PREV[n], 2)
-        for n in timings
-        if n in R11_PREV
-    } if sf == 0.1 else {}
-    _prev_adj = R11_PREV_NOISE_REF / noise_ref if noise_ref else 1.0
-    vs_prev_normalized = {
-        n: round(r * _prev_adj, 2) for n, r in vs_prev.items()
-    }
-    _r8_adj = R8_PINS_NOISE_REF / noise_ref if noise_ref else 1.0
-    _r10_adj = R10_PINS_NOISE_REF / noise_ref if noise_ref else 1.0
-    vs_r8_signal_normalized = {
-        n: round(r * _r8_adj, 2) for n, r in vs_r8_signal.items()
-    }
-    vs_r10_signal_normalized = {
-        n: round(r * _r10_adj, 2) for n, r in vs_r10_signal.items()
-    }
-    # Deduplicate across series (a query can exceed the margin in more
-    # than one ratio series; one pin per query — r12 ADVICE #4).
-    pins_fired_raw = sorted(
-        {
-            n
-            for series in (
-                vs_prev_normalized,
-                vs_r8_signal_normalized,
-                vs_r10_signal_normalized,
-            )
-            for n, r in series.items()
-            if r > PIN_FIRE_MARGIN
-        }
+def _line(name: str, m: dict | str) -> str:
+    if isinstance(m, str):
+        return f"{name}: FAILED {m}"
+    return (
+        f"{name}: median {m['median']:.3f} min {m['min']:.3f} "
+        f"max {m['max']:.3f} steal {m['steal_pct']:.1f}%"
     )
-    # Automated pin adjudication (VERDICT r12 #3): the solo re-measure
-    # protocol PERF.md round 12 ran by hand — when a normalized pin
-    # fires, re-run that query SOLO (5 reps, median) bracketed by a
-    # fresh noise_ref, and compute the adjudicated normalized ratio
-    # against the SAME pin the firing series used. A pin only STANDS
-    # (stays in pins_fired) if the solo ratio still clears the margin;
-    # the in-roster firing alone is host-session state, not evidence.
-    pin_source: dict[str, tuple[float, float]] = {}
-    for n, w in R11_PREV.items():
-        pin_source[n] = (w, R11_PREV_NOISE_REF)
-    for n, w in R8_PINS.items():
-        pin_source.setdefault(n, (w, R8_PINS_NOISE_REF))
-    for n, w in R10_PINS.items():
-        pin_source.setdefault(n, (w, R10_PINS_NOISE_REF))
-    pins_adjudicated: dict[str, float] = {}
-    pins_fired: list[str] = []
-    for name in pins_fired_raw:
-        solo_walls = []
-        for _ in range(5):
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            solo_walls.append(time.time() - t0)
-        solo = statistics.median(solo_walls)
-        solo_noise = []
-        for _ in range(5):
-            t0 = time.time()
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet").groupBy(
-                "l_returnflag"
-            ).count().write.mode("overwrite").format("noop").save()
-            solo_noise.append(time.time() - t0)
-        nr2 = statistics.median(solo_noise)
-        pin_wall, pin_nr = pin_source[name]
-        raw = solo / pin_wall
-        norm = (raw * pin_nr / nr2) if nr2 else None
-        # A pin STANDS only if the solo re-measure clears the margin in
-        # BOTH raw and noise-normalized terms: the raw ratio guards
-        # against a tiny current noise_ref inflating the normalization
-        # (a fully-JIT-warmed post-run probe can read 3x under the pin's
-        # noise_ref while query-class walls are unchanged — observed
-        # r13), the normalized ratio guards the degraded-host case.
-        ratio = round(min(raw, norm), 2) if norm is not None else round(raw, 2)
-        pins_adjudicated[name] = ratio
-        if ratio > PIN_FIRE_MARGIN:
-            pins_fired.append(name)
-    # host_factor (round 12): the RAW median wall ratio of the frozen
-    # headline roster vs the previous round's record — a second,
-    # query-class host barometer. noise_ref (a tiny single-stage agg)
-    # and shuffle-heavy members drift INDEPENDENTLY on this host
-    # (round-12 adjudication measured noise_ref 0.18 with shuffle
-    # members 1.5x their clean-host pins); a fired pin on a run with
-    # host_factor >> 1 is adjudicated by a solo 5-rep re-measure
-    # (PERF.md round 12), not taken at face value.
-    host_factor = (
-        round(statistics.median(vs_prev.values()), 2) if vs_prev else None
-    )
-    detail = {
+
+
+def build_detail(results: dict, noise_ref, noise_ref_post, **run) -> dict:
+    """The full record from per-query ``_measure`` results. ``value`` is
+    null unless every HEADLINE query succeeded."""
+    ok = {n: m for n, m in results.items() if isinstance(m, dict)}
+    headline_ok = all(n in ok for n in HEADLINE)
+    return {
         "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "flagships": flagships,
-        "flagships_total": round(sum(flagships.values()), 3),
-        "curation": curation,
-        "curation_total": round(sum(curation.values()), 3),
-        "traindata": traindata,
-        "traindata_total": round(sum(traindata.values()), 3),
-        "ablations": ablations,
-        "filtering": filtering,
-        "filtering_total": round(sum(filtering.values()), 3),
-        "round7": round7,
-        "round7_total": round(sum(round7.values()), 3),
-        "round8": round8,
-        "round8_total": round(sum(round8.values()), 3),
-        "round8b": round8b,
-        "round8b_total": round(sum(round8b.values()), 3),
-        "round8c": round8c,
-        "round8c_total": round(sum(round8c.values()), 3),
-        "round9": round9,
-        "round9_total": round(sum(round9.values()), 3),
-        "wave5": wave5,
-        "wave5_total": round(sum(wave5.values()), 3),
-        "wave6": wave6,
-        "wave6_total": round(sum(wave6.values()), 3),
-        "wave7": wave7,
-        "wave7_total": round(sum(wave7.values()), 3),
-        "wave8": wave8,
-        "wave8_total": round(sum(wave8.values()), 3),
-        "spread": spread,
-        "group_counts": group_counts,
-        "group_members_md5": group_members_md5,
-        "noise_ref": noise_ref,
-        "headline_per_noise": headline_per_noise,
-        "vs_r1": vs_r1,
-        "vs_r8": vs_r8,
-        "r8_noise_class": R8_NOISE_CLASS,
-        "vs_r10": vs_r10,
-        "r10_noise_class": R10_NOISE_CLASS,
-        "vs_prev": vs_prev,
-        "vs_prev_normalized": vs_prev_normalized,
-        "vs_r8_signal_normalized": vs_r8_signal_normalized,
-        "vs_r10_signal_normalized": vs_r10_signal_normalized,
-        "pin_fire_margin": PIN_FIRE_MARGIN,
-        "pins_fired_raw": pins_fired_raw,
-        "pins_adjudicated": pins_adjudicated,
-        "pins_fired": pins_fired,
-        "host_factor": host_factor,
-        "parallelism": spark.sparkContext.defaultParallelism,
-        "shuffle_partitions": int(
-            spark.conf.get("spark.sql.shuffle.partitions")
+        "value": (
+            round(sum(ok[n]["median"] for n in HEADLINE), 3)
+            if headline_ok
+            else None
         ),
-        "repeats": REPEATS,
+        "unit": "sec",
+        "queries": {n: ok[n]["median"] if n in ok else None for n in results},
+        "spread": {
+            n: {k: m[k] for k in ("min", "max", "steal_pct")}
+            for n, m in ok.items()
+        },
+        "errors": {n: m for n, m in results.items() if isinstance(m, str)},
+        "noise_ref": noise_ref,
+        "noise_ref_post": noise_ref_post,
         "aggregation": "median",
-        "sf": sf,
+        **run,
     }
-    # Full per-query detail (all seven series + min/max spreads) goes to a
-    # file and an EARLIER stdout line; the driver's tail capture is ~2 KB
-    # (BENCH_r05 `parsed: null` — the ~6 KB single-line record overflowed
-    # it, so round 5's -16% headline win went unrecorded; VERDICT r5 #1).
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+
+
+def compact_line(detail: dict) -> str:
+    """The FINAL stdout line, which the driver parses. Pure, so a test can
+    pin it under the driver's ~2000-char tail capture."""
+    keys = (
+        "metric", "value", "unit", "queries", "noise_ref", "parallelism",
+        "shuffle_partitions", "repeats", "aggregation", "sf",
     )
-    with open(detail_path, "w") as f:
+    return json.dumps(
+        {**{k: detail[k] for k in keys}, "detail": os.path.basename(DETAIL_PATH)}
+    )
+
+
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from apache_beam_challange_spark.session import get_spark
+    import __spark_entry__ as e
+
+    qs = e.all_queries()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        sys.exit(f"unknown query names: {unknown}")
+    spark = get_spark("bench")
+    _warm(spark, sf_dir)
+
+    noise_ref = _noise_ref(spark, sf_dir)
+    print(f"noise_ref(pre) = {noise_ref}", flush=True)
+    results: dict[str, dict | str] = {}
+    for name in names or HEADLINE:
+        results[name] = _measure(lambda: qs[name](spark, sf_dir), REPEATS)
+        print(_line(name, results[name]), flush=True)
+    if not names:
+        # after the headline, so a canary failure cannot cost its walls
+        results[CANARY] = _measure(lambda: _scaling_canary(spark), REPEATS)
+        print(_line(CANARY, results[CANARY]), flush=True)
+    noise_ref_post = _noise_ref(spark, sf_dir)
+    print(f"noise_ref(post) = {noise_ref_post}", flush=True)
+    if names:
+        return
+
+    detail = build_detail(
+        results,
+        noise_ref,
+        noise_ref_post,
+        parallelism=spark.sparkContext.defaultParallelism,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+        repeats=REPEATS,
+        sf=float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
+    )
+    with open(DETAIL_PATH, "w") as f:
         json.dump(detail, f)
-    print(json.dumps(detail))
-    # Compact totals-only record as the FINAL line (<1.6 KB, length
-    # pinned by tests/test_bench_record.py): headline per-query timings +
-    # per-series totals. This is what the driver parses into BENCH_r{N}.json.
     print(compact_line(detail))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -1,7 +1,7 @@
-"""Dump .explain('formatted') for named queries to plans/r13/<name>_<tag>.txt
-— the optimization round's before/after plan evidence.
+"""Dump .explain('formatted') for named queries to <out_dir>/<name>_<tag>.txt
+— before/after plan evidence for an optimization.
 
-Usage: python tools/explain_plans_r13.py <before|after> name [name ...]
+Usage: python tools/explain_plans.py <out_dir> <before|after> name [name ...]
 """
 
 from __future__ import annotations
@@ -9,19 +9,17 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from apache_beam_challange_spark.session import get_spark
     import __spark_entry__ as e
 
-    spark = get_spark("explain_r13")
+    spark = get_spark("explain_plans")
     qs = e.all_queries()
-    out_dir = os.path.join("/root/repo", "plans", "r13")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
