@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_beam_challange_spark.sources.catalog import read_parquet
+
 
 def exact_dedup(df: DataFrame, keys: list[str], order_by: str) -> DataFrame:
     """Keep exactly one row per key group — the row with the smallest
@@ -429,7 +431,7 @@ def minhash_stored_signatures(spark, path: str) -> DataFrame:
     band's min_hashes — a duplicated row would double one position);
     signature values are deterministic, so duplicates are always exact
     copies and the drop is a pure idempotence guard."""
-    return spark.read.parquet(path).dropDuplicates(["doc_id", "hash_idx"])
+    return read_parquet(spark, path).dropDuplicates(["doc_id", "hash_idx"])
 
 
 def containment_on_candidates(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine
+from apache_beam_challange_spark.sources.catalog import read_parquet
 
 
 def _query_vec(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -1331,8 +1332,8 @@ def nsw_append_index(
     import os
 
     spark = new_embeddings.sparkSession
-    adjacency = spark.read.parquet(path).localCheckpoint()
-    old_buckets = spark.read.parquet(path + "_buckets")
+    adjacency = read_parquet(spark, path).localCheckpoint()
+    old_buckets = read_parquet(spark, path + "_buckets")
     nt = kw.get("num_tables", NSW_TABLES)
     np_ = kw.get("num_planes", NSW_PLANES)
     dim = kw.get("dim", 64)
@@ -2382,8 +2383,8 @@ def hnsw_append_index(
     nt = kw.get("num_tables", NSW_TABLES)
     np_ = kw.get("num_planes", NSW_PLANES)
     dim = kw.get("dim", 64)
-    adjacency = spark.read.parquet(path).localCheckpoint()
-    old_buckets = spark.read.parquet(path + "_buckets")
+    adjacency = read_parquet(spark, path).localCheckpoint()
+    old_buckets = read_parquet(spark, path + "_buckets")
     new_buck = _multitable_buckets(
         new_embeddings, nt, np_, dim
     ).localCheckpoint()

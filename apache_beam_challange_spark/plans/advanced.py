@@ -13,7 +13,12 @@ from pyspark.sql.functions import pandas_udf
 
 from apache_beam_challange_spark.operators.skew import salted_group_count
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import (
+    is_materialized,
+    load_table,
+    read_parquet,
+    warehouse_path,
+)
 
 
 @query(
@@ -417,11 +422,6 @@ def hypertable_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
 
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     rollup_path = warehouse_path(
         sf_dir, f"hypertable_hourly_{cutoff_str[:10]}", "events"
     )
@@ -429,7 +429,7 @@ def hypertable_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         hourly(ev.filter(F.col("ts") < cutoff)).write.mode("overwrite").parquet(
             rollup_path
         )
-    closed = spark.read.parquet(rollup_path)
+    closed = read_parquet(spark, rollup_path)
     open_tail = hourly(ev.filter(F.col("ts") >= cutoff))
     return closed.unionByName(open_tail)
 
@@ -613,11 +613,6 @@ def enriched_orders_view_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     append tail. The frontier scalar is one driver-side read of the
     orderkey MAX (the rollup-watermark class of bounded read)."""
     from apache_beam_challange_spark.operators.joinview import enrich_orders
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     # deterministic append frontier: 3/4 of the keyspace is "history"
@@ -629,7 +624,7 @@ def enriched_orders_view_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         enrich_orders(
             o.filter(F.col("o_orderkey") <= k), c
         ).write.mode("overwrite").parquet(view_path)
-    closed = spark.read.parquet(view_path)
+    closed = read_parquet(spark, view_path)
     tail = enrich_orders(o.filter(F.col("o_orderkey") > k), c)
     return (
         closed.unionByName(tail)

@@ -45,7 +45,12 @@ from apache_beam_challange_spark.operators.graph import dedup_clusters
 from apache_beam_challange_spark.operators.relational import tfidf_top_terms
 from apache_beam_challange_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import (
+    is_materialized,
+    load_table,
+    read_parquet,
+    warehouse_path,
+)
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -561,18 +566,13 @@ def minhash_sigs_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     those values); repeated dedup queries then skip the shingle+md5 pass
     entirely — at 100 TB the signature scan replaces a full-corpus
     tokenization per query."""
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     path = warehouse_path(sf_dir, "minhash_sigs_n3h8", "documents")
     if not is_materialized(path):
         docs = load_table(spark, sf_dir, "documents")
         minhash_signatures(shingles(docs, n=3), num_hashes=8).write.mode(
             "overwrite"
         ).parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def lsh_pair_graph(spark: SparkSession, sf_dir: str):
@@ -956,7 +956,6 @@ def ivf_retrain_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     from apache_beam_challange_spark.operators.similarity import (
         ivf_topk_with_centroids,
     )
-    from apache_beam_challange_spark.sources.catalog import warehouse_path
     from apache_beam_challange_spark.sources.publish import (
         publish,
         read_published,
@@ -1269,16 +1268,11 @@ def ivf_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_indexed,
         ivf_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "ivf_index_8", "embeddings")
     if not is_materialized(path):
         ivf_write_index(emb, path, (0, 1, 2, 3, 4, 5, 6, 7))
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     return ivf_topk_indexed(emb, index, query_vec_id=0, k=20, n_probe=2)
 
 
@@ -1333,17 +1327,12 @@ def ivfpq_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_topk_indexed,
         pq_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "ivfpq_index_8x4", "embeddings")
     if not is_materialized(path, parts=(path + "_codebooks",)):
         pq_write_index(emb, path)
-    index = spark.read.parquet(path)
-    codebooks = spark.read.parquet(path + "_codebooks")
+    index = read_parquet(spark, path)
+    codebooks = read_parquet(spark, path + "_codebooks")
     return ivfpq_topk_indexed(
         emb, index, query_vec_id=0, k_results=20, codebooks=codebooks
     )
@@ -1458,17 +1447,12 @@ def ivfpq_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_knn_join_indexed,
         pq_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "ivfpq_index_8x4", "embeddings")
     if not is_materialized(path, parts=(path + "_codebooks",)):
         pq_write_index(emb, path)
-    index = spark.read.parquet(path)
-    codebooks = spark.read.parquet(path + "_codebooks")
+    index = read_parquet(spark, path)
+    codebooks = read_parquet(spark, path + "_codebooks")
     return ivfpq_knn_join_indexed(
         emb, index, codebooks, query_ids=list(range(10)), k_results=5
     )
@@ -1855,17 +1839,12 @@ def ivfpq_refined_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> DataFra
         ivfpq_refined_topk_indexed,
         pq_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "ivfpq_index_8x4_v2", "embeddings")
     if not is_materialized(path, parts=(path + "_codebooks",)):
         pq_write_index(emb, path)
-    index = spark.read.parquet(path)
-    codebooks = spark.read.parquet(path + "_codebooks")
+    index = read_parquet(spark, path)
+    codebooks = read_parquet(spark, path + "_codebooks")
     return ivfpq_refined_topk_indexed(
         emb, index, codebooks, query_vec_id=0, k_results=20, n_refine=100
     )
@@ -1885,11 +1864,6 @@ def ann_lsh_multitable_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> Da
         ann_lsh_multitable_topk_indexed,
         lsh_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # layer name versioned (_b): the stored bucket format changed to
     # "b"-prefixed strings, so pre-existing content-keyed artifacts from
@@ -1897,7 +1871,7 @@ def ann_lsh_multitable_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> Da
     path = warehouse_path(sf_dir, "lsh_index_16x4_b", "embeddings")
     if not is_materialized(path):
         lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     return ann_lsh_multitable_topk_indexed(
         emb, index, query_vec_id=0, k=20, num_tables=16, num_planes=4, dim=64
     )
@@ -1983,16 +1957,11 @@ def knn_join_lsh_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_join_lsh_indexed,
         lsh_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "lsh_index_16x4_b", "embeddings")
     if not is_materialized(path):
         lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     return knn_join_lsh_indexed(
         emb, index, query_ids=list(range(10)), k=5,
         num_tables=16, num_planes=4, dim=64,
@@ -2105,18 +2074,13 @@ def nsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_topk,
         nsw_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # layer name versioned (_b2): the index gained a bucket sidecar for
     # incremental appends, so pre-sidecar artifacts must not be served
     path = warehouse_path(sf_dir, "nsw_graph_t4_m16_b2", "embeddings")
     if not is_materialized(path, parts=(path + "_buckets",)):
         nsw_write_index(emb, path)
-    adj = spark.read.parquet(path)
+    adj = read_parquet(spark, path)
     return nsw_topk(emb, adj, query_vec_id=0, k=20)
 
 
@@ -2195,16 +2159,11 @@ def nsw_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_topk_batch,
         nsw_write_index,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # layer name versioned (_b2): the index gained a bucket sidecar for
     # incremental appends, so pre-sidecar artifacts must not be served
     path = warehouse_path(sf_dir, "nsw_graph_t4_m16_b2", "embeddings")
     if not is_materialized(path, parts=(path + "_buckets",)):
         nsw_write_index(emb, path)
-    adj = spark.read.parquet(path)
+    adj = read_parquet(spark, path)
     return nsw_topk_batch(emb, adj, query_ids=list(range(10)), k=5)

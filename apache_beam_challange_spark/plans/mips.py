@@ -48,7 +48,12 @@ from apache_beam_challange_spark.operators.similarity import (
     probe_index_candidates,
 )
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import (
+    is_materialized,
+    load_table,
+    read_parquet,
+    warehouse_path,
+)
 
 _TOPK = 20
 _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM = 16, 4, 65
@@ -274,7 +279,7 @@ def mips_lsh_append_index(new_embeddings: DataFrame, path: str) -> None:
     priori norm headroom). Valid deltas hash with the STORED bound and
     are bit-identical to a from-scratch rebuild — test-asserted."""
     spark = new_embeddings.sparkSession
-    m2 = float(spark.read.parquet(path + "_meta").head()[0])
+    m2 = float(read_parquet(spark, path + "_meta").head()[0])
     max_new = (
         new_embeddings.select(
             dot(
@@ -345,16 +350,11 @@ def mips_augmented_lsh_topk_indexed_vec0(
     priori upper bound with headroom, the Neyshabur-Srebro setting,
     exactly to keep appends valid). Same oracle as the inline route:
     the index must be semantically invisible."""
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "mips_lsh_index_16x4_b", "embeddings")
     if not is_materialized(path, parts=(path + "_meta",)):
         mips_lsh_write_index(emb, path)
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     # query-side buckets: one augmented row ([q, 0]), a pruned 1-row pass
     q_aug = emb.filter(F.col("vec_id") == 0).select(
         "vec_id",
@@ -443,16 +443,11 @@ def mips_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn_join_rerank,
         probe_index_candidates_batch,
     )
-    from apache_beam_challange_spark.sources.catalog import (
-        is_materialized,
-        warehouse_path,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "mips_lsh_index_16x4_b", "embeddings")
     if not is_materialized(path, parts=(path + "_meta",)):
         mips_lsh_write_index(emb, path)
-    index = spark.read.parquet(path)
+    index = read_parquet(spark, path)
     q_aug = emb.filter(F.col("vec_id") < 10).select(
         "vec_id",
         F.concat(

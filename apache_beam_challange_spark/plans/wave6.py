@@ -2170,10 +2170,13 @@ def huber_location_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would OOM exactly the domains the fallback exists for). A result
     # at cap+1 rows means the domain overflowed the cap; negative
     # buckets would break the `//` == Spark-div replay (an undeclared
-    # value>=0 invariant) — both routes fall back to the in-Spark IRLS.
+    # value>=0 invariant) — both routes fall back to the in-Spark IRLS,
+    # as does a NULL bucket (a NULL value), which has no integer replay.
     pdf = hist.limit(_HUBER_DRIVER_CAP + 1).toPandas()
-    if len(pdf) > _HUBER_DRIVER_CAP or (
-        len(pdf) > 0 and int(pdf["vb"].min()) < 0
+    if (
+        len(pdf) > _HUBER_DRIVER_CAP
+        or pdf["vb"].isna().any()
+        or (len(pdf) > 0 and int(pdf["vb"].min()) < 0)
     ):
         return _huber_irls_spark(spark, hist.localCheckpoint())
     import math as _math

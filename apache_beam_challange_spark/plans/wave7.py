@@ -21,7 +21,12 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.operators.jpeg import JPEG_Q, JPEG_T_FP6
 from apache_beam_challange_spark.plans.registry import query
-from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.catalog import (
+    is_materialized,
+    load_table,
+    read_parquet,
+    warehouse_path,
+)
 
 # --- baseline JPEG encode -> decode reconstruction audit -----------------------
 
@@ -152,10 +157,6 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DiskANN-class (Vamana) graph ANN ------------------------------------------
 
-from apache_beam_challange_spark.sources.catalog import (  # noqa: E402
-    is_materialized,
-    warehouse_path,
-)
 
 
 def _vamana_prune_round_sql(i: int) -> str:
@@ -330,9 +331,9 @@ def vamana_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = warehouse_path(sf_dir, "vamana_idx_c24r8a12", "embeddings")
     if not is_materialized(path):
         vamana_write_index(emb, path)
-    adjacency = spark.read.parquet(path)
+    adjacency = read_parquet(spark, path)
     medoid_id = int(
-        spark.read.parquet(path + "_medoid").first()["medoid_id"]
+        read_parquet(spark, path + "_medoid").first()["medoid_id"]
     )
     return vamana_topk(emb, adjacency, medoid_id, query_vec_id=0)
 
@@ -417,9 +418,9 @@ def vamana_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = warehouse_path(sf_dir, "vamana_idx_c24r8a12", "embeddings")
     if not is_materialized(path):
         vamana_write_index(emb, path)
-    adjacency = spark.read.parquet(path)
+    adjacency = read_parquet(spark, path)
     medoid_id = int(
-        spark.read.parquet(path + "_medoid").first()["medoid_id"]
+        read_parquet(spark, path + "_medoid").first()["medoid_id"]
     )
     return vamana_topk_batch(
         emb, adjacency, medoid_id, query_ids=list(range(10)), k=5

@@ -25,6 +25,7 @@ from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import (
     is_materialized,
     load_table,
+    read_parquet,
     warehouse_path,
 )
 
@@ -332,8 +333,8 @@ def hnsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = warehouse_path(sf_dir, "hnsw_graph_l2_m8_16", "embeddings")
     if not is_materialized(path, parts=(path + "_levels",)):
         hnsw_write_index(emb, path)
-    adj = spark.read.parquet(path)
-    lv = spark.read.parquet(path + "_levels")
+    adj = read_parquet(spark, path)
+    lv = read_parquet(spark, path + "_levels")
     return hnsw_topk(emb, adj, lv, query_vec_id=0, k=20)
 
 
@@ -419,8 +420,8 @@ def hnsw_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = warehouse_path(sf_dir, "hnsw_graph_l2_m8_16", "embeddings")
     if not is_materialized(path, parts=(path + "_levels",)):
         hnsw_write_index(emb, path)
-    adj = spark.read.parquet(path)
-    lv = spark.read.parquet(path + "_levels")
+    adj = read_parquet(spark, path)
+    lv = read_parquet(spark, path + "_levels")
     return hnsw_topk_batch(emb, adj, lv, query_ids=list(range(10)), k=5)
 
 

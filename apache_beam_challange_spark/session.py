@@ -16,6 +16,7 @@ target plan quality rather than hand-scheduling:
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +53,20 @@ DEFAULT_ONLY_CONFS = {
 }
 
 
+#: Keys set in each SparkContext's conf (builder / spark-submit values).
+#: That conf is fixed once the context starts, and ``getConf()`` clones
+#: all of it over Py4J, so it is read once per context.
+_BUILT_KEYS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _built_keys(spark: SparkSession) -> frozenset[str]:
+    sc = spark.sparkContext
+    keys = _BUILT_KEYS.get(sc)
+    if keys is None:
+        keys = _BUILT_KEYS[sc] = frozenset(k for k, _ in sc.getConf().getAll())
+    return keys
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's required runtime confs to an externally-created
     session. Best-effort: confs that a given deployment locks down are
@@ -71,9 +86,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
             # caller who deliberately set the value TO the unset default
             # is indistinguishable from nobody-chose and gets the engine
             # default; route such overrides through the builder.
-            explicitly_built = (
-                spark.sparkContext.getConf().get(key, None) is not None
-            )
+            explicitly_built = key in _built_keys(spark)
             runtime_overridden = spark.conf.get(key, None) != spark_default
             if not explicitly_built and not runtime_overridden:
                 spark.conf.set(key, value)

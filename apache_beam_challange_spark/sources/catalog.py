@@ -24,8 +24,12 @@ exact DuckDB oracle twin:
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 BASE_TABLES = (
     "region",
@@ -91,7 +95,6 @@ def warehouse_path(sf_dir: str, layer: str, source_table: str) -> str:
     rebuilds it. Root overridable via SPARK_GRAFT_WAREHOUSE (default
     ./spark-warehouse, gitignored)."""
     import hashlib
-    import os
 
     src = os.path.join(sf_dir, f"{source_table}.parquet")
     try:
@@ -124,11 +127,51 @@ def is_materialized(path: str, parts: tuple[str, ...] = ()) -> bool:
     # builder commits the siblings BEFORE the primary path, and the check
     # requires _SUCCESS in ALL of them, so a crash mid-sequence can never
     # present a torn artifact as materialized.
-    import os
-
     return all(
         os.path.exists(os.path.join(p, "_SUCCESS")) for p in (path, *parts)
     )
+
+
+#: Parquet schemas already inferred, keyed by (absolute path, stat stamp,
+#: nanosAsLong). Spark infers a parquet schema with a footer-reading JOB on
+#: every ``spark.read.parquet``; a read whose key is here hands Spark the
+#: schema instead. File listing still happens per read, so new part files
+#: are seen; a rewritten file or re-committed directory changes the stamp.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple:
+    """Raises OSError for a missing path, a non-local URI, or a directory
+    without a ``_SUCCESS`` commit marker — all read uncached."""
+    path = os.path.abspath(path)
+    st = os.stat(path)
+    stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    if stat.S_ISDIR(st.st_mode):
+        ok = os.stat(os.path.join(path, "_SUCCESS"))
+        stamp += (ok.st_ino, ok.st_size, ok.st_mtime_ns)
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return (path, stamp, nanos)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    try:
+        key = _schema_key(spark, path)
+    except OSError:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), schema
+    df = spark.read.parquet(path)
+    schema = _SCHEMAS[key] = df.schema
+    return df, schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version. DataFrames are never shared: each call is a fresh relation
+    with its own attribute ids, so self-joins of two reads stay valid."""
+    return _read_parquet(spark, path)[0]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -136,9 +179,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from apache_beam_challange_spark.session import ensure_session_confs
 
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df, schema = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in _NANO_TS_COLS.get(name, ()):
-        if dict(df.dtypes).get(c) == "bigint":
+        if c in schema.names and isinstance(schema[c].dataType, LongType):
             df = df.withColumn(
                 c, F.timestamp_micros(F.expr(f"`{c}` div 1000")).cast("timestamp_ntz")
             )

@@ -10,6 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from apache_beam_challange_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
+#: The test corpus root; every scale factor is a sibling of SF_DIR.
+TESTDATA_ROOT = os.path.dirname(SF_DIR)
 
 
 @pytest.fixture(scope="session")

@@ -9,6 +9,8 @@ that silently widens a collect fails here before it OOMs a driver."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,9 +20,10 @@ from pyspark.sql.classic.dataframe import DataFrame
 
 import apache_beam_challange_spark.plans.wave4 as w4
 import apache_beam_challange_spark.plans.wave6 as w6
+from conftest import TESTDATA_ROOT
 
-SF_SMALL = "/root/testdata/sf0.001"
-SF_BIG = "/root/testdata/sf0.01"
+SF_SMALL = os.path.join(TESTDATA_ROOT, "sf0.001")
+SF_BIG = os.path.join(TESTDATA_ROOT, "sf0.01")
 
 
 @pytest.fixture()

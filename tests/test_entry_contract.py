@@ -40,6 +40,14 @@ def test_extended_tier_shape():
     assert rows_only == {"simhash_signatures_xxhash64_perf"}
 
 
+def test_driver_tier_builds(spark, sf_dir):
+    """Default-tier crash smoke: every driver-tier query builds at
+    sf0.001 (the driver-tier subset of the slow test below)."""
+    for name, fn in entrymod.queries().items():
+        df = fn(spark, sf_dir)
+        assert df.columns, f"{name} returned no columns"
+
+
 @pytest.mark.slow
 def test_registry_callables_run(spark, sf_dir):
     """Every registered query (both tiers) executes at sf0.001."""

@@ -561,6 +561,25 @@ def test_ensure_session_confs_respects_runtime_override(spark):
         spark.conf.set(key, prev)
 
 
+def test_ensure_session_confs_respects_builder_value(spark):
+    """A value set on the builder (conftest's shuffle_partitions=8) lives
+    in the SparkContext conf and is never replaced by the engine default,
+    even while the runtime value reads Spark's unset default — on the
+    first call and on the memoized ones after it."""
+    from apache_beam_challange_spark.session import ensure_session_confs
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.sparkContext.getConf().get(key) == "8"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        ensure_session_confs(spark)
+        ensure_session_confs(spark)
+        assert spark.conf.get(key) == "200"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_join_view_incremental_refresh_equals_rebuild(spark, tmp_path):
     """Two fact appends folded incrementally must equal a one-shot enrich
     of all facts; a refresh with nothing new returns 0 and publishes no

@@ -1415,3 +1415,35 @@ def test_huber_negative_bucket_falls_back(spark, monkeypatch):
         out = w6.huber_location_by_type(spark, d).collect()
     assert calls, "negative bucket must route to _huber_irls_spark"
     assert len(out) == 1 and out[0].n == 5
+
+
+def test_huber_null_value_falls_back(spark, monkeypatch):
+    """ADVICE r14 (low): a NULL ``value`` makes a NULL cent bucket, which
+    the driver solve cannot replay (``int(NaN)``); it must route to the
+    in-Spark IRLS and return exactly that route's rows."""
+    vals = [1.0, 2.0, None, 3.0, 2.5, None, 40.0]
+    rows = [
+        _ev(i, dt.datetime(2024, 1, 1), 1, "view" if i % 3 else "click", v)
+        for i, v in enumerate(vals)
+    ]
+    calls: list[int] = []
+    orig = w6._huber_irls_spark
+    monkeypatch.setattr(
+        w6,
+        "_huber_irls_spark",
+        lambda s, h: (calls.append(1), orig(s, h))[1],
+    )
+    with tempfile.TemporaryDirectory() as d:
+        _write_events(spark, rows, d)
+        got = sorted(tuple(r) for r in w6.huber_location_by_type(spark, d).collect())
+        hist = (
+            spark.read.parquet(os.path.join(d, "events.parquet"))
+            .groupBy(
+                "event_type",
+                F.floor(F.col("value") * 100).cast("long").alias("vb"),
+            )
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        )
+        want = sorted(tuple(r) for r in orig(spark, hist.localCheckpoint()).collect())
+    assert calls, "NULL bucket must route to _huber_irls_spark"
+    assert got == want
