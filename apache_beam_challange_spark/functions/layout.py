@@ -49,16 +49,6 @@ def zorder_key(a: Column, b: Column, bits: int = 8) -> Column:
     return terms.cast("long")
 
 
-def zorder_key_sql(a: str, b: str, bits: int = 8) -> str:
-    """DuckDB spelling of :func:`zorder_key` over integer expressions
-    ``a``/``b`` (already scaled to [0, 2^bits)) — the oracle twin."""
-    terms = [
-        f"((({a}) // {2**i}) % 2 + 2 * ((({b}) // {2**i}) % 2)) * {4**i}"
-        for i in range(bits)
-    ]
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
 def hilbert_step_exprs(bits: int, intdiv: str) -> list[tuple[str, str, str]]:
     """Per-step ``(x, y, d)`` expression TEXTS for the unrolled Hilbert
     ``xy2d`` walk over a ``2^bits x 2^bits`` grid (Wikipedia's iterative

@@ -142,9 +142,8 @@ def _serve_phase(
     b: int,
     rr: int,
 ) -> None:
-    """One descent phase of the driver-cached graph-serve loop, shared by
-    the single-query and batched routes (r13 restructure, guide
-    §1.2/§2.4): per round at most ONE combined point-lookup job
+    """One descent phase of the driver-cached graph-serve loop
+    (:func:`_graph_topk`): per round at most ONE combined point-lookup job
     (:func:`_serve_fetch` — vectors for newly reached ids + this layer's
     adjacency for those same ids, prefetched so the NEXT round's frontier
     selection never blocks on a second job). Frontier selection, dedup
@@ -205,6 +204,116 @@ def _serve_phase(
         for vid, qs in need.items():
             for q in qs:
                 visited[q][vid] = score_py(qvecs[q], vcache[vid])
+
+
+def _graph_topk(
+    embeddings: DataFrame,
+    layers: list[DataFrame],
+    query_ids,
+    seeds,
+    schedule: list[tuple[int, int, int]],
+    k: int,
+    fixed_point: bool = False,
+) -> DataFrame:
+    """The one graph-ANN search the NSW, Vamana and HNSW families serve
+    through — HNSW's SEARCH-LAYER routine, run for a batch of query ids
+    over a ``(layer, beam, rounds)`` schedule of the at-rest adjacency
+    ``layers`` (indexed by layer; a flat graph is one layer).
+
+    ``seeds`` says where each query starts: an int ``s`` seeds every
+    query with every ``s``-th vec_id (NSW's coarse sample); a
+    ``{qid: [entry ids]}`` dict gives each query its own entries
+    (Vamana's medoid, HNSW's top-layer entry; a missing qid starts
+    empty). A query never seeds or scores itself. Scoring is the
+    bit-exact driver cosine :func:`_cos_py`, or with ``fixed_point`` its
+    1e9 floor :func:`_cos_fp_py`, which then also orders the result.
+
+    Driver-cached: the seed pass is ONE combined fetch (seed + query
+    vectors and the seeds' first-layer adjacency, all predicate-pushed),
+    then each round issues at most one more (:func:`_serve_phase`),
+    independent of batch size. Driver state is parameter-bounded
+    (visited ≤ seeds + Σ rounds*beam*M ids per query, never
+    corpus-bounded). A query's rows are the same alone and inside any
+    batch: scoring is deterministic and frontier/dedup are per qid.
+    Returns (query_vec_id, vec_id, label, cosine_sim), top-``k`` per
+    query by (score desc, vec_id) (:func:`_rank_visited`)."""
+    score_py = _cos_fp_py if fixed_point else _cos_py
+    vecs = embeddings.select(
+        "vec_id", as_double(F.col("embedding")).alias("vec")
+    )
+    adj = [a.select("src", "dst") for a in layers]
+    qids = sorted({int(q) for q in query_ids})
+    first = schedule[0][0]
+    if isinstance(seeds, int):
+        step = seeds
+        vec_pred = F.col("vec_id") % step == 0
+        src_pred = F.col("src") % step == 0
+    else:
+        ids = sorted({i for e in seeds.values() for i in e})
+        vec_pred, src_pred = _in_pred("vec_id", ids), _in_pred("src", ids)
+    vcache, edges = _serve_fetch(
+        vecs, adj[first], vec_pred | _in_pred("vec_id", qids), src_pred
+    )
+    if isinstance(seeds, int):
+        ids = sorted(i for i in vcache if i % step == 0)
+        seeds = {q: ids for q in qids}
+    nbrs: list[dict[int, list[int]]] = [{} for _ in adj]
+    _merge_edges(nbrs[first], ids, edges)
+    qvecs = {q: vcache[q] for q in qids}
+    visited = {
+        q: {i: score_py(qvecs[q], vcache[i]) for i in seeds.get(q, ()) if i != q}
+        for q in qids
+    }
+    for layer, beam, rounds in schedule:
+        _serve_phase(
+            vecs, adj[layer], qvecs, score_py, visited, vcache, nbrs[layer],
+            beam, rounds,
+        )
+    return _rank_visited(embeddings, visited, k, fixed_point)
+
+
+def _rank_visited(
+    embeddings: DataFrame, visited: dict, k: int, fixed_point: bool
+) -> DataFrame:
+    """Result shaping of :func:`_graph_topk`: each query's top-``k``
+    ``visited`` rows by (key desc, vec_id) with their labels, as
+    (query_vec_id, vec_id, label, cosine_sim). The key is the cosine
+    rounded to 6 places, or the fixed-point score itself. The driver
+    first cuts each query to ~k candidates: rounding is monotone and
+    moves a score by < 1e-6, so no row 2e-6 below the k-th best raw
+    score can reach the rounded top-k (the fixed-point key is exact).
+    Spark ranks the survivors in ONE partition (the per-qid window needs
+    no exchange) and broadcast-joins their labels, looked up by id."""
+    import pandas as pd
+    from pyspark.sql import Window
+
+    margin = 0 if fixed_point else 2e-6
+    rows = []
+    for q, scores in sorted(visited.items()):
+        best = sorted(scores.values(), reverse=True)[:k]
+        rows += [(q, v, s) for v, s in scores.items() if s >= best[-1] - margin]
+    # a pandas frame ships over Arrow: no Python worker scans the rows
+    out = embeddings.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=["query_vec_id", "vec_id", "s"]),
+        "query_vec_id long, vec_id long, s "
+        + ("long" if fixed_point else "double"),
+    )
+    if fixed_point:
+        key = F.col("s")
+        sim = F.round(F.col("s").cast("double") / F.lit(_VAM_FP), 6)
+    else:
+        key = sim = F.round(F.col("s"), 6)
+    w = Window.partitionBy("query_vec_id").orderBy(key.desc(), F.col("vec_id"))
+    labels = embeddings.filter(
+        _in_pred("vec_id", {v for _, v, _ in rows})
+    ).select("vec_id", "label")
+    return (
+        out.coalesce(1)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .join(F.broadcast(labels), "vec_id")
+        .select("query_vec_id", "vec_id", "label", sim.alias("cosine_sim"))
+    )
 
 
 def cosine_topk(embeddings: DataFrame, query_vec_id: int, k: int = 20) -> DataFrame:
@@ -873,6 +982,49 @@ NSW_TABLES, NSW_PLANES, NSW_M = 4, 4, 16
 NSW_BEAM, NSW_ROUNDS, NSW_SEED_STEP = 16, 8, 50
 
 
+def _scored_candidates(
+    embeddings: DataFrame,
+    buck: DataFrame,
+    probe: DataFrame | None = None,
+    score=cosine,
+    name: str = "cos",
+) -> DataFrame:
+    """Exactly scored LSH candidate edges (src, dst, <name>), shared by
+    the NSW, HNSW and Vamana builds and the NSW append: every ordered
+    pair of distinct vectors sharing a (table_idx, bucket) row of
+    ``buck`` — bucket-bounded per node, never all-pairs. With ``probe``
+    (a delta's bucket rows) only the pairs touching a probe vector, in
+    both directions: the append's candidate set. ``score`` is the
+    engine's pair score (:func:`cosine`, or Vamana's fixed-point
+    :func:`_cos_fp`) over the vectors of ``embeddings``."""
+    pairs = (
+        buck.alias("a")
+        .join(
+            (buck if probe is None else probe).alias("b"),
+            (F.col("a.table_idx") == F.col("b.table_idx"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.vec_id") != F.col("b.vec_id")),
+        )
+        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
+    )
+    if probe is not None:
+        pairs = pairs.unionByName(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    vecs = embeddings.select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
+    )
+    return (
+        pairs.dropDuplicates(["src", "dst"])
+        .join(vecs.withColumnRenamed("vec_id", "src"), "src")
+        .join(
+            vecs.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb")),
+            "dst",
+        )
+        .select("src", "dst", score(F.col("v"), F.col("vb")).alias(name))
+    )
+
+
 def nsw_build_graph(
     embeddings: DataFrame,
     num_tables: int = NSW_TABLES,
@@ -891,35 +1043,10 @@ def nsw_build_graph(
     from pyspark.sql import Window
 
     buck = _multitable_buckets(embeddings, num_tables, num_planes, dim)
-    pairs = (
-        buck.alias("a")
-        .join(
-            buck.alias("b"),
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    scored = (
-        pairs.join(vecs.withColumnRenamed("vec_id", "src").alias("va"), "src")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("dst"), F.col("v").alias("vb")
-            ),
-            "dst",
-        )
-        .select("src", "dst", cosine(F.col("v"), F.col("vb")).alias("cos"))
-    )
     w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
     return (
-        scored.withColumn("rk", F.row_number().over(w))
+        _scored_candidates(embeddings, buck)
+        .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= m)
         .select("src", "dst", "cos")
     )
@@ -952,87 +1079,6 @@ def nsw_write_index(embeddings: DataFrame, path: str, **kw) -> None:
     ).parquet(path)
 
 
-def nsw_topk(
-    embeddings: DataFrame,
-    adjacency: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    beam: int = NSW_BEAM,
-    rounds: int = NSW_ROUNDS,
-    seed_step: int = NSW_SEED_STEP,
-) -> DataFrame:
-    """Single-layer NSW/HNSW-style bounded beam search over the at-rest
-    neighbor graph: score a fixed coarse seed set (every ``seed_step``-th
-    vec_id — the one-level stand-in for HNSW's upper layers), then for
-    ``rounds`` iterations expand the top-``beam`` not-yet-expanded
-    visited nodes through the adjacency and score the newly reached
-    nodes. Exact cosine over the visited set serves the final top-k.
-
-    Iterative-driver-job shape with id-pushdown serving, restructured in
-    r13 to ONE combined single-stage job per round (guide §1.2/§2.4 —
-    the serve wall was Spark job round-trips, not data): the visited
-    scores (≤ seeds + rounds*beam*M ids — parameter-bounded, never
-    corpus-bounded) and the fetched vectors/adjacency live in DRIVER
-    caches, frontier selection is a local sort, scoring is the
-    driver-side bit-exact :func:`_cos_py`, and each round issues at most
-    one :func:`_serve_fetch` (vectors for newly reached ids + their
-    adjacency, prefetched for the next frontier — both IN-pushed to the
-    parquet scans, the vector-store point-lookup shape real graph-ANN
-    serving uses). The seed pass is the same combined job (seed vectors
-    + query vector + seed adjacency, all predicate-pushed).
-    Trajectory-identical to the per-round DataFrame form (deterministic
-    scoring; same frontier rule, same reached-dedup), so the DuckDB
-    oracle replays the identical unrolled trajectory. Deterministic
-    (cos desc, vec_id tie-breaks)."""
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    adj = adjacency.select("src", "dst")
-    # seed pass: ONE combined fetch — seed + query vectors and the seed
-    # nodes' adjacency (predicate-pushed; prefetched so round 1 never
-    # blocks on a second job)
-    vcache, edges = _serve_fetch(
-        vecs,
-        adj,
-        (F.col("vec_id") % seed_step == 0)
-        | (F.col("vec_id") == query_vec_id),
-        F.col("src") % seed_step == 0,
-    )
-    nbrs: dict[int, list[int]] = {}
-    _merge_edges(
-        nbrs, [i for i in vcache if i % seed_step == 0], edges
-    )
-    qvec = vcache[query_vec_id]
-    visited: dict[int, dict[int, float]] = {query_vec_id: {}}
-    vis = visited[query_vec_id]
-    for i, v in vcache.items():
-        if i % seed_step == 0 and i != query_vec_id:
-            vis[i] = _cos_py(qvec, v)
-    _serve_phase(
-        vecs,
-        adj,
-        {query_vec_id: qvec},
-        _cos_py,
-        visited,
-        vcache,
-        nbrs,
-        beam,
-        rounds,
-    )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, cos double"
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select(
-            "vec_id", "label", F.round(F.col("cos"), 6).alias("cosine_sim")
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
 def nsw_topk_batch(
     embeddings: DataFrame,
     adjacency: DataFrame,
@@ -1042,82 +1088,21 @@ def nsw_topk_batch(
     rounds: int = NSW_ROUNDS,
     seed_step: int = NSW_SEED_STEP,
 ) -> DataFrame:
-    """Batched NSW beam search (VERDICT r7 #2): every query in
-    ``query_ids`` advances through the SAME per-round work, keyed by
-    ``qid`` — the ``knn_join_vec10`` discipline applied to the graph
-    index. Restructured in r13 (guide §1.2/§2.4) from the qid-keyed
-    per-round localCheckpoint DataFrame shape to the driver-cached
-    serve core of :func:`nsw_topk`, SHARED across the batch: at most ONE
-    combined single-stage point-lookup job per round
-    (:func:`_serve_phase`) — independent of batch size, vs one
-    multi-exchange localCheckpoint job per round before; vectors fetched
-    once serve every query in the batch. All fetches parameter-bounded
-    (≤ qids*beam*M reached ids per round, never corpus-bounded);
-    trajectory-identical per qid to :func:`nsw_topk` (same frontier
-    rule, same never-rescore dedup, deterministic scoring — the previous
-    anti-join form reached the same fixpoint). The driver-job count is
-    pinned independent of batch size in tests/test_vector.py. This
-    point-lookup shape is the right one for driver-bounded batches (tens
-    of queries); a mass knn join (thousands+) belongs on the at-rest
-    indexed routes (DPP probes), which stay corpus-shaped."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    adj = adjacency.select("src", "dst")
-    qids = sorted(set(query_ids))
-    # seed pass: ONE combined fetch — seed + query vectors and the seed
-    # nodes' adjacency, all predicate-pushed
-    vcache, edges = _serve_fetch(
-        vecs,
-        adj,
-        (F.col("vec_id") % seed_step == 0)
-        | _in_pred("vec_id", qids),
-        F.col("src") % seed_step == 0,
-    )
-    nbrs: dict[int, list[int]] = {}
-    _merge_edges(
-        nbrs, [i for i in vcache if i % seed_step == 0], edges
-    )
-    qvecs = {q: vcache[q] for q in qids}
-    visited: dict[int, dict[int, float]] = {q: {} for q in qids}
-    for i, v in vcache.items():
-        if i % seed_step != 0:
-            continue
-        for q in qids:
-            if i != q:
-                visited[q][i] = _cos_py(qvecs[q], v)
-    _serve_phase(
-        vecs,
-        adj,
-        qvecs,
-        _cos_py,
-        visited,
-        vcache,
-        nbrs,
-        beam,
-        rounds,
-    )
-    out = spark.createDataFrame(
-        [(q, v, c) for q in qids for v, c in sorted(visited[q].items())],
-        "query_vec_id long, vec_id long, cos double",
-    )
-    wk = Window.partitionBy("query_vec_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select(
-            "query_vec_id",
-            "vec_id",
-            "label",
-            F.round(F.col("cos"), 6).alias("cosine_sim"),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
+    """Single-layer NSW/HNSW-style bounded beam search over the at-rest
+    neighbor graph, for every query in ``query_ids`` (one id for a
+    single query): score a fixed coarse seed set (every ``seed_step``-th
+    vec_id — the one-level stand-in for HNSW's upper layers), then for
+    ``rounds`` iterations expand the top-``beam`` not-yet-expanded
+    visited nodes through the adjacency and score the newly reached
+    nodes; exact cosine over the visited set serves the top-``k``
+    (:func:`_graph_topk`). Per query ≤ seeds + rounds*beam*M scored ids,
+    never corpus-bounded. This point-lookup shape is the right one for
+    driver-bounded batches (tens of queries); a mass knn join
+    (thousands+) belongs on the at-rest indexed routes (DPP probes),
+    which stay corpus-shaped. Deterministic (cos desc, vec_id ties), so
+    the DuckDB oracle replays the identical unrolled trajectory."""
+    return _graph_topk(
+        embeddings, [adjacency], query_ids, seed_step, [(0, beam, rounds)], k
     )
 
 
@@ -1271,35 +1256,10 @@ def nsw_append_graph(
     from pyspark.sql import Window
 
     new_buck = _multitable_buckets(new_embeddings, num_tables, num_planes, dim)
-    buck_all = old_buckets.unionByName(new_buck)
-    half = (
-        buck_all.alias("a")
-        .join(
-            new_buck.alias("b"),
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
+    scored = _scored_candidates(
+        embeddings_all, old_buckets.unionByName(new_buck), probe=new_buck
     )
-    pairs = (
-        half.unionByName(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    vecs = embeddings_all.select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    scored = (
-        pairs.join(vecs.withColumnRenamed("vec_id", "src").alias("va"), "src")
-        .join(
-            vecs.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb")),
-            "dst",
-        )
-        .select("src", "dst", cosine(F.col("v"), F.col("vb")).alias("cos"))
-    )
-    affected = pairs.select("src").distinct()
+    affected = scored.select("src").distinct()
     merged = (
         adjacency.join(affected, "src", "left_semi")
         .unionByName(scored)
@@ -1507,26 +1467,11 @@ def vamana_build_graph(
     from pyspark.sql import Window
 
     buck = _multitable_buckets(embeddings, num_tables, num_planes, dim)
-    pairs = (
-        buck.alias("a")
-        .join(
-            buck.alias("b"),
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
     vecs = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    scored = (
-        pairs.join(vecs.withColumnRenamed("vec_id", "src").alias("va"), "src")
-        .join(vecs.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb")), "dst")
-        .select("src", "dst", _cos_fp(F.col("v"), F.col("vb")).alias("c_fp"))
-    )
     w = Window.partitionBy("src").orderBy(F.col("c_fp").desc(), F.col("dst"))
     cand = (
-        scored.withColumn("rk", F.row_number().over(w))
+        _scored_candidates(embeddings, buck, score=_cos_fp, name="c_fp")
+        .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= VAMANA_C)
         .localCheckpoint()  # feeds the pairwise join AND every prune round
     )
@@ -1616,79 +1561,6 @@ def vamana_write_index(embeddings: DataFrame, path: str, **kw) -> None:
     ).write.mode("overwrite").parquet(path)
 
 
-def vamana_topk(
-    embeddings: DataFrame,
-    adjacency: DataFrame,
-    medoid_id: int,
-    query_vec_id: int,
-    k: int = 20,
-    beam: int = VAMANA_BEAM,
-    rounds: int = VAMANA_ROUNDS,
-) -> DataFrame:
-    """DiskANN-style greedy beam search from the SINGLE medoid entry
-    (where NSW seeds a coarse sample, Vamana's alpha-prune guarantees
-    long-range edges make one entry point sufficient): score the medoid,
-    then for ``rounds`` iterations expand the top-``beam`` unexpanded
-    visited nodes through the at-rest adjacency and score the newly
-    reached nodes — every decision on 1e9 fixed-point cosine. Same
-    driver-cached serve core as :func:`nsw_topk` (r13 restructure, guide
-    §1.2/§2.4): the visited scores (exact fixed-point longs, ≤ 1 +
-    rounds*beam*CAP of them) live in the driver, frontier selection is a
-    local integer sort, scoring is the bit-exact :func:`_cos_fp_py`, and
-    each round issues at most ONE combined IN-pushed point-lookup job
-    (:func:`_serve_phase`) — the per-round
-    ``distinct``/``localCheckpoint`` exchanges are gone.
-    Trajectory-identical (fixed-point scoring is deterministic);
-    per-query work stays O(rounds*beam*CAP) regardless of corpus
-    size."""
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    adj = adjacency.select("src", "dst")
-    # entry: ONE combined fetch — medoid + query vectors and the
-    # medoid's adjacency (prefetched for round 1)
-    vcache, edges = _serve_fetch(
-        vecs,
-        adj,
-        _in_pred("vec_id", [medoid_id, query_vec_id]),
-        F.col("src") == medoid_id,
-    )
-    nbrs: dict[int, list[int]] = {}
-    _merge_edges(nbrs, [medoid_id], edges)
-    qvec = vcache[query_vec_id]
-    visited: dict[int, dict[int, int]] = {query_vec_id: {}}
-    vis = visited[query_vec_id]
-    if medoid_id != query_vec_id:
-        vis[medoid_id] = _cos_fp_py(qvec, vcache[medoid_id])
-    _serve_phase(
-        vecs,
-        adj,
-        {query_vec_id: qvec},
-        _cos_fp_py,
-        visited,
-        vcache,
-        nbrs,
-        beam,
-        rounds,
-    )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, q_fp long"
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select(
-            "vec_id",
-            "label",
-            F.round(F.col("q_fp").cast("double") / F.lit(_VAM_FP), 6).alias(
-                "cosine_sim"
-            ),
-        )
-        .orderBy(F.col("q_fp").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
 def vamana_topk_batch(
     embeddings: DataFrame,
     adjacency: DataFrame,
@@ -1698,72 +1570,24 @@ def vamana_topk_batch(
     beam: int = VAMANA_BEAM,
     rounds: int = VAMANA_ROUNDS,
 ) -> DataFrame:
-    """Batched Vamana serving — the ``knn_join_vec10`` discipline applied
-    to the alpha-pruned graph (family parity with :func:`nsw_topk_batch`):
-    every query advances from the one medoid entry, every decision on 1e9
-    fixed-point cosine. Restructured in r13 (guide §1.2/§2.4) to the
-    driver-cached serve core shared with :func:`vamana_topk`: at most
-    ONE combined IN-pushed point-lookup job per round independent of
-    batch size (:func:`_serve_phase`), replacing the per-round
-    multi-exchange localCheckpoint job. Fetches parameter-bounded
-    (≤ qids*beam*CAP reached ids per round); trajectory-identical per
-    qid to :func:`vamana_topk` (deterministic fixed-point scoring, same
-    frontier/dedup rules)."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    adj = adjacency.select("src", "dst")
-    qids = sorted(set(query_ids))
-    # medoid entry: ONE combined fetch (medoid + query vectors, medoid
-    # adjacency); a qid that IS the medoid starts empty (the DF form's
-    # vec_id != qid filter)
-    vcache, edges = _serve_fetch(
-        vecs,
-        adj,
-        _in_pred("vec_id", set(qids) | {medoid_id}),
-        F.col("src") == medoid_id,
-    )
-    nbrs: dict[int, list[int]] = {}
-    _merge_edges(nbrs, [medoid_id], edges)
-    qvecs = {q: vcache[q] for q in qids}
-    visited: dict[int, dict[int, int]] = {q: {} for q in qids}
-    for q in qids:
-        if q != medoid_id:
-            visited[q][medoid_id] = _cos_fp_py(qvecs[q], vcache[medoid_id])
-    _serve_phase(
-        vecs,
-        adj,
-        qvecs,
-        _cos_fp_py,
-        visited,
-        vcache,
-        nbrs,
-        beam,
-        rounds,
-    )
-    out = spark.createDataFrame(
-        [(q, v, s) for q in qids for v, s in sorted(visited[q].items())],
-        "query_vec_id long, vec_id long, q_fp long",
-    )
-    wk = Window.partitionBy("query_vec_id").orderBy(
-        F.col("q_fp").desc(), F.col("vec_id")
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select("query_vec_id", "vec_id", "label", "q_fp")
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_vec_id",
-            "vec_id",
-            "label",
-            F.round(F.col("q_fp").cast("double") / F.lit(_VAM_FP), 6).alias(
-                "cosine_sim"
-            ),
-        )
+    """DiskANN-style greedy beam search from the SINGLE medoid entry, for
+    every query in ``query_ids`` (one id for a single query): where NSW
+    seeds a coarse sample, Vamana's alpha-prune guarantees long-range
+    edges make one entry point sufficient. Score the medoid (a query
+    that IS the medoid starts empty), then for ``rounds`` iterations
+    expand the top-``beam`` unexpanded visited nodes through the at-rest
+    adjacency and score the newly reached nodes — every decision, and
+    the ranking, on exact 1e9 fixed-point cosine (:func:`_graph_topk`).
+    Per-query work stays O(rounds*beam*CAP) regardless of corpus
+    size."""
+    return _graph_topk(
+        embeddings,
+        [adjacency],
+        query_ids,
+        {q: [medoid_id] for q in query_ids},
+        [(0, beam, rounds)],
+        k,
+        fixed_point=True,
     )
 
 
@@ -1782,8 +1606,9 @@ def vamana_insert_graph(
     the canonical maintenance algorithm is insert-by-search: FreshDiskANN,
     Singh et al. 2021):
 
-    1. **Search**: one batched beam search (qid-keyed, the
-       :func:`vamana_topk_batch` plan shape) finds each new vector's
+    1. **Search**: one batched beam search (qid-keyed DataFrame rounds —
+       an insert batch is input-sized, so it stays in Spark rather than
+       the driver-cached :func:`_graph_topk`) finds each new vector's
        visited set over the EXISTING graph from the medoid — new nodes
        link only to pre-existing nodes, so a batch insert is
        order-independent and deterministic.
@@ -1993,32 +1818,9 @@ def hnsw_build_graph(
 
     lv = hnsw_levels(embeddings, max_level)
     buck = _multitable_buckets(embeddings, num_tables, num_planes, dim)
-    pairs = (
-        buck.alias("a")
-        .join(
-            buck.alias("b"),
-            (F.col("a.table_idx") == F.col("b.table_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    scored = (
-        pairs.join(vecs.withColumnRenamed("vec_id", "src").alias("va"), "src")
-        .join(
-            vecs.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb")),
-            "dst",
-        )
-        .select("src", "dst", cosine(F.col("v"), F.col("vb")).alias("cos"))
-    )
     leveled = (
-        scored.join(
+        _scored_candidates(embeddings, buck)
+        .join(
             lv.select(
                 F.col("vec_id").alias("src"), F.col("level").alias("src_lv")
             ),
@@ -2081,104 +1883,6 @@ def hnsw_write_index(embeddings: DataFrame, path: str, **kw) -> None:
     ).write.mode("overwrite").parquet(path)
 
 
-def _hnsw_phases(
-    max_level: int, upper_beam: int, upper_rounds: int, beam: int, rounds: int
-) -> list[tuple[int, int, int]]:
-    """(layer, beam, rounds) descent schedule: top layer down to 1 with
-    the small upper budget, then the full layer-0 search."""
-    return [
-        (layer, upper_beam, upper_rounds) for layer in range(max_level, 0, -1)
-    ] + [(0, beam, rounds)]
-
-
-def hnsw_topk(
-    embeddings: DataFrame,
-    adjacency: DataFrame,
-    levels: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    beam: int = NSW_BEAM,
-    rounds: int = NSW_ROUNDS,
-    max_level: int = HNSW_MAX_LEVEL,
-    upper_beam: int = HNSW_UPPER_BEAM,
-    upper_rounds: int = HNSW_UPPER_ROUNDS,
-) -> DataFrame:
-    """Hierarchical beam search: score the deterministic entry point (the
-    MIN vec_id on the top layer, query excluded), run a small bounded
-    search per upper layer (expanding only that layer's edges), then the
-    full layer-0 search seeded by everything the descent scored. ONE
-    visited set spans the descent — a node's cosine is layer-independent,
-    so scores are never recomputed; the expanded mark resets per layer
-    (a node expanded through layer-2 edges still owes its layer-0
-    neighborhood). Driver-cached serve core (r13 restructure, guide
-    §1.2/§2.4): at most ONE combined IN-pushed point-lookup job per
-    round (:func:`_serve_phase`), per-layer adjacency caches, bit-exact
-    driver scoring. All fetches parameter-bounded. Total scored
-    ≤ 1 + max_level*upper_rounds*upper_beam*M_upper + rounds*beam*M0,
-    independent of corpus size; vs NSW the corpus-sized seed scan is
-    gone — that is the hierarchy's point. Deterministic end to end (cos
-    desc, vec_id ties), so the DuckDB oracle replays the identical
-    trajectory unrolled."""
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    # ONE parameter-bounded collect (≤ levels rows, a handful) replaces
-    # the two scalar aggregates: per-level min non-self vec_id. top = the
-    # highest POPULATED level at or under the cap (log4-sized caps can
-    # leave the top level empty by hash chance), entry = the minimum
-    # non-self vec_id on the highest level ≥ top — identical rule.
-    by_level = {
-        r["level"]: r["mn"]
-        for r in levels.filter(F.col("vec_id") != query_vec_id)
-        .groupBy("level")
-        .agg(F.min("vec_id").alias("mn"))
-        .collect()
-    }
-    top = max(lvl for lvl in by_level if lvl <= max_level)
-    entry = min(m for lvl, m in by_level.items() if lvl >= top)
-    # entry: ONE combined fetch — entry + query vectors and the entry's
-    # top-layer adjacency (prefetched for the first descent round)
-    vcache, edges = _serve_fetch(
-        vecs,
-        adjacency.filter(F.col("layer") == top).select("src", "dst"),
-        _in_pred("vec_id", [entry, query_vec_id]),
-        F.col("src") == entry,
-    )
-    nbrs_by_layer: dict[int, dict[int, list[int]]] = {top: {}}
-    _merge_edges(nbrs_by_layer[top], [entry], edges)
-    qvec = vcache[query_vec_id]
-    visited: dict[int, dict[int, float]] = {
-        query_vec_id: {entry: _cos_py(qvec, vcache[entry])}
-    }
-    vis = visited[query_vec_id]
-    for layer, b, rr in _hnsw_phases(
-        top, upper_beam, upper_rounds, beam, rounds
-    ):
-        _serve_phase(
-            vecs,
-            adjacency.filter(F.col("layer") == layer).select("src", "dst"),
-            {query_vec_id: qvec},
-            _cos_py,
-            visited,
-            vcache,
-            nbrs_by_layer.setdefault(layer, {}),
-            b,
-            rr,
-        )
-    out = spark.createDataFrame(
-        sorted(vis.items()), "vec_id long, cos double"
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select(
-            "vec_id", "label", F.round(F.col("cos"), 6).alias("cosine_sim")
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
 def hnsw_topk_batch(
     embeddings: DataFrame,
     adjacency: DataFrame,
@@ -2191,127 +1895,57 @@ def hnsw_topk_batch(
     upper_beam: int = HNSW_UPPER_BEAM,
     upper_rounds: int = HNSW_UPPER_ROUNDS,
 ) -> DataFrame:
-    """Batched hierarchical serving (the :func:`nsw_topk_batch`
-    discipline on the layered graph), restructured in r13 (guide
-    §1.2/§2.4) to the driver-cached serve core: at most ONE combined
-    IN-pushed point-lookup job per descent round independent of batch
-    size (:func:`_serve_phase`), per-layer adjacency caches, bit-exact
-    driver scoring — replacing the per-round multi-exchange
-    localCheckpoint job. Per-qid entry keeps the committed rule — best
-    candidate by (level DESC, vec_id ASC) excluding self over the
-    candidate set floored at the highest level with cumulative
-    population ≥ 2 — computed by the same one-job window, with only the
-    ≤ len(query_ids) entry rows collected. The expanded set resets at
-    each layer boundary exactly like the single-query route;
-    trajectory-identical per qid (deterministic scoring, same
-    frontier/dedup rules — the previous anti-join form reached the same
-    fixpoint)."""
-    from pyspark.sql import Window
+    """Hierarchical beam search for every query in ``query_ids`` (one id
+    for a single query): score the query's deterministic entry point,
+    run a small bounded search per upper layer (expanding only that
+    layer's edges), then the full layer-0 search seeded by everything
+    the descent scored (:func:`_graph_topk`). ONE visited set spans the
+    descent — a node's cosine is layer-independent, so scores are never
+    recomputed; the expanded mark resets per layer (a node expanded
+    through layer-2 edges still owes its layer-0 neighborhood).
 
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", as_double(F.col("embedding")).alias("vec")
-    )
-    qids = sorted(set(query_ids))
-    queries = F.broadcast(
-        embeddings.filter(F.col("vec_id").isin(list(query_ids))).select(
-            F.col("vec_id").alias("qid")
+    Entry rule: with levels capped at ``max_level``, the highest level
+    holding a node other than the query, and the MIN vec_id on it. It
+    comes from ONE parameter-bounded collect (≤ max_level+1 rows, each
+    ≤ len(query_ids) ids): per capped level the min non-query vec_id and
+    the queries on it. A query entering below the batch's top layer
+    expands no edges up there (its entry has none), so its trajectory is
+    the one it has alone.
+
+    Total scored per query ≤ 1 + max_level*upper_rounds*upper_beam*M_upper
+    + rounds*beam*M0, independent of corpus size; vs NSW the corpus-sized
+    seed scan is gone — that is the hierarchy's point. Deterministic end
+    to end (cos desc, vec_id ties), so the DuckDB oracle replays the
+    identical trajectory unrolled."""
+    qids = sorted({int(q) for q in query_ids})
+    is_q = _in_pred("vec_id", qids)
+    stats = sorted(
+        levels.groupBy(F.least("level", F.lit(max_level)).alias("level"))
+        .agg(
+            F.min(F.when(~is_q, F.col("vec_id"))).alias("mn"),
+            F.collect_set(F.when(is_q, F.col("vec_id"))).alias("qs"),
         )
+        .collect(),
+        key=lambda r: -r["level"],
     )
-    # Per-level populations at or under the cap: ONE parameter-bounded
-    # collect (≤ cap+1 rows). ``top`` (the schedule's start layer) is the
-    # highest populated level, as before; the entry-candidate set floors
-    # at the highest level whose CUMULATIVE population is ≥ 2, so every
-    # query has a non-self candidate — mirroring the single-query route's
-    # self-exclusion (a top layer whose only node is a query itself would
-    # otherwise hand that query an empty entry set and silently return no
-    # rows instead of descending). Per-qid entry = best candidate by
-    # (level DESC, vec_id ASC) excluding self, which is exactly the
-    # single-query rule "min vec_id on the highest non-self level"; for a
-    # qid entering below ``top`` the upper phases expand no edges (its
-    # entry has none there) — a no-op, trajectory-equal to starting lower.
-    lvl_counts = {
-        r["level"]: r["cnt"]
-        for r in levels.filter(F.col("level") <= max_level)
-        .groupBy("level")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    top = max(lvl_counts)
-    cum, floor = 0, 0
-    for lvl in sorted(lvl_counts, reverse=True):
-        cum += lvl_counts[lvl]
-        if cum >= 2:
-            floor = lvl
-            break
-    cand_nodes = F.broadcast(
-        levels.filter(F.col("level") >= floor).select("vec_id", "level")
-    )
-    w_entry = Window.partitionBy("qid").orderBy(
-        F.col("level").desc(), F.col("vec_id")
-    )
-    # one job; collect is ≤ len(query_ids) rows (parameter-bounded)
-    entry_rows = (
-        queries.select("qid")
-        .join(cand_nodes, F.col("vec_id") != F.col("qid"))
-        .withColumn("_rk", F.row_number().over(w_entry))
-        .filter(F.col("_rk") == 1)
-        .select("qid", "vec_id")
-        .collect()
-    )
-    need: dict[int, set[int]] = {}
-    for r in entry_rows:
-        need.setdefault(r["vec_id"], set()).add(r["qid"])
-    # entry fetch: ONE combined job — entry + query vectors and the
-    # entries' top-layer adjacency (prefetched for the first round)
-    entry_ids = sorted(need)
-    vcache, edges = _serve_fetch(
-        vecs,
-        adjacency.filter(F.col("layer") == top).select("src", "dst"),
-        _in_pred("vec_id", set(entry_ids) | set(qids)),
-        _in_pred("src", entry_ids),
-    )
-    nbrs_by_layer: dict[int, dict[int, list[int]]] = {top: {}}
-    _merge_edges(nbrs_by_layer[top], entry_ids, edges)
-    qvecs = {q: vcache[q] for q in qids}
-    visited: dict[int, dict[int, float]] = {q: {} for q in qids}
-    for vid, qs in need.items():
-        for q in qs:
-            visited[q][vid] = _cos_py(qvecs[q], vcache[vid])
-    for layer, b, rr in _hnsw_phases(
-        top, upper_beam, upper_rounds, beam, rounds
-    ):
-        # layer boundary handled by _serve_phase: expanded resets, and
-        # this layer's adjacency for already-scored ids is fetched once
-        _serve_phase(
-            vecs,
-            adjacency.filter(F.col("layer") == layer).select("src", "dst"),
-            qvecs,
-            _cos_py,
-            visited,
-            vcache,
-            nbrs_by_layer.setdefault(layer, {}),
-            b,
-            rr,
-        )
-    out = spark.createDataFrame(
-        [(q, v, c) for q in qids for v, c in sorted(visited[q].items())],
-        "query_vec_id long, vec_id long, cos double",
-    )
-    wk = Window.partitionBy("query_vec_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    )
-    return (
-        out.join(embeddings.select("vec_id", "label"), "vec_id")
-        .select(
-            "query_vec_id",
-            "vec_id",
-            "label",
-            F.round(F.col("cos"), 6).alias("cosine_sim"),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
+    entry: dict[int, tuple[int, int]] = {}
+    for q in qids:
+        for r in stats:
+            ids = [i for i in (r["mn"], *r["qs"]) if i is not None and i != q]
+            if ids:
+                entry[q] = (r["level"], min(ids))
+                break
+    top = max((lvl for lvl, _ in entry.values()), default=0)
+    return _graph_topk(
+        embeddings,
+        [adjacency.filter(F.col("layer") == lvl) for lvl in range(top + 1)],
+        qids,
+        {q: [e] for q, (_, e) in entry.items()},
+        # descent schedule: the small upper budget from the top layer
+        # down to 1, then the full layer-0 search
+        [(lvl, upper_beam, upper_rounds) for lvl in range(top, 0, -1)]
+        + [(0, beam, rounds)],
+        k,
     )
 
 

@@ -43,7 +43,12 @@ from apache_beam_challange_spark.operators.clustering import (
 )
 from apache_beam_challange_spark.operators.graph import dedup_clusters
 from apache_beam_challange_spark.operators.relational import tfidf_top_terms
-from apache_beam_challange_spark.operators.similarity import ann_lsh_topk, cosine_topk
+from apache_beam_challange_spark.operators.similarity import (
+    ann_lsh_topk,
+    cosine_topk,
+    nsw_topk_batch,
+    nsw_write_index,
+)
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import (
     is_materialized,
@@ -2053,6 +2058,18 @@ LIMIT 20
 """.strip()
 
 
+def _nsw_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(embeddings, adjacency) of the at-rest NSW index, built on first
+    use. The layer name is versioned (_b2): the index gained a bucket
+    sidecar for incremental appends, so pre-sidecar artifacts must not
+    be served."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = warehouse_path(sf_dir, "nsw_graph_t4_m16_b2", "embeddings")
+    if not is_materialized(path, parts=(path + "_buckets",)):
+        nsw_write_index(emb, path)
+    return emb, read_parquet(spark, path)
+
+
 @query("nsw_topk_vec0", oracle=_NSW_ORACLE)
 def nsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-ANN representative (VERDICT r6 #3): single-layer NSW/HNSW-
@@ -2070,18 +2087,8 @@ def nsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 0.15 and was rejected). The oracle recomputes the graph AND
     replays the identical unrolled trajectory — the index is semantically
     invisible."""
-    from apache_beam_challange_spark.operators.similarity import (
-        nsw_topk,
-        nsw_write_index,
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    # layer name versioned (_b2): the index gained a bucket sidecar for
-    # incremental appends, so pre-sidecar artifacts must not be served
-    path = warehouse_path(sf_dir, "nsw_graph_t4_m16_b2", "embeddings")
-    if not is_materialized(path, parts=(path + "_buckets",)):
-        nsw_write_index(emb, path)
-    adj = read_parquet(spark, path)
-    return nsw_topk(emb, adj, query_vec_id=0, k=20)
+    emb, adj = _nsw_index(spark, sf_dir)
+    return nsw_topk_batch(emb, adj, [0], k=20).drop("query_vec_id")
 
 
 def _nsw_batch_round_sql(r: int) -> str:
@@ -2147,23 +2154,12 @@ def nsw_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched graph-ANN serving (VERDICT r7 #2): top-5 NSW neighbors for
     EVERY query in a 10-vector batch through one qid-keyed frontier plan —
     the ``knn_join_vec10`` discipline applied to the at-rest neighbor
-    graph. The single-query route advanced ONE search per driver round
-    trip (8 rounds x collect PER query); this route's driver-side work is
-    8 localCheckpoints TOTAL regardless of batch size (pinned by
-    tests/test_vector.py counting localCheckpoint calls), so serving
-    throughput scales with executor capacity, not driver round-trips.
+    graph. The driver issues the seed-pass fetch plus at most one
+    point-lookup collect per round for the WHOLE batch — never one per
+    query (tests/test_vector.py pins the collect count at 8 queries to
+    the same bound as at 1, and each query's rows to its rows alone).
     The oracle rebuilds the identical graph and replays all ten unrolled
     trajectories partitioned by qid — the index AND the batching are
     semantically invisible."""
-    from apache_beam_challange_spark.operators.similarity import (
-        nsw_topk_batch,
-        nsw_write_index,
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    # layer name versioned (_b2): the index gained a bucket sidecar for
-    # incremental appends, so pre-sidecar artifacts must not be served
-    path = warehouse_path(sf_dir, "nsw_graph_t4_m16_b2", "embeddings")
-    if not is_materialized(path, parts=(path + "_buckets",)):
-        nsw_write_index(emb, path)
-    adj = read_parquet(spark, path)
-    return nsw_topk_batch(emb, adj, query_ids=list(range(10)), k=5)
+    emb, adj = _nsw_index(spark, sf_dir)
+    return nsw_topk_batch(emb, adj, list(range(10)), k=5)

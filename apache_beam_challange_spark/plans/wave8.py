@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.operators.jpeg import JPEG_Q, JPEG_T_FP6
+from apache_beam_challange_spark.operators.similarity import (
+    hnsw_topk_batch,
+    hnsw_write_index,
+)
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import (
     is_materialized,
@@ -253,7 +257,8 @@ adj AS MATERIALIZED (
 
 def _hnsw_schedule() -> list[tuple[int, int, int, int]]:
     """(round, layer, beam, phase_start) descent schedule matching the
-    engine's _hnsw_phases(2, 4, 2, 16, 8): rounds 1-2 layer 2 beam 4,
+    engine's hnsw_topk_batch schedule at top layer 2 (upper 2 rounds x
+    beam 4, layer 0 8 x 16): rounds 1-2 layer 2 beam 4,
     rounds 3-4 layer 1 beam 4, rounds 5-12 layer 0 beam 16. Frontier
     exclusion spans the CURRENT phase only (the expanded mark resets at
     each layer boundary — a node expanded through layer-2 edges still
@@ -308,6 +313,18 @@ LIMIT 20
 """.strip()
 
 
+def _hnsw_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(embeddings, layered adjacency, levels) of the at-rest HNSW
+    index, built on first use."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = warehouse_path(sf_dir, "hnsw_graph_l2_m8_16", "embeddings")
+    if not is_materialized(path, parts=(path + "_levels",)):
+        hnsw_write_index(emb, path)
+    return emb, read_parquet(spark, path), read_parquet(spark, path + "_levels")
+
+
 @query("hnsw_topk_vec0", oracle=_HNSW_ORACLE)
 def hnsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-layer HNSW (VERDICT r11 #6), completing the graph-ANN
@@ -324,18 +341,8 @@ def hnsw_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs exact pinned in tests/test_vector.py. The oracle recomputes
     levels + all three layer graphs AND replays the identical 12-round
     descent unrolled — hierarchy and index are semantically invisible."""
-    from apache_beam_challange_spark.operators.similarity import (
-        hnsw_topk,
-        hnsw_write_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = warehouse_path(sf_dir, "hnsw_graph_l2_m8_16", "embeddings")
-    if not is_materialized(path, parts=(path + "_levels",)):
-        hnsw_write_index(emb, path)
-    adj = read_parquet(spark, path)
-    lv = read_parquet(spark, path + "_levels")
-    return hnsw_topk(emb, adj, lv, query_vec_id=0, k=20)
+    emb, adj, lv = _hnsw_index(spark, sf_dir)
+    return hnsw_topk_batch(emb, adj, lv, [0], k=20).drop("query_vec_id")
 
 
 def _hnsw_batch_round_sql(
@@ -403,26 +410,18 @@ ORDER BY query_vec_id, cosine_sim DESC, vec_id
 @query("hnsw_knn_join_vec10", oracle=_HNSW_BATCH_ORACLE)
 def hnsw_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched hierarchical HNSW serving: top-5 neighbors for EVERY query
-    in a 10-vector batch through ONE qid-keyed descent plan — the
-    ``knn_join_vec10`` discipline on the layered graph. Per-qid entries
-    (MIN top-layer vec_id excluding self), the same 12-round schedule as
-    the single-query route, and driver-side work that is a FIXED number
-    of localCheckpoints independent of batch size (no ``.collect()``
-    anywhere in the search). The oracle rebuilds the identical layered
-    graph and replays all ten unrolled trajectories partitioned by qid —
-    hierarchy, index, and batching are all semantically invisible."""
-    from apache_beam_challange_spark.operators.similarity import (
-        hnsw_topk_batch,
-        hnsw_write_index,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = warehouse_path(sf_dir, "hnsw_graph_l2_m8_16", "embeddings")
-    if not is_materialized(path, parts=(path + "_levels",)):
-        hnsw_write_index(emb, path)
-    adj = read_parquet(spark, path)
-    lv = read_parquet(spark, path + "_levels")
-    return hnsw_topk_batch(emb, adj, lv, query_ids=list(range(10)), k=5)
+    in a 10-vector batch through ONE descent — the ``knn_join_vec10``
+    discipline on the layered graph. Per-qid entries (MIN top-layer
+    vec_id excluding self) and the same 12-round schedule as
+    ``hnsw_topk_vec0``. The driver issues one entry-stats collect, the
+    entry fetch, and at most one point-lookup collect per layer start and
+    per descent round for the whole batch, independent of batch size
+    (collect count pinned in tests/test_vector.py). The oracle rebuilds
+    the identical layered graph and replays all ten unrolled
+    trajectories partitioned by qid — hierarchy, index, and batching are
+    all semantically invisible."""
+    emb, adj, lv = _hnsw_index(spark, sf_dir)
+    return hnsw_topk_batch(emb, adj, lv, list(range(10)), k=5)
 
 
 # --- interleaved A/V demux -------------------------------------------------------

@@ -4,7 +4,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine, dot, l2_norm
-from apache_beam_challange_spark.operators.similarity import ann_lsh_topk, cosine_topk
+from apache_beam_challange_spark.operators.similarity import (
+    HNSW_MAX_LEVEL,
+    HNSW_UPPER_ROUNDS,
+    NSW_ROUNDS,
+    VAMANA_ROUNDS,
+    ann_lsh_topk,
+    cosine_topk,
+)
 
 
 def _vec_df(spark, rows):
@@ -389,7 +396,7 @@ def test_nsw_recall_floor_vs_exact(spark):
         NSW_SEED_STEP,
         cosine_topk,
         nsw_build_graph,
-        nsw_topk,
+        nsw_topk_batch,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -402,61 +409,129 @@ def test_nsw_recall_floor_vs_exact(spark):
         adj.groupBy("src").count().agg(F.max("count")).collect()[0][0]
     )
     assert max_deg <= NSW_M
-    got = {r["vec_id"] for r in nsw_topk(emb, adj, 0, k=20).collect()}
+    got = {r["vec_id"] for r in nsw_topk_batch(emb, adj, [0], k=20).collect()}
     assert len(got & exact) / 20 >= 0.95
     n_vecs = emb.count()
     budget = (n_vecs // NSW_SEED_STEP) + NSW_ROUNDS * NSW_BEAM * NSW_M
     assert len(got) <= 20 and budget < 3000  # fixed serve budget
 
 
-@pytest.mark.slow
-def test_nsw_batch_driver_work_independent_of_query_count(spark):
-    """VERDICT r7 #2 pin, r13 form: the batched NSW serve path's
-    driver-side work is now ``collect`` round-trips (the per-round
-    localCheckpoint DataFrame jobs are gone — r13 restructure); the
-    count is bounded by 2 + 2*rounds (query-lits + seed pass, then per
-    round one adjacency + one scoring collect) REGARDLESS of batch
-    size, and the batch answers equal the single-query route's answers
-    query for query."""
+def _graph_search(spark, sf_dir, family):
+    """``serve(query_ids, k)`` for one graph-ANN family over a graph
+    freshly built from the sf0.001 embeddings."""
+    from apache_beam_challange_spark.operators import similarity as S
+    from apache_beam_challange_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    if family == "nsw":
+        adj = S.nsw_build_graph(emb).localCheckpoint()
+        return lambda ids, k: S.nsw_topk_batch(emb, adj, ids, k=k)
+    if family == "vamana":
+        adj = S.vamana_build_graph(emb).localCheckpoint()
+        med = S.vamana_medoid(emb).first()["medoid_id"]
+        return lambda ids, k: S.vamana_topk_batch(emb, adj, med, ids, k=k)
+    adj = S.hnsw_build_graph(emb).localCheckpoint()
+    lv = S.hnsw_levels(emb).localCheckpoint()
+    return lambda ids, k: S.hnsw_topk_batch(emb, adj, lv, ids, k=k)
+
+
+@pytest.mark.parametrize(
+    "family, max_collects",
+    [
+        ("nsw", 2 + NSW_ROUNDS),
+        ("vamana", 2 + VAMANA_ROUNDS),
+        (
+            "hnsw",
+            2 + HNSW_MAX_LEVEL * (1 + HNSW_UPPER_ROUNDS) + 1 + NSW_ROUNDS,
+        ),
+    ],
+    ids=["nsw", "vamana", "hnsw"],
+)
+def test_graph_search_query_alone_equals_in_batch(
+    spark, sf_dir, family, max_collects
+):
+    """One search serves every graph-ANN family: a query's rows are
+    identical served alone and inside a batch of 8 (same trajectory,
+    scores and tie-breaks), and the driver's collect count stays within
+    the family's bound at both sizes — the seed fetch, then at most one
+    fetch per layer start and per round (HNSW adds its one entry-stats
+    collect), never one per query."""
     from unittest import mock
 
-    from apache_beam_challange_spark.operators.similarity import (
-        NSW_ROUNDS,
-        nsw_build_graph,
-        nsw_topk,
-        nsw_topk_batch,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    adj = nsw_build_graph(emb).localCheckpoint()
-
+    serve = _graph_search(spark, sf_dir, family)
     # patch the CONCRETE class (Spark 4 instances are
     # pyspark.sql.classic.dataframe.DataFrame, which overrides the base)
-    DataFrame = type(emb)
+    DataFrame = type(spark.range(1))
     orig = DataFrame.collect
-    counts = {}
-    for qn in (2, 8):
+
+    def served(ids):
         with mock.patch.object(
             DataFrame,
             "collect",
             autospec=True,
             side_effect=lambda self: orig(self),
         ) as cc:
-            batch = nsw_topk_batch(emb, adj, list(range(qn)), k=20)
-            counts[qn] = cc.call_count
-        if qn == 2:
-            got = {
-                (r.query_vec_id, r.vec_id, r.cosine_sim)
-                for r in batch.collect()
-            }
-            want = set()
-            for qid in range(2):
-                for r in nsw_topk(emb, adj, qid, k=20).collect():
-                    want.add((qid, r.vec_id, r.cosine_sim))
-            assert got == want
-    # query-lits + seeds + at most (adjacency, scoring) per round,
-    # regardless of batch size; no localCheckpoint jobs remain
-    assert max(counts.values()) <= 2 + 2 * NSW_ROUNDS
+            df = serve(ids, 5)
+        return sorted(tuple(r) for r in df.collect()), cc.call_count
+
+    batch, n_batch = served(list(range(8)))
+    assert n_batch <= max_collects
+    for q in (0, 3, 7):
+        alone, n_alone = served([q])
+        assert n_alone <= max_collects
+        assert alone and alone == [r for r in batch if r[0] == q], q
+
+
+def test_rank_visited_cut_keeps_rounding_ties(spark):
+    """The graph search's driver pre-cut drops no row the rounded
+    ranking keeps: a row whose raw score is below the k-th best but
+    rounds into a tie with it (and wins the tie on vec_id) survives,
+    and the result equals a window over ALL visited rows — for the
+    rounded cosine and for the exact fixed-point key."""
+    from pyspark.sql import Window
+
+    from apache_beam_challange_spark.operators.similarity import (
+        _VAM_FP,
+        _rank_visited,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, i % 3) for i in range(10)], "vec_id long, label int"
+    )
+    cases = [
+        # k=3: 9 and 8 round to 0.500001; 1, 2, 3 tie at 0.5 and 1 wins
+        # on vec_id though its raw score is the lowest of the three;
+        # 0 rounds to 0.499998
+        (False, {7: {9: 0.5000014, 8: 0.5000005, 1: 0.4999995,
+                     2: 0.49999951, 3: 0.5, 0: 0.4999979}}),
+        (True, {7: {9: 500_000_001, 8: 500_000_000, 1: 500_000_000,
+                    2: 499_999_999}, 4: {}}),
+    ]
+    for fixed_point, visited in cases:
+        got = sorted(tuple(r) for r in _rank_visited(
+            emb, visited, 3, fixed_point
+        ).collect())
+        rows = spark.createDataFrame(
+            [(q, v, s) for q, d in visited.items() for v, s in d.items()],
+            "query_vec_id long, vec_id long, s "
+            + ("long" if fixed_point else "double"),
+        )
+        sim = (
+            F.round(F.col("s").cast("double") / F.lit(_VAM_FP), 6)
+            if fixed_point
+            else F.round(F.col("s"), 6)
+        )
+        key = F.col("s") if fixed_point else sim
+        w = Window.partitionBy("query_vec_id").orderBy(key.desc(), "vec_id")
+        want = sorted(
+            tuple(r)
+            for r in rows.withColumn("rk", F.row_number().over(w))
+            .filter("rk <= 3")
+            .join(emb, "vec_id")
+            .select("query_vec_id", "vec_id", "label", sim)
+            .collect()
+        )
+        assert got == want and {r[1] for r in got} == {9, 8, 1}, fixed_point
 
 
 @pytest.mark.slow
@@ -537,7 +612,7 @@ def test_nsw_append_equals_rebuild_and_serves_identically(spark):
         _multitable_buckets,
         nsw_append_graph,
         nsw_build_graph,
-        nsw_topk,
+        nsw_topk_batch,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -554,8 +629,8 @@ def test_nsw_append_equals_rebuild_and_serves_identically(spark):
         )
 
     assert canon(appended) == canon(rebuilt)
-    got_a = [tuple(r) for r in nsw_topk(emb, appended.localCheckpoint(), 0, k=20).collect()]
-    got_r = [tuple(r) for r in nsw_topk(emb, rebuilt.localCheckpoint(), 0, k=20).collect()]
+    got_a = [tuple(r) for r in nsw_topk_batch(emb, appended.localCheckpoint(), [0], k=20).collect()]
+    got_r = [tuple(r) for r in nsw_topk_batch(emb, rebuilt.localCheckpoint(), [0], k=20).collect()]
     assert got_a == got_r
 
 

@@ -223,7 +223,7 @@ def test_vamana_recall_floor(spark, sf_dir, vamana_graph):
     from apache_beam_challange_spark.operators.similarity import (
         cosine_topk,
         vamana_medoid,
-        vamana_topk,
+        vamana_topk_batch,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
@@ -231,7 +231,7 @@ def test_vamana_recall_floor(spark, sf_dir, vamana_graph):
     med = vamana_medoid(emb).first()["medoid_id"]
     got = {
         r["vec_id"]
-        for r in vamana_topk(emb, vamana_graph, med, query_vec_id=0).collect()
+        for r in vamana_topk_batch(emb, vamana_graph, med, [0], k=20).collect()
     }
     exact = {
         r["vec_id"]
@@ -239,37 +239,6 @@ def test_vamana_recall_floor(spark, sf_dir, vamana_graph):
         if r["vec_id"] != 0
     }
     assert len(got & exact) >= 0.8 * len(exact)
-
-
-def test_vamana_batch_equals_single_query_route(spark, sf_dir, vamana_graph):
-    """Trajectory equivalence: the batched qid-keyed route must return the
-    single-query route's exact top-5 for every query in the batch (same
-    fixed-point integers, same tie-breaks)."""
-    from apache_beam_challange_spark.operators.similarity import (
-        vamana_medoid,
-        vamana_topk,
-        vamana_topk_batch,
-    )
-    from apache_beam_challange_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    med = vamana_medoid(emb).first()["medoid_id"]
-    batch = vamana_topk_batch(
-        emb, vamana_graph, med, query_ids=[0, 3, 7], k=5
-    ).collect()
-    by_q: dict[int, list[tuple]] = {}
-    for r in sorted(batch, key=lambda r: (r["query_vec_id"], -r["cosine_sim"], r["vec_id"])):
-        by_q.setdefault(r["query_vec_id"], []).append(
-            (r["vec_id"], r["cosine_sim"])
-        )
-    for qid in (0, 3, 7):
-        single = [
-            (r["vec_id"], r["cosine_sim"])
-            for r in vamana_topk(
-                emb, vamana_graph, med, query_vec_id=qid, k=5
-            ).collect()
-        ]
-        assert by_q[qid] == single, qid
 
 
 def test_jpeg_phash_sees_lossy_pixels(spark, sf_dir):
@@ -335,7 +304,7 @@ def test_vamana_insert_maintains_serving(spark, sf_dir):
         vamana_build_graph,
         vamana_insert_graph,
         vamana_medoid,
-        vamana_topk,
+        vamana_topk_batch,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
@@ -362,7 +331,7 @@ def test_vamana_insert_maintains_serving(spark, sf_dir):
     # (d) recall over the FULL corpus from the un-rebuilt graph
     got = {
         r["vec_id"]
-        for r in vamana_topk(emb, g1, med, query_vec_id=0).collect()
+        for r in vamana_topk_batch(emb, g1, med, [0], k=20).collect()
     }
     exact = {
         r["vec_id"]

@@ -272,59 +272,14 @@ def test_hnsw_recall_floor_vs_exact(spark, hnsw_parts):
     corpus-size-independent: <= 1 + 2*2*4*8 + 8*16*16 scored vectors."""
     from apache_beam_challange_spark.operators.similarity import (
         cosine_topk,
-        hnsw_topk,
-    )
-
-    emb, adj, lv = hnsw_parts
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
-    got = {r["vec_id"] for r in hnsw_topk(emb, adj, lv, 0, k=20).collect()}
-    assert len(got & exact) / 20 >= 0.9
-    assert 1 + 2 * 2 * 4 * 8 + 8 * 16 * 16 < 2200  # fixed serve budget
-
-
-def test_hnsw_batch_equals_single_and_driver_work_fixed(spark, hnsw_parts):
-    """The batched route answers every query exactly like the
-    single-query route, and its driver-side work (collect round-trips —
-    the per-round localCheckpoint jobs are gone, r13 restructure) is
-    bounded independent of batch size: query-lits + level-counts +
-    entries + entry scoring, then at most (adjacency, scoring) per
-    descent round."""
-    from unittest import mock
-
-    from apache_beam_challange_spark.operators.similarity import (
-        HNSW_MAX_LEVEL,
-        HNSW_UPPER_ROUNDS,
-        NSW_ROUNDS,
-        hnsw_topk,
         hnsw_topk_batch,
     )
 
     emb, adj, lv = hnsw_parts
-    DataFrame = type(emb)
-    orig = DataFrame.collect
-    counts = {}
-    for qn in (2, 8):
-        with mock.patch.object(
-            DataFrame,
-            "collect",
-            autospec=True,
-            side_effect=lambda self: orig(self),
-        ) as cc:
-            batch = hnsw_topk_batch(emb, adj, lv, list(range(qn)), k=5)
-            counts[qn] = cc.call_count
-        if qn == 2:
-            got = {
-                (r.query_vec_id, r.vec_id, r.cosine_sim)
-                for r in batch.collect()
-            }
-            want = set()
-            for qid in range(2):
-                for r in hnsw_topk(emb, adj, lv, qid, k=5).collect():
-                    want.add((qid, r.vec_id, r.cosine_sim))
-            assert got == want
-    assert max(counts.values()) <= 4 + 2 * (
-        HNSW_MAX_LEVEL * HNSW_UPPER_ROUNDS + NSW_ROUNDS
-    )
+    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    got = {r["vec_id"] for r in hnsw_topk_batch(emb, adj, lv, [0], k=20).collect()}
+    assert len(got & exact) / 20 >= 0.9
+    assert 1 + 2 * 2 * 4 * 8 + 8 * 16 * 16 < 2200  # fixed serve budget
 
 
 # --- TWS protobuf leniency is narrow (ADVICE r11) -------------------------------
@@ -372,7 +327,7 @@ def test_hnsw_append_equals_rebuild_and_serves_identically(spark, sf_dir):
         hnsw_append_graph,
         hnsw_build_graph,
         hnsw_levels,
-        hnsw_topk,
+        hnsw_topk_batch,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -389,8 +344,8 @@ def test_hnsw_append_equals_rebuild_and_serves_identically(spark, sf_dir):
         key(r) for r in rebuilt.collect()
     }
     lv = hnsw_levels(emb).localCheckpoint()
-    got = hnsw_topk(emb, appended, lv, 0, k=10).collect()
-    want = hnsw_topk(emb, rebuilt, lv, 0, k=10).collect()
+    got = hnsw_topk_batch(emb, appended, lv, [0], k=10).collect()
+    want = hnsw_topk_batch(emb, rebuilt, lv, [0], k=10).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
@@ -483,7 +438,7 @@ def test_hnsw_append_index_commit_discipline(spark, sf_dir, tmp_path):
     from apache_beam_challange_spark.operators.similarity import (
         hnsw_append_index,
         hnsw_build_graph,
-        hnsw_topk,
+        hnsw_topk_batch,
         hnsw_write_index,
     )
     from apache_beam_challange_spark.sources.catalog import is_materialized
@@ -508,11 +463,11 @@ def test_hnsw_append_index_commit_discipline(spark, sf_dir, tmp_path):
     assert {key(r) for r in adj.collect()} == {
         key(r) for r in rebuilt.collect()
     }
-    got = [tuple(r) for r in hnsw_topk(emb, adj, lv, 0, k=10).collect()]
+    got = [tuple(r) for r in hnsw_topk_batch(emb, adj, lv, [0], k=10).collect()]
     want = [
         tuple(r)
-        for r in hnsw_topk(
-            emb, rebuilt.localCheckpoint(), lv, 0, k=10
+        for r in hnsw_topk_batch(
+            emb, rebuilt.localCheckpoint(), lv, [0], k=10
         ).collect()
     ]
     assert got == want
@@ -538,7 +493,7 @@ def test_streaming_ann_ingest_equals_rebuild(spark, sf_dir, tmp_path):
     store-membership guard)."""
     from apache_beam_challange_spark.operators.similarity import (
         nsw_build_graph,
-        nsw_topk,
+        nsw_topk_batch,
         nsw_write_index,
     )
     from apache_beam_challange_spark.streaming.ann_ingest import (
@@ -569,8 +524,8 @@ def test_streaming_ann_ingest_equals_rebuild(spark, sf_dir, tmp_path):
     assert {key(r) for r in adj.collect()} == {
         key(r) for r in rebuilt.collect()
     }
-    got = [tuple(r) for r in nsw_topk(emb, adj, 0, k=10).collect()]
-    want = [tuple(r) for r in nsw_topk(emb, rebuilt, 0, k=10).collect()]
+    got = [tuple(r) for r in nsw_topk_batch(emb, adj, [0], k=10).collect()]
+    want = [tuple(r) for r in nsw_topk_batch(emb, rebuilt, [0], k=10).collect()]
     assert got == want
     fresh = ann_index_freshness_check(spark, store, index).collect()[0]
     assert fresh.fresh and fresh.store_rows == emb.count()
@@ -598,7 +553,7 @@ def test_hnsw_deep_hierarchy_recall_at_scale(spark):
         cosine_topk,
         hnsw_build_graph,
         hnsw_levels,
-        hnsw_topk,
+        hnsw_topk_batch,
         suggested_max_level,
     )
 
@@ -614,7 +569,7 @@ def test_hnsw_deep_hierarchy_recall_at_scale(spark):
     exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
     got = {
         r["vec_id"]
-        for r in hnsw_topk(emb, adj, lv, 0, k=20, max_level=ml).collect()
+        for r in hnsw_topk_batch(emb, adj, lv, [0], k=20, max_level=ml).collect()
     }
     assert len(got & exact) / 20 >= 0.9
 
@@ -659,14 +614,14 @@ def test_avi_movi_nonstream_chunks_skipped():
 
 @pytest.mark.slow
 def test_hnsw_batch_entry_excludes_query_nodes(spark, sf_dir):
-    """r12 ADVICE: when the only node on the top populated level IS the
-    query, the batched route must descend from the next populated level
-    (like the single-query route) instead of silently returning no rows.
-    Corpus restricted so the sole top-level node is the query itself."""
+    """When the only node on the top populated level IS the query, its
+    search must descend from the next populated level instead of
+    silently returning no rows — alone, and inside a batch whose other
+    queries do enter at the top. Corpus restricted so the sole
+    top-level node is the query itself."""
     from apache_beam_challange_spark.operators.similarity import (
         hnsw_build_graph,
         hnsw_levels,
-        hnsw_topk,
         hnsw_topk_batch,
     )
 
@@ -684,15 +639,19 @@ def test_hnsw_batch_entry_excludes_query_nodes(spark, sf_dir):
     sub = emb.join(keep, "vec_id")
     adj = hnsw_build_graph(sub).localCheckpoint()
     lv = hnsw_levels(sub).localCheckpoint()
-    single = {
-        (r.vec_id, r.cosine_sim)
-        for r in hnsw_topk(sub, adj, lv, x, k=5).collect()
-    }
-    got = {
+    others = [
+        r.vec_id for r in lv.filter(F.col("vec_id") != x).limit(3).collect()
+    ]
+    alone = {
         (r.vec_id, r.cosine_sim)
         for r in hnsw_topk_batch(sub, adj, lv, [x], k=5).collect()
     }
-    assert got and got == single
+    in_batch = {
+        (r.vec_id, r.cosine_sim)
+        for r in hnsw_topk_batch(sub, adj, lv, [x, *others], k=5).collect()
+        if r.query_vec_id == x
+    }
+    assert alone and alone == in_batch
 
 
 @pytest.mark.slow
