@@ -35,6 +35,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double
+from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
+
+#: widest vector k-means trains on (the 64-dim embedding corpus); bounds
+#: each Lloyd round's collected state at k * _MAX_DIM rows
+_MAX_DIM = 64
 
 
 def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
@@ -109,11 +114,10 @@ def kmeans_centroids(
             F.count(F.lit(1)).alias("n"),
         )
         state: dict[int, list[tuple[int, float]]] = {}
-        for r in sums.collect():
-            state.setdefault(r["centroid_id"], []).append(
-                (r["pos"], r["s"] / (r["n"] * float(scale)))
-            )
-        cents = spark.createDataFrame(
+        for cid, pos, s, n in collect_bounded(sums, k * _MAX_DIM):
+            state.setdefault(cid, []).append((pos, s / (n * float(scale))))
+        cents = local_frame(
+            spark,
             [
                 (cid, [v for _, v in sorted(pvs)])
                 for cid, pvs in sorted(state.items())
@@ -750,7 +754,7 @@ def opq_allocation_from_keys(
     operators stay collect-free; same class as the pandas route's
     query-vector ``head()``)."""
     keyed = sorted(
-        ((r["n"] * r["s2"] - r["s1"] * r["s1"], r["d"]) for r in key_rows),
+        ((n * s2 - s1 * s1, d) for d, s1, s2, n in key_rows),
         key=lambda t: (-t[0], t[1]),
     )
     perm = [d for _, d in keyed]

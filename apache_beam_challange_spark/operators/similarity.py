@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine
 from apache_beam_challange_spark.sources.catalog import read_parquet
+from apache_beam_challange_spark.sources.driver import local_frame
 
 
 def _query_vec(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
@@ -284,7 +285,6 @@ def _rank_visited(
     score can reach the rounded top-k (the fixed-point key is exact).
     Spark ranks the survivors in ONE partition (the per-qid window needs
     no exchange) and broadcast-joins their labels, looked up by id."""
-    import pandas as pd
     from pyspark.sql import Window
 
     margin = 0 if fixed_point else 2e-6
@@ -292,9 +292,9 @@ def _rank_visited(
     for q, scores in sorted(visited.items()):
         best = sorted(scores.values(), reverse=True)[:k]
         rows += [(q, v, s) for v, s in scores.items() if s >= best[-1] - margin]
-    # a pandas frame ships over Arrow: no Python worker scans the rows
-    out = embeddings.sparkSession.createDataFrame(
-        pd.DataFrame(rows, columns=["query_vec_id", "vec_id", "s"]),
+    out = local_frame(
+        embeddings.sparkSession,
+        rows,
         "query_vec_id long, vec_id long, s "
         + ("long" if fixed_point else "double"),
     )
@@ -795,7 +795,7 @@ def _multitable_buckets(
             g = p * dim + idx + 1
             s = math.sin(float(g)) * 43758.5453
             plane_rows.append((p, idx + 1, s - math.floor(s) - 0.5))
-    planes = spark.createDataFrame(plane_rows, "p int, j int, h double")
+    planes = local_frame(spark, plane_rows, "p int, j int, h double")
     comp = embeddings.select(
         "vec_id", F.posexplode(as_double(F.col("embedding"))).alias("j0", "x")
     ).select("vec_id", (F.col("j0") + 1).alias("j"), "x")

@@ -19,6 +19,7 @@ from apache_beam_challange_spark.sources.catalog import (
     read_parquet,
     warehouse_path,
 )
+from apache_beam_challange_spark.sources.driver import local_frame
 
 
 @query(
@@ -58,9 +59,10 @@ def range_join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, so the non-equi predicate is evaluated map-side — no
     shuffle of the fact table."""
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 25.0), ("mid", 25.0, 75.0), ("high", 75.0, 1e9)],
-        ["band", "lo", "hi"],
+        "band string, lo double, hi double",
     )
     return (
         ev.join(
@@ -848,7 +850,7 @@ def kll_register_table(ev: DataFrame) -> DataFrame:
 
     spark = ev.sparkSession
     powers = F.broadcast(
-        spark.createDataFrame(_KLL_POWERS, "l int, p long")
+        local_frame(spark, _KLL_POWERS, "l int, p long")
     )
     vals = ev.select(
         F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("long").alias("v"),
@@ -1012,7 +1014,7 @@ def kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    qs = spark.createDataFrame([(25,), (50,), (75,), (90,), (99,)], "q_pct int")
+    qs = local_frame(spark, [(25,), (50,), (75,), (90,), (99,)], "q_pct int")
     return (
         cum.crossJoin(F.broadcast(qs))
         .crossJoin(F.broadcast(tot))

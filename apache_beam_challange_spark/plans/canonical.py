@@ -45,6 +45,7 @@ from apache_beam_challange_spark.sources.catalog import (
     rides,
     stations,
 )
+from apache_beam_challange_spark.sources.driver import local_frame
 
 _PAIR_COUNT_SQL = f"""
 WITH {RIDES_CTE}
@@ -389,7 +390,7 @@ GROUP BY start_station_name, end_station_name
 def create_fixture_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 in-memory bounded source (``beam.Create`` of the notebook's 8-row
     fixture) -> group-count: the interactive development path as a query."""
-    df = spark.createDataFrame(
-        _FIXTURE_RIDES, ["start_station_name", "end_station_name"]
+    df = local_frame(
+        spark, _FIXTURE_RIDES, "start_station_name string, end_station_name string"
     )
     return group_count(df, ["start_station_name", "end_station_name"])

@@ -56,6 +56,7 @@ from apache_beam_challange_spark.sources.catalog import (
     read_parquet,
     warehouse_path,
 )
+from apache_beam_challange_spark.sources.driver import collect_bounded
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -1676,7 +1677,8 @@ def opq_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    subs = opq_allocation_from_keys(opq_variance_keys(emb).collect())
+    # one variance-key row per dimension of the 64-dim corpus
+    subs = opq_allocation_from_keys(collect_bounded(opq_variance_keys(emb), 64))
     return opq_topk(emb, query_vec_id=0, k_results=20, subs=subs)
 
 

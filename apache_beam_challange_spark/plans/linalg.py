@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from apache_beam_challange_spark.functions.vector import as_double
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 _DIM = 64
 _SG = 1_000_000_000  # Gram fixed-point scale (1e-9 resolution per product)
@@ -118,8 +119,8 @@ def pca_power_iteration_top_component(
     v, norm1 = _power_component(spark, sf_dir)
     eig = float(norm1) / 1000000.0 / float(_SG)
     out = [(i, float(v[i]) / 1000000.0, eig) for i in range(1, _DIM + 1)]
-    return spark.createDataFrame(
-        out, schema="dim long, loading double, eigval_est double"
+    return local_frame(
+        spark, out, "dim long, loading double, eigval_est double"
     ).orderBy("dim")
 
 
@@ -148,13 +149,12 @@ def _power_component(spark: SparkSession, sf_dir: str) -> tuple[list[int], int]:
         .groupBy("i", "j")
         .agg(F.sum("term").alias("gsum"))
     )
-    # dim^2/2 rows — bounded by the schema (64-dim), not the corpus.
-    rows = half.collect()
+    # the upper triangle: bounded by the schema (64-dim), not the corpus
     g = [[0] * (_DIM + 1) for _ in range(_DIM + 1)]
-    for r in rows:
-        gavg = math.floor(float(r["gsum"]) / n)
-        g[r["i"]][r["j"]] = gavg
-        g[r["j"]][r["i"]] = gavg
+    for i, j, gsum in collect_bounded(half, _DIM * (_DIM + 1) // 2):
+        gavg = math.floor(float(gsum) / n)
+        g[i][j] = gavg
+        g[j][i] = gavg
     v = [_V0] * (_DIM + 1)
     norm1 = 0
     for _ in range(_ITER):
@@ -357,8 +357,8 @@ def kcenter_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         chosen.append((r, row["vec_id"], float(row["md"]) / _KC_SD))
-    return spark.createDataFrame(
-        chosen, schema="sel_round long, vec_id long, max_dot_at_pick double"
+    return local_frame(
+        spark, chosen, "sel_round long, vec_id long, max_dot_at_pick double"
     ).orderBy("sel_round")
 
 

@@ -54,6 +54,7 @@ from apache_beam_challange_spark.sources.catalog import (
     read_parquet,
     warehouse_path,
 )
+from apache_beam_challange_spark.sources.driver import local_frame
 
 _TOPK = 20
 _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM = 16, 4, 65
@@ -258,7 +259,7 @@ def mips_lsh_write_index(emb: DataFrame, path: str) -> None:
     stale_marker = os.path.join(path, "_SUCCESS")
     if os.path.exists(stale_marker):
         os.remove(stale_marker)
-    spark.createDataFrame([(float(m2),)], "m2 double").coalesce(1).write.mode(
+    local_frame(spark, [(float(m2),)], "m2 double").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path + "_meta")
     lsh_write_index(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import local_frame
 from apache_beam_challange_spark.streaming.stateful import running_user_counts
 from apache_beam_challange_spark.streaming.windows import (
     events_stream,
@@ -603,7 +604,7 @@ def _stream_cdc_merge(spark: SparkSession, sf_dir: str, n_files: int) -> DataFra
             )
             state = read_published(bs, state_base)
             if state is None:
-                state = bs.createDataFrame([], state_schema)
+                state = local_frame(bs, [], state_schema)
             state.createOrReplaceTempView("__stream_cdc_state")
             publish(merge_into(bs, _STREAM_CDC_MERGE_SQL), state_base)
 

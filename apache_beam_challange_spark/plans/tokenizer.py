@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import local_frame
 
 # --- BPE merge training -----------------------------------------------------
 
@@ -292,7 +293,7 @@ def vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.col("freq").desc(), "token"))
         .alias("rk"),
     )
-    ks = spark.createDataFrame([(10,), (100,), (1000,)], "k int")
+    ks = local_frame(spark, [(10,), (100,), (1000,)], "k int")
     return (
         ranked.crossJoin(F.broadcast(ks))
         .groupBy("k")

@@ -55,6 +55,7 @@ from apache_beam_challange_spark.functions.text import QUALITY_SCORE_SQL
 from apache_beam_challange_spark.plans.curation import _FUZZY_BLOCK_CAP
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 # --- sequence packing (concat-and-chunk) -----------------------------------
 
@@ -2161,9 +2162,9 @@ def mmr_diversified_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     trajectory reproduces the selection exactly."""
     cand, sims = mmr_candidate_sims(spark, sf_dir, k_cand=50)
     # parameter-bounded collects: 50 rel rows + 50*49 sim rows
-    rel_rows = cand.select("vec_id", "label", "cosine_sim").collect()
-    sim_map = {(r.a, r.b): r.s for r in sims.collect()}
-    rel = {r.vec_id: (r.label, r.cosine_sim) for r in rel_rows}
+    rel_rows = collect_bounded(cand.select("vec_id", "label", "cosine_sim"), 50)
+    sim_map = {(a, b): s for a, b, s in collect_bounded(sims, 50 * 49)}
+    rel = {v: (label, cs) for v, label, cs in rel_rows}
     # NOTE: mu is the LITERAL 0.3, matching the oracle's round(1-lam, 10)
     # — python's (1 - 0.7) is 0.30000000000000004, a DIFFERENT double,
     # and the engine==oracle trajectory claim rests on identical
@@ -2188,8 +2189,8 @@ def mmr_diversified_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         selected.append((t, best, rel[best][0], best_score))
         chosen.append(best)
         remaining.remove(best)
-    out = spark.createDataFrame(
-        selected, "rank int, vec_id long, label int, mmr double"
+    out = local_frame(
+        spark, selected, "rank int, vec_id long, label int, mmr double"
     )
     return out.select(
         "rank", "vec_id", "label", F.round(F.col("mmr"), 6).alias("mmr_score")

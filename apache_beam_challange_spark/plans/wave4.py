@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 
 # --- as-of join with payload (union-and-carry, zero joins) -------------------
@@ -947,9 +948,7 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 rounds x (2 broadcasts + join + agg + checkpoint job) with zero
     # in-loop Spark jobs; the data-sized slate/basket aggregates and the
     # final join/ordering stay in Spark unchanged.
-    pr_rows = [
-        (r["pa"], r["pb"], r["w2"], r["n2"]) for r in prs.collect()
-    ]
+    pr_rows = collect_bounded(prs, k * (k - 1))
     w2tot_d: dict[int, int] = {}
     for pa, _pb, w2, n2 in pr_rows:
         w2tot_d[pa] = w2tot_d.get(pa, 0) + w2
@@ -969,9 +968,7 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for pa, sp in sp_d.items()
         }
-    scores = spark.createDataFrame(
-        sorted(s_d.items()), "pk long, s long"
-    )
+    scores = local_frame(spark, sorted(s_d.items()), "pk long, s long")
     return (
         scores.join(wtot, scores.pk == wtot.pa)
         .select(

@@ -32,9 +32,19 @@ from pyspark.sql.window import Window
 
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
+from apache_beam_challange_spark.sources.driver import (
+    CollectCapExceeded,
+    collect_bounded,
+    local_frame,
+)
 
 #: per-term fixed-point scale for cross-row float sums (wave5 discipline)
 _FP9 = 1_000_000_000.0
+#: most rows a driver solve collects when its state is bounded by a
+#: value domain (Markov transitions, IPF cells, huber cent buckets)
+#: rather than by a query parameter. Module-level so the huber fallback
+#: test can shrink it.
+_DOMAIN_CAP = 2_000_000
 
 # --- Brier score with the Murphy decomposition ---------------------------------
 
@@ -377,7 +387,7 @@ def obf_group_sequential_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("total") % F.lit(_OBF_PACK)).alias("n"),
     )
     looks = F.broadcast(
-        walk.sparkSession.createDataFrame(_OBF_BOUNDS, "k long, bound double")
+        local_frame(walk.sparkSession, _OBF_BOUNDS, "k long, bound double")
     )
     hit = walk.join(looks, F.expr("i = (k * n) div 5"))
     num = (F.lit(20) * F.col("cum_pos") - F.lit(3) * F.col("i")).cast("double")
@@ -795,7 +805,7 @@ def ndcg_at_k_value_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_b").over(w_cur).cast("long").alias("b"),
     ).filter(F.col("a") <= _NDCG_K)
     disc = F.broadcast(
-        ev.sparkSession.createDataFrame(_NDCG_DISC, "i long, d_fp long")
+        local_frame(ev.sparkSession, _NDCG_DISC, "i long, d_fp long")
     )
     grp = (
         pos.join(disc, (F.col("i") >= F.col("a")) & (F.col("i") <= F.col("b")))
@@ -1170,7 +1180,6 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ends = seq.filter(F.col("is_last") & (F.col("cur") != "CONV")).select(
         F.col("cur").alias("f"), F.lit("NULL").alias("t")
     )
-    spark_s = ev.sparkSession
     # r13 restructure (guide §1.2 step 1 — the serve-core discipline):
     # the data-sized work is exactly ONE ordered pass + transition count;
     # everything after runs on a <= (channels+3)^2 matrix. Previously the
@@ -1186,13 +1195,12 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so distinct event_type != purchase is exactly {t} - {CONV, NULL}.
     # Final rounding stays in Spark via the SAME expressions, so float
     # formatting matches the oracle unchanged.
-    trans_rows = [
-        (r["f"], r["t"], r["c"])
-        for r in fwd.unionAll(ends)
+    trans_rows = collect_bounded(
+        fwd.unionAll(ends)
         .groupBy("f", "t")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .collect()
-    ] + [("CONV", "CONV", 1)]
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        _DOMAIN_CAP,
+    ) + [("CONV", "CONV", 1)]
     tot: dict[str, int] = {}
     for f, _t, c in trans_rows:
         tot[f] = tot.get(f, 0) + c
@@ -1222,7 +1230,8 @@ def markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     e_all = sum(r[3] for r in eff_rows)
     return (
-        spark_s.createDataFrame(
+        local_frame(
+            ev.sparkSession,
             [r + (e_all,) for r in eff_rows],
             "channel string, base_fp long, rm_fp long, "
             "effect_fp long, e_all long",
@@ -1597,7 +1606,7 @@ def shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # tiny; feeds two sides of the pair join
     )
     fact = F.broadcast(
-        spark_s.createDataFrame(_SHAP_FACT, "i long, f long")
+        local_frame(spark_s, _SHAP_FACT, "i long, f long")
     )
     vwith = v.select(F.col("s").alias("s2"), F.col("v_s").alias("v_with"))
     terms = (
@@ -2051,11 +2060,6 @@ def delta_method_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HUBER_T = 12
 #: Huber tuning constant (95% Gaussian efficiency), applied to the MAD
 _HUBER_K = 1.345
-#: widest cent-bucket histogram the driver solve will collect; beyond it
-#: (or on any negative bucket — the `//` == div replay needs value >= 0)
-#: the query falls back to the in-Spark IRLS. Module-level so the guard
-#: tests can shrink it.
-_HUBER_DRIVER_CAP = 2_000_000
 
 _HUBER_SQL = f"""
 WITH RECURSIVE hist AS MATERIALIZED (
@@ -2164,26 +2168,21 @@ def huber_location_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect replaces 12 broadcast-join rounds + 3 checkpoint jobs.
     # Loud guard: a domain too wide for the driver falls back to the
     # original in-Spark IRLS (identical trajectory, never wrong).
-    # r14 (ADVICE r13): the guard must bound driver memory BEFORE the
-    # collect — `limit(cap+1)` caps the rows that ever reach the driver
-    # (one pass in the common case; a full-histogram toPandas first
-    # would OOM exactly the domains the fallback exists for). A result
-    # at cap+1 rows means the domain overflowed the cap; negative
-    # buckets would break the `//` == Spark-div replay (an undeclared
-    # value>=0 invariant) — both routes fall back to the in-Spark IRLS,
-    # as does a NULL bucket (a NULL value), which has no integer replay.
-    pdf = hist.limit(_HUBER_DRIVER_CAP + 1).toPandas()
-    if (
-        len(pdf) > _HUBER_DRIVER_CAP
-        or pdf["vb"].isna().any()
-        or (len(pdf) > 0 and int(pdf["vb"].min()) < 0)
-    ):
+    # The bounded collect caps driver memory before any row arrives. A
+    # domain over the cap, a negative bucket (the `//` == Spark-div
+    # replay needs value >= 0) and a NULL bucket (a NULL value has no
+    # integer replay) all fall back to the in-Spark IRLS.
+    try:
+        rows = collect_bounded(hist, _DOMAIN_CAP)
+    except CollectCapExceeded:
+        rows = None
+    if rows is None or any(vb is None or vb < 0 for _t, vb, _c in rows):
         return _huber_irls_spark(spark, hist.localCheckpoint())
     import math as _math
 
     by_type: dict[str, dict[int, int]] = {}
-    for etype, vb, c in zip(pdf["event_type"], pdf["vb"], pdf["c"]):
-        by_type.setdefault(str(etype), {})[int(vb)] = int(c)
+    for etype, vb, c in rows:
+        by_type.setdefault(str(etype), {})[vb] = c
     out_rows = []
     for etype in sorted(by_type):
         buckets = by_type[etype]
@@ -2220,8 +2219,8 @@ def huber_location_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
                 swv += c * w * vb
             m_fp = (swv * 1_000_000) // sw
         out_rows.append((etype, n, med, mad, m_fp))
-    out = spark.createDataFrame(
-        out_rows, "event_type string, n long, med long, mad long, m_fp long"
+    out = local_frame(
+        spark, out_rows, "event_type string, n long, med long, mad long, m_fp long"
     )
     return out.select(
         "event_type",
@@ -2560,15 +2559,13 @@ def ipf_raking_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nonnegative decimals, the same overflow-free quotient
     # decomposition for the column target), so every w_fp is
     # bit-identical to the window-partitioned form this replaces.
-    cell_rows = [
-        (r["t"], r["h"], r["n"])
-        for r in ev.groupBy(
+    cell_rows = collect_bounded(
+        ev.groupBy(
             F.col("event_type").alias("t"),
             F.hour("ts").cast("long").alias("h"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    ]
+        ).agg(F.count(F.lit(1)).cast("long").alias("n")),
+        _DOMAIN_CAP,
+    )
     target_r: dict[str, int] = {}
     for t, _h, n in cell_rows:
         target_r[t] = target_r.get(t, 0) + n
@@ -2594,8 +2591,8 @@ def ipf_raking_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             (t, h): (w1[(t, h)] * target_c_fp) // csum[h]
             for t, h, _n in cell_rows
         }
-    spark_s = ev.sparkSession
-    out = spark_s.createDataFrame(
+    out = local_frame(
+        ev.sparkSession,
         [(t, h, n, w[(t, h)]) for t, h, n in cell_rows],
         "t string, h long, n long, w_fp long",
     )
@@ -3174,19 +3171,17 @@ def fs_em_parameter_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the cap — the sf0.1 fixture) reproduces Spark's empty-agg
     # semantics exactly: SUM over no rows is NULL, so every parameter is
     # NULL from round 1 on and n_pairs is NULL.
-    pat_rows = [
-        (r["g"], r["n"])
-        for r in a.join(
+    pat_rows = collect_bounded(
+        a.join(
             b,
             (F.col("a.block") == F.col("b.block"))
             & (F.col("a.p_partkey") < F.col("b.p_partkey")),
         )
         .select(g.alias("g"))
         .groupBy("g")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    ]
-    spark_s = part.sparkSession
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        16,
+    )
     fp_f = float(_EM_FP)
     if not pat_rows:
         p_fp = None
@@ -3233,7 +3228,8 @@ def fs_em_parameter_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
         for j, (name, _bit) in enumerate(_EM_FIELDS)
     ]
     return (
-        spark_s.createDataFrame(
+        local_frame(
+            part.sparkSession,
             out_rows,
             "field string, m_fp long, u_fp long, p_fp long, n_pairs long",
         )
@@ -3516,14 +3512,12 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # existed). The per-state plogp entropy terms keep their LOG inside
     # the ENGINE (one tiny job over the re-created matrix frame), so the
     # wave's libm exposure is unchanged — only the integer walk moved.
-    trans_rows = [
-        (r["f"], r["t"], r["c"])
-        for r in seq.groupBy(
+    trans_rows = collect_bounded(
+        seq.groupBy(
             F.col("prev").alias("f"), F.col("event_type").alias("t")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .collect()
-    ]
+        ).agg(F.count(F.lit(1)).cast("long").alias("c")),
+        _DOMAIN_CAP,
+    )
     tot: dict[str, int] = {}
     for f, _t, c in trans_rows:
         tot[f] = tot.get(f, 0) + c
@@ -3537,13 +3531,12 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nxt[t] = nxt.get(t, 0) + (pv * c) // tot[f]
         pi = nxt
     spark_s = ev.sparkSession
-    mat = spark_s.createDataFrame(
+    mat = local_frame(
+        spark_s,
         [(f, t, c, tot[f]) for f, t, c in trans_rows],
         "f string, t string, c long, n long",
     )
-    pi_df = spark_s.createDataFrame(
-        sorted(pi.items()), "s string, pi_fp long"
-    )
+    pi_df = local_frame(spark_s, sorted(pi.items()), "s string, pi_fp long")
     terms = (
         mat.select(
             "f",
@@ -3809,7 +3802,7 @@ def audio_dominant_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     tw = F.broadcast(
-        spark_s.createDataFrame(_DFT_TWIDDLE, "m long, c_fp long, s_fp long")
+        local_frame(spark_s, _DFT_TWIDDLE, "m long, c_fp long, s_fp long")
     )
     bins = F.broadcast(
         spark_s.range(1, _DFT_N // 2).select(F.col("id").alias("k"))
@@ -3970,10 +3963,10 @@ def image_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     cu = F.broadcast(
-        spark_s.createDataFrame(_DCT_CU, "u long, cx long, cu_fp long")
+        local_frame(spark_s, _DCT_CU, "u long, cx long, cu_fp long")
     )
     cv = F.broadcast(
-        spark_s.createDataFrame(_DCT_CV, "v long, cy long, cv_fp long")
+        local_frame(spark_s, _DCT_CV, "v long, cy long, cv_fp long")
     )
     d38 = "decimal(38,0)"
     coef = (
@@ -4157,9 +4150,8 @@ def platt_scaling_value_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame, so the reported floats' expression chain is unchanged.
     import math
 
-    cells_rows = [
-        (r["bin"], r["n_b"], r["y_b"]) for r in cells.collect()
-    ]
+    # 20 value bins plus the bin of a NULL value
+    cells_rows = collect_bounded(cells, 21)
     a_fp = 0
     b_fp = 0
     for _r in range(_PLATT_T):
@@ -4180,12 +4172,8 @@ def platt_scaling_value_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         det = h11 * h22 - h12 * h12
         a_fp = a_fp + int(math.floor((h22 * g1 - h12 * g2) / det * fp + 0.5))
         b_fp = b_fp + int(math.floor((h11 * g2 - h12 * g1) / det * fp + 0.5))
-    cells_df = spark_s.createDataFrame(
-        cells_rows, "bin long, n_b long, y_b long"
-    )
-    params = spark_s.createDataFrame(
-        [(a_fp, b_fp)], "a_fp long, b_fp long"
-    )
+    cells_df = local_frame(spark_s, cells_rows, "bin long, n_b long, y_b long")
+    params = local_frame(spark_s, [(a_fp, b_fp)], "a_fp long, b_fp long")
     j = cells_df.crossJoin(F.broadcast(params))
     lin = (
         F.col("a_fp").cast("double") / F.lit(fp) * F.col("bin")

@@ -31,6 +31,7 @@ from apache_beam_challange_spark.sources.catalog import (
     read_parquet,
     warehouse_path,
 )
+from apache_beam_challange_spark.sources.driver import local_frame
 
 # --- baseline JPEG encode -> decode reconstruction audit -----------------------
 
@@ -514,10 +515,10 @@ def image_jpeg_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spark_s = docs.sparkSession
     cu = F.broadcast(
-        spark_s.createDataFrame(_DCT_CU, "u long, cx long, cu_fp long")
+        local_frame(spark_s, _DCT_CU, "u long, cx long, cu_fp long")
     )
     cv = F.broadcast(
-        spark_s.createDataFrame(_DCT_CV, "v long, cy long, cv_fp long")
+        local_frame(spark_s, _DCT_CV, "v long, cy long, cv_fp long")
     )
     d38 = "decimal(38,0)"
     coef = (

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -12,6 +13,20 @@ from apache_beam_challange_spark.session import get_spark  # noqa: E402
 SF_DIR = "/root/testdata/sf0.001"
 #: The test corpus root; every scale factor is a sibling of SF_DIR.
 TESTDATA_ROOT = os.path.dirname(SF_DIR)
+
+
+def jobs_fired(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted under a fresh job group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = f"jobs-fired-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        jsc.clearJobGroup()
+    jsc.listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -2,10 +2,11 @@
 every family that collects a sufficient statistic and walks the fixed
 point in the driver must collect a PARAMETER-BOUNDED number of rows —
 states², slate², k·dim, domain buckets — never a corpus-sized frame.
-Each test intercepts DataFrame.collect during query construction and
-asserts the observed row counts stay within the family's formula at two
-data scales (sf0.001 and sf0.01, 10× the rows), so a future refactor
-that silently widens a collect fails here before it OOMs a driver."""
+Each test intercepts the Arrow collect behind
+``sources.driver.collect_bounded`` during query construction and asserts
+the observed row counts stay within the family's formula at two data
+scales (sf0.001 and sf0.01, 10× the rows), so a future refactor that
+silently widens a collect fails here before it OOMs a driver."""
 
 from __future__ import annotations
 
@@ -15,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 # Spark 4: classic sessions instantiate the classic DataFrame subclass,
-# which OVERRIDES collect/toPandas — patch the concrete class, not the base
+# which OVERRIDES toArrow — patch the concrete class, not the base
 from pyspark.sql.classic.dataframe import DataFrame
 
 import apache_beam_challange_spark.plans.wave4 as w4
@@ -28,16 +29,16 @@ SF_BIG = os.path.join(TESTDATA_ROOT, "sf0.01")
 
 @pytest.fixture()
 def collect_sizes(monkeypatch):
-    """Record the row count of every DataFrame.collect() in the block."""
+    """Record the row count of every Arrow collect in the block."""
     sizes: list[int] = []
-    orig = DataFrame.collect
+    orig = DataFrame.toArrow
 
     def wrapper(self):
-        rows = orig(self)
-        sizes.append(len(rows))
-        return rows
+        table = orig(self)
+        sizes.append(table.num_rows)
+        return table
 
-    monkeypatch.setattr(DataFrame, "collect", wrapper)
+    monkeypatch.setattr(DataFrame, "toArrow", wrapper)
     return sizes
 
 
@@ -128,18 +129,46 @@ def test_kmeans_collects_k_dim_per_round(spark, collect_sizes, n_vecs):
     )
 
 
-def test_huber_collect_is_capped(spark, monkeypatch):
+def test_huber_collect_is_capped(spark, collect_sizes):
     """The huber driver solve's collect is bounded by the CAP itself
     (limit(cap+1)) — even a pathologically wide value domain cannot pull
     more than cap+1 rows into the driver."""
-    sizes: list[int] = []
-    orig = DataFrame.toPandas
-
-    def wrapper(self):
-        pdf = orig(self)
-        sizes.append(len(pdf))
-        return pdf
-
-    monkeypatch.setattr(DataFrame, "toPandas", wrapper)
     w6.huber_location_by_type(spark, SF_BIG)
-    assert sizes and max(sizes) <= w6._HUBER_DRIVER_CAP + 1
+    assert collect_sizes and max(collect_sizes) <= w6._DOMAIN_CAP + 1
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_BIG])
+def test_pca_gram_collect_is_upper_triangle(spark, collect_sizes, sf_dir):
+    from apache_beam_challange_spark.plans.linalg import (
+        _DIM,
+        pca_power_iteration_top_component,
+    )
+
+    bound = _DIM * (_DIM + 1) // 2  # 2,080 at 64 dims
+    got = _max_collect(
+        spark, collect_sizes, pca_power_iteration_top_component, sf_dir
+    )
+    assert got <= bound, f"pca Gram collected {got} > {bound}"
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_BIG])
+def test_mmr_collects_candidates_and_pairs(spark, collect_sizes, sf_dir):
+    from apache_beam_challange_spark.plans.traindata import (
+        mmr_diversified_topk_vec0,
+    )
+
+    collect_sizes.clear()
+    mmr_diversified_topk_vec0(spark, sf_dir)
+    k_cand = 50
+    assert len(collect_sizes) == 2, collect_sizes
+    rel, sims = collect_sizes
+    assert rel <= k_cand, f"mmr candidates {rel} > {k_cand}"
+    assert sims <= k_cand * (k_cand - 1), f"mmr sims {sims} > 2,450"
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_BIG])
+def test_opq_collects_one_key_per_dim(spark, collect_sizes, sf_dir):
+    from apache_beam_challange_spark.plans.extensions import opq_topk_vec0
+
+    got = _max_collect(spark, collect_sizes, opq_topk_vec0, sf_dir)
+    assert got <= 64, f"opq variance keys {got} > 64 dims"

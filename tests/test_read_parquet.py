@@ -5,8 +5,6 @@ Spark's own error."""
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -15,20 +13,7 @@ from pyspark.errors import AnalysisException
 
 from apache_beam_challange_spark.sources import catalog
 from apache_beam_challange_spark.sources.catalog import load_table, read_parquet
-
-
-def _jobs_fired(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` runs, counted under a fresh job group."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    group = f"read-parquet-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        jsc.clearJobGroup()
-    jsc.listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from conftest import jobs_fired
 
 
 @pytest.fixture()
@@ -37,9 +22,9 @@ def empty_memo(monkeypatch):
 
 
 def test_second_load_table_fires_no_job(spark, sf_dir, empty_memo):
-    first = _jobs_fired(spark, lambda: load_table(spark, sf_dir, "lineitem"))
+    first = jobs_fired(spark, lambda: load_table(spark, sf_dir, "lineitem"))
     assert first >= 1, "schema inference no longer runs a job; recount"
-    assert _jobs_fired(spark, lambda: load_table(spark, sf_dir, "lineitem")) == 0
+    assert jobs_fired(spark, lambda: load_table(spark, sf_dir, "lineitem")) == 0
 
 
 def test_memoized_read_matches_inferred_read(spark, sf_dir, empty_memo):
@@ -85,7 +70,7 @@ def test_second_read_of_warehouse_dir_fires_no_job(
 
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path))
     built = minhash_sigs_at_rest(spark, sf_dir)  # materializes, then reads
-    assert _jobs_fired(spark, lambda: minhash_sigs_at_rest(spark, sf_dir)) == 0
+    assert jobs_fired(spark, lambda: minhash_sigs_at_rest(spark, sf_dir)) == 0
     again = minhash_sigs_at_rest(spark, sf_dir)
     assert again.schema == built.schema
     assert again.count() == built.count()

@@ -372,11 +372,13 @@ def test_bradley_terry_dominant_item_wins(spark):
 
 
 def test_bradley_terry_serve_plan_is_checkpoint_bounded(plans):
-    """After 4 checkpointed MM rounds the serve plan reads materialized
-    RDDs only — no lineitem rescan rides the final join."""
+    """The MM rounds run in the driver over the checkpointed pair stats;
+    the serve plan joins those materialized stats to the driver's scores
+    (a local scan) — no lineitem rescan rides the final join."""
     p = plans("bradley_terry_part_prefs")
     assert "FileScan parquet" not in p
     assert "Scan ExistingRDD" in p
+    assert "LocalTableScan" in p
 
 
 def test_holt_matches_python_replay(spark):

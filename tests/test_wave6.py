@@ -1368,9 +1368,8 @@ def test_huber_driver_solve_matches_spark_irls(spark):
 
 def test_huber_wide_domain_falls_back(spark, monkeypatch):
     """ADVICE r13 (medium): the driver-solve guard must bound the collect
-    itself (limit(cap+1) — never a full toPandas first) and a domain
-    wider than the cap must route to the in-Spark IRLS with identical
-    output rows."""
+    itself (collect_bounded's limit(cap+1)) and a domain wider than the
+    cap must route to the in-Spark IRLS with identical output rows."""
     rows = [
         _ev(i, dt.datetime(2024, 1, 1, 0, 0, i % 60), i, "view", float(i))
         for i in range(1, 40)
@@ -1387,7 +1386,7 @@ def test_huber_wide_domain_falls_back(spark, monkeypatch):
             "_huber_irls_spark",
             lambda s, h: (calls.append(1), orig(s, h))[1],
         )
-        monkeypatch.setattr(w6, "_HUBER_DRIVER_CAP", 5)
+        monkeypatch.setattr(w6, "_DOMAIN_CAP", 5)
         got = [
             tuple(r) for r in w6.huber_location_by_type(spark, d).collect()
         ]

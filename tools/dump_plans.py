@@ -4,9 +4,11 @@ partial aggregation, codegen)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 FLAGSHIPS = [
     "q2_top_pairs_ops",
@@ -50,7 +52,7 @@ FLAGSHIPS = [
     "benchmark_contamination_topk",
     # post-b11ce1f round-5 queries (VERDICT r5 #5) + round-6 reshapes.
     # mmr_diversified_topk_vec0 is absent by design: its returned frame is
-    # the driver-side greedy head-step's local result (plan = ExistingRDD);
+    # the driver-side greedy head-step's local result (plan = a local scan);
     # its distributed stages are plan-asserted via mmr_candidate_sims in
     # tests/test_plans.py. The two streaming batch-twins execute to a
     # memory sink, so their "plan" is the sink table scan — their shapes
@@ -318,7 +320,7 @@ def main() -> None:
         df = qs[name](spark, "/root/testdata/sf0.01")
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(FLAGSHIPS)} plans)")
 

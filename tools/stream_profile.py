@@ -6,15 +6,14 @@ wall. Usage: python tools/stream_profile.py <query_name> [reps]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    import os
-
     name = sys.argv[1]
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
