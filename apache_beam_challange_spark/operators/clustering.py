@@ -24,9 +24,18 @@ Scale posture (100 TB): per iteration, assignment is a narrow pass against
 a broadcast k-row codebook (no shuffle of the big side), and the update is
 one (centroid, component) aggregation — map-side combined, shuffling k*dim
 partial rows per partition. The iteration count is a small constant; each
-round's centroids are localCheckpoint-ed so lineage stays flat. This is
-the textbook distributed Lloyd shape (same as Spark MLlib's KMeans, minus
-its RNG init, which would break oracle verification).
+round's new state is that k*dim-row aggregate, collected once and fed back
+as a local relation, so lineage stays flat. This is the textbook
+distributed Lloyd shape (same as Spark MLlib's KMeans, minus its RNG init,
+which would break oracle verification).
+
+Product quantization (Jegou et al., "Product Quantization for Nearest
+Neighbor Search", TPAMI'11) is the same algorithm over ``m`` subspaces at
+once: every route below is a thin caller of four pieces — one Lloyd loop
+for all subspace codebooks (:func:`train_codebooks`), one nearest-centroid
+argmin (:func:`_nearest`), one qid-keyed ADC ranker (:func:`_adc_topk`)
+and one exact-cosine refine (:func:`_refine`). Plain k-means is the
+``m = 1`` case.
 """
 
 from __future__ import annotations
@@ -34,12 +43,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from apache_beam_challange_spark.functions.vector import as_double
+from apache_beam_challange_spark.functions.vector import as_double, cosine
 from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 #: widest vector k-means trains on (the 64-dim embedding corpus); bounds
 #: each Lloyd round's collected state at k * _MAX_DIM rows
 _MAX_DIM = 64
+
+#: the at-rest codebook schema (``pq_write_index``'s ``_codebooks`` table)
+_BOOKS_DDL = "subspace int, centroid_id long, cvec array<double>"
 
 
 def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
@@ -54,6 +66,87 @@ def _sq_l2(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
+def _subvecs(embeddings: DataFrame, m: int, dim: int) -> DataFrame:
+    """Long form ``(vec_id, label, subspace, svec)``: each vector split into
+    ``m`` contiguous ``dim // m`` slices (the whole vector when m = 1)."""
+    v = as_double(F.col("embedding"))
+    sub = dim // m
+    parts = (
+        F.array(v)
+        if m == 1
+        else F.transform(
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda j: F.slice(v, j * sub + 1, F.lit(sub)),
+        )
+    )
+    return embeddings.select(
+        "vec_id", "label", F.posexplode(parts).alias("subspace", "svec")
+    )
+
+
+def _nearest(svecs: DataFrame, books: DataFrame) -> DataFrame:
+    """The one nearest-centroid argmin: each ``(vec_id, subspace)`` row of
+    ``svecs`` against its subspace's broadcast codebook, keeping the
+    lexicographic ``(dist, centroid_id)`` minimum as a hash aggregate over
+    ``min(struct(...))``. Returns ``(vec_id, label, subspace, dist,
+    centroid_id, svec)``. Serves the Lloyd step, PQ encoding and
+    :func:`kmeans_assignments`."""
+    return (
+        svecs.join(F.broadcast(books), "subspace")
+        .withColumn("dist", _sq_l2(F.col("svec"), F.col("cvec")))
+        .groupBy("vec_id", "label", "subspace")
+        .agg(F.min(F.struct("dist", "centroid_id", "svec")).alias("b"))
+        .select("vec_id", "label", "subspace", "b.*")
+    )
+
+
+def train_codebooks(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    n_iter: int,
+    scale: int,
+    dim: int,
+    init: DataFrame | None = None,
+) -> DataFrame:
+    """Train all ``m`` subspace codebooks in ONE Lloyd loop: ``n_iter``
+    rounds, returning ``(subspace, centroid_id, cvec)``. Every vector is
+    posexploded into its subspaces and joined to the broadcast books on
+    ``subspace``, so one round is one assignment pass, one fixed-point
+    ``(subspace, centroid_id, pos)`` aggregate and one driver collect of at
+    most ``k * _MAX_DIM`` rows — for any ``m``.
+
+    ``init`` (same schema) resumes from STORED books instead of the
+    deterministic first-k seed: every update is a deterministic
+    fixed-point function of (input, books), so resuming from the stored
+    round-r state and running n more rounds is BIT-IDENTICAL to training
+    r+n rounds from the seed."""
+    spark = embeddings.sparkSession
+    svecs = _subvecs(embeddings, m, dim)
+    seed = svecs.filter(F.col("vec_id") < k)
+    books = init if init is not None else seed.selectExpr(
+        "subspace", "vec_id AS centroid_id", "svec AS cvec"
+    )
+    # each round's NEW state is the parameter-bounded sufficient statistic
+    # (subspace, centroid_id, pos, s, n); the driver computes
+    # cval = s / (n * scale) with the same IEEE ops (long->double casts,
+    # one multiply, one divide) the DuckDB twin performs
+    for _ in range(n_iter):
+        comp = _nearest(svecs, books).select(
+            "subspace", "centroid_id", F.posexplode("svec").alias("pos", "val")
+        )
+        sums = comp.groupBy("subspace", "centroid_id", "pos").agg(
+            F.sum(F.floor(F.col("val") * scale + 0.5).cast("long")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        state: dict[tuple[int, int], list[tuple[int, float]]] = {}
+        for sj, cid, pos, s, n in collect_bounded(sums, k * _MAX_DIM):
+            state.setdefault((sj, cid), []).append((pos, s / (n * float(scale))))
+        rows = [(*key, [v for _, v in sorted(pv)]) for key, pv in sorted(state.items())]
+        books = local_frame(spark, rows, _BOOKS_DDL)
+    return books
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 4,
@@ -63,68 +156,18 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Train the codebook: ``n_iter`` Lloyd rounds, returning
     ``(centroid_id, cvec)`` — the coarse quantizer an IVF index consumes
-    (:func:`operators.similarity.ivf_topk_with_centroids`).
+    (:func:`operators.similarity.ivf_topk_with_centroids`). The ``m = 1``
+    case of :func:`train_codebooks`.
 
     ``init_cents`` (a ``(centroid_id, cvec)`` frame) resumes training
-    from STORED centroids instead of the deterministic first-k seed —
-    the incremental re-training contract: because every update is a
-    deterministic fixed-point function of (input, centroids), resuming
-    from the exact stored round-m state and running n more rounds is
-    BIT-IDENTICAL to training m+n rounds from the seed. The oracle for
-    ``ivf_retrain_topk_vec0`` states exactly that (a from-scratch
-    3-round CTE chain against the engine's stored-2+1 route)."""
-    spark = embeddings.sparkSession
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    cents = (
-        init_cents.select("centroid_id", "cvec")
-        if init_cents is not None
-        else vecs.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("centroid_id"), F.col("vec").alias("cvec")
-        )
-    )
-    # r13 (guide §1.2 — the ANN-serve/solver driver-core discipline):
-    # each Lloyd round's NEW state is the parameter-bounded sufficient
-    # statistic (centroid_id, pos, s, n) — at most k*dim rows, corpus-
-    # independent — so one collect per round replaces the eager
-    # per-round localCheckpoint job + the array-reassembly groupBy +
-    # the broadcast sub-job over the prior round's lineage. The driver
-    # computes cval = s / (n * scale) with the IDENTICAL IEEE ops the
-    # removed Spark expression performed (long->double casts, one
-    # multiply, one divide), then re-injects the centroids as a literal
-    # local relation. The data-sized passes (assignment + per-dimension
-    # fixed-point sums) stay in Spark, map-side combined; the in-loop
-    # arg-min is a hash aggregate over min(struct(dist, centroid_id,
-    # vec)) — the same (dist, centroid_id) lexicographic pick the old
-    # row_number window made, without the per-round sort.
-    for _ in range(n_iter):
-        best = (
-            vecs.crossJoin(F.broadcast(cents))
-            .withColumn("dist", _sq_l2(F.col("vec"), F.col("cvec")))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "centroid_id", "vec")).alias("b"))
-            .select(F.col("b.centroid_id").alias("centroid_id"), F.col("b.vec").alias("vec"))
-        )
-        comp = best.select(
-            "centroid_id", F.posexplode("vec").alias("pos", "val")
-        )
-        sums = comp.groupBy("centroid_id", "pos").agg(
-            F.sum(F.floor(F.col("val") * scale + 0.5).cast("long")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        state: dict[int, list[tuple[int, float]]] = {}
-        for cid, pos, s, n in collect_bounded(sums, k * _MAX_DIM):
-            state.setdefault(cid, []).append((pos, s / (n * float(scale))))
-        cents = local_frame(
-            spark,
-            [
-                (cid, [v for _, v in sorted(pvs)])
-                for cid, pvs in sorted(state.items())
-            ],
-            "centroid_id long, cvec array<double>",
-        )
-    return cents
+    from STORED centroids — the incremental re-training contract. The
+    oracle for ``ivf_retrain_topk_vec0`` states exactly that (a
+    from-scratch 3-round CTE chain against the engine's stored-2+1
+    route)."""
+    if init_cents is not None:
+        init_cents = init_cents.select(F.lit(0).alias("subspace"), "centroid_id", "cvec")
+    books = train_codebooks(embeddings, 1, k, n_iter, scale, _MAX_DIM, init_cents)
+    return books.select("centroid_id", "cvec")
 
 
 def kmeans_assignments(
@@ -140,22 +183,9 @@ def kmeans_assignments(
     input (fixed-point sums — see module docstring), so the full trajectory
     is reproducible in SQL by unrolling the iterations.
     """
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    cents = kmeans_centroids(embeddings, k=k, n_iter=n_iter, scale=scale)
-    w = Window.partitionBy("vec_id").orderBy("dist", "centroid_id")
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("dist", _sq_l2(F.col("vec"), F.col("cvec")))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            "vec_id",
-            "label",
-            "centroid_id",
-            F.round(F.col("dist"), 6).alias("dist"),
-        )
+    books = train_codebooks(embeddings, 1, k, n_iter, scale, _MAX_DIM)
+    return _nearest(_subvecs(embeddings, 1, _MAX_DIM), books).select(
+        "vec_id", "label", "centroid_id", F.round(F.col("dist"), 6).alias("dist")
     )
 
 
@@ -236,6 +266,102 @@ FROM (
     )
 
 
+def _codes(m: int) -> list[str]:
+    return [f"code_{i}" for i in range(m)]
+
+
+def _encode(embeddings: DataFrame, books: DataFrame, m: int, dim: int) -> DataFrame:
+    """Encode every vector against ``books``: ``(vec_id, label, code_0 ..
+    code_{m-1})`` — the compressed representation an at-rest PQ index
+    stores instead of float vectors."""
+    return (
+        _nearest(_subvecs(embeddings, m, dim), books)
+        .groupBy("vec_id", "label")
+        .pivot("subspace", list(range(m)))
+        .agg(F.max("centroid_id"))
+        .toDF("vec_id", "label", *_codes(m))
+    )
+
+
+def _adc_topk(
+    embeddings: DataFrame,
+    cand: DataFrame,
+    books: DataFrame,
+    qids: list[int],
+    k_results: int,
+    m: int,
+    dim: int,
+) -> DataFrame:
+    """The one ADC ranker: top ``k_results`` per query by ``(adc_dist,
+    vec_id)`` over ``cand`` — ``(qid, vec_id, label, code_0 .. code_{m-1})``
+    rows, the query's own vector excluded — returning ``(query_vec_id,
+    vec_id, label, adc_dist)``.
+
+    The ``(qid, subspace, code, p)`` lookup table comes from the books in
+    one join (``p`` is the squared ``list_distance``: sqrt then square, as
+    the oracles compute it) and rides one broadcast as a per-qid map. A
+    candidate's distance is the left-to-right fold ``p_0 + .. + p_{m-1}``
+    in subspace order — never a SUM aggregate, whose float reassociation
+    would break the oracle hash."""
+    queries = embeddings.filter(F.col("vec_id").isin(qids))
+    qsub = _subvecs(queries, m, dim).selectExpr("vec_id AS qid", "subspace", "svec")
+    d = _sq_l2(F.col("cvec"), F.col("svec"))
+    entry = F.struct(F.struct("subspace", "centroid_id"), d * d)
+    lut = (
+        books.join(F.broadcast(qsub), "subspace")
+        .groupBy("qid")
+        .agg(F.map_from_entries(F.collect_list(entry)).alias("lut"))
+    )
+    codes = F.array(*_codes(m))
+    adc = F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, j: acc + F.element_at(
+            "lut", F.struct(j.alias("subspace"), codes[j].alias("centroid_id"))
+        ),
+    )
+    w = Window.partitionBy("query_vec_id").orderBy("adc_dist", "vec_id")
+    return (
+        cand.filter(F.col("vec_id") != F.col("qid"))
+        .join(F.broadcast(lut), "qid")
+        .select(
+            F.col("qid").alias("query_vec_id"), "vec_id", "label",
+            F.round(adc, 6).alias("adc_dist"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k_results)
+        .drop("rk")
+    )
+
+
+def _refine(
+    embeddings: DataFrame, shortlist: DataFrame, query_vec_id: int, k_results: int
+) -> DataFrame:
+    """The one exact-cosine refine: re-rank the ``shortlist`` ids (one
+    broadcast semi-join back to the float vectors — exact math touches
+    only those rows) by cosine against the query, top ``k_results``."""
+    from apache_beam_challange_spark.operators.similarity import _query_vec
+
+    vec = as_double(F.col("embedding"))
+    vecs = embeddings.select("vec_id", "label", vec.alias("vec"))
+    return (
+        vecs.join(F.broadcast(shortlist.select("vec_id")), "vec_id")
+        .crossJoin(F.broadcast(_query_vec(embeddings, query_vec_id)))
+        .select(
+            "vec_id",
+            "label",
+            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
+        )
+        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
+        .limit(k_results)
+    )
+
+
+def _single(ranked: DataFrame) -> DataFrame:
+    """A batch-of-one ADC ranking in the single-query result shape."""
+    return ranked.select("vec_id", "label", "adc_dist").orderBy("adc_dist", "vec_id")
+
+
 def pq_topk(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -258,11 +384,12 @@ def pq_topk(
     distance is the sum of its codes' entries — no float vector is ever
     read at query time.
 
-    Scale posture: codebook training touches the data ``m * n_iter`` times
-    (narrow broadcast passes); encoding is one narrow pass; a query scans
-    only the m-code table (bytes per row, not KB) — the entire point at
-    100 TB. Deterministic end to end (fixed-point Lloyd + rounded final
-    ADC), so the whole trajectory is SQL-reproducible.
+    Scale posture: codebook training touches the data ``n_iter`` times
+    (narrow broadcast passes, all subspaces at once); encoding is one
+    narrow pass; a query scans only the m-code table (bytes per row, not
+    KB) — the entire point at 100 TB. Deterministic end to end
+    (fixed-point Lloyd + rounded final ADC), so the whole trajectory is
+    SQL-reproducible.
 
     Returns top ``k_results`` by ``(adc_dist asc, vec_id)``, excluding the
     query vector. With ``candidates`` (a DataFrame with a ``vec_id``
@@ -270,50 +397,13 @@ def pq_topk(
     restricted to that set — the full IVF+PQ composition: coarse lists for
     recall, compressed codes for ranking.
     """
-    sub = dim // m
-    out = embeddings.select("vec_id", "label")
+    books = train_codebooks(embeddings, m, k, n_iter, scale, dim)
+    cand = _encode(embeddings, books, m, dim)
     if candidates is not None:
-        out = out.join(candidates.select("vec_id"), "vec_id")
-    adc_terms = []
-    for j in range(m):
-        sub_df = embeddings.select(
-            "vec_id",
-            "label",
-            F.slice(as_double(F.col("embedding")), j * sub + 1, sub).alias(
-                "embedding"
-            ),
-        )
-        cents = kmeans_centroids(sub_df, k=k, n_iter=n_iter, scale=scale)
-        w = Window.partitionBy("vec_id").orderBy("dist", "centroid_id")
-        codes = (
-            sub_df.select("vec_id", F.col("embedding").alias("svec"))
-            .crossJoin(F.broadcast(cents))
-            .withColumn("dist", _sq_l2(F.col("svec"), F.col("cvec")))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", F.col("centroid_id").alias(f"code_{j}"))
-        )
-        qsub = sub_df.filter(F.col("vec_id") == query_vec_id).select(
-            F.col("embedding").alias("qvec")
-        )
-        lut = (
-            cents.crossJoin(F.broadcast(qsub))
-            .withColumn("__d", _sq_l2(F.col("cvec"), F.col("qvec")))
-            .select(
-                F.col("centroid_id").alias(f"code_{j}"),
-                (F.col("__d") * F.col("__d")).alias(f"p_{j}"),
-            )
-        )
-        out = out.join(codes, "vec_id").join(F.broadcast(lut), f"code_{j}")
-        adc_terms.append(F.col(f"p_{j}"))
-    adc = adc_terms[0]
-    for t in adc_terms[1:]:
-        adc = adc + t
-    return (
-        out.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-        .limit(k_results)
+        cand = cand.join(candidates.select("vec_id"), "vec_id")
+    cand = cand.withColumn("qid", F.lit(query_vec_id).cast("long"))
+    return _single(
+        _adc_topk(embeddings, cand, books, [query_vec_id], k_results, m, dim)
     )
 
 
@@ -435,82 +525,18 @@ def ivfpq_refined_topk(
     corpus. Recall rises from ADC-rank quality to probe-coverage quality
     (the IVF recall ceiling), the canonical IVFADC+R design (Jegou et al.
     TPAMI'11 §V "re-ranking with source coding")."""
-    from apache_beam_challange_spark.functions.vector import cosine
     from apache_beam_challange_spark.operators.similarity import (
-        _query_vec,
+        centroid_table,
         ivf_candidates,
     )
 
-    coarse_cents = embeddings.filter(
-        F.col("vec_id").isin(list(coarse_ids))
-    ).select(
-        F.col("vec_id").alias("centroid_id"),
-        as_double(F.col("embedding")).alias("cvec"),
+    cand = ivf_candidates(
+        embeddings, centroid_table(embeddings, coarse_ids), query_vec_id, n_probe=n_probe
     )
-    cand = ivf_candidates(embeddings, coarse_cents, query_vec_id, n_probe=n_probe)
     shortlist = pq_topk(
-        embeddings,
-        query_vec_id=query_vec_id,
-        k_results=n_refine,
-        m=m,
-        k=k,
-        n_iter=n_iter,
-        scale=scale,
-        dim=dim,
-        candidates=cand,
-    ).select("vec_id")
-    q = _query_vec(embeddings, query_vec_id)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
+        embeddings, query_vec_id, n_refine, m, k, n_iter, scale, dim, candidates=cand
     )
-    return (
-        vecs.join(F.broadcast(shortlist), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k_results)
-    )
-
-
-def _pq_sub(embeddings: DataFrame, j: int, sub: int) -> DataFrame:
-    return embeddings.select(
-        "vec_id",
-        "label",
-        F.slice(as_double(F.col("embedding")), j * sub + 1, sub).alias("embedding"),
-    )
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    m: int = 4,
-    k: int = 4,
-    n_iter: int = 1,
-    scale: int = 10_000,
-    dim: int = 64,
-) -> DataFrame:
-    """Encode every vector to its ``m`` PQ codes:
-    ``(vec_id, label, code_0 .. code_{m-1})`` — the compressed
-    representation an at-rest PQ index stores instead of float vectors."""
-    sub = dim // m
-    out = embeddings.select("vec_id", "label")
-    for j in range(m):
-        sub_df = _pq_sub(embeddings, j, sub)
-        cents = kmeans_centroids(sub_df, k=k, n_iter=n_iter, scale=scale)
-        w = Window.partitionBy("vec_id").orderBy("dist", "centroid_id")
-        codes = (
-            sub_df.select("vec_id", F.col("embedding").alias("svec"))
-            .crossJoin(F.broadcast(cents))
-            .withColumn("dist", _sq_l2(F.col("svec"), F.col("cvec")))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("vec_id", F.col("centroid_id").alias(f"code_{j}"))
-        )
-        out = out.join(codes, "vec_id")
-    return out
+    return _refine(embeddings, shortlist, query_vec_id, k_results)
 
 
 def pq_write_index(
@@ -524,113 +550,57 @@ def pq_write_index(
     dim: int = 64,
 ) -> None:
     """Materialize the full IVF+PQ index AT REST: the codes table
-    (``pq_encode`` output — bytes per row) plus each vector's coarse
-    inverted-list assignment, hive-partitioned by ``centroid_id``. At
-    100 TB this is the artifact vector search actually serves from: a
-    query opens only the ``n_probe`` probed partition directories of a
-    table that is ~1000x smaller than the embeddings.
+    (``code_0 .. code_{m-1}`` per vector — bytes per row) plus each
+    vector's coarse inverted-list assignment, hive-partitioned by
+    ``centroid_id``. At 100 TB this is the artifact vector search actually
+    serves from: a query opens only the ``n_probe`` probed partition
+    directories of a table that is ~1000x smaller than the embeddings.
 
-    The index is a TWO-PART artifact (codes table + stored codebooks).
-    Commit order matters for crash safety: the codebooks are written
-    FIRST and the codes table LAST, so the codes' ``_SUCCESS`` is the
-    final commit of the whole artifact — a crash between the two writes
-    leaves no ``_SUCCESS`` on the codes dir and readers (which gate on
+    The index is a TWO-PART artifact (codes table + stored codebooks),
+    both from ONE training: the books are trained once, written, and the
+    codes encoded against the same books. Commit order matters for crash
+    safety: the codebooks are written FIRST and the codes table LAST, so
+    the codes' ``_SUCCESS`` is the final commit of the whole artifact — a
+    crash between the two writes leaves no ``_SUCCESS`` on the codes dir
+    and readers (which gate on
     :func:`~apache_beam_challange_spark.sources.catalog.is_materialized`
     over BOTH directories) rebuild instead of serving a torn index."""
     from apache_beam_challange_spark.operators.similarity import ivf_assignments
 
-    # The trained per-subspace codebooks are part of the index artifact:
-    # serving rebuilds only the query's m*k LUT entries from them instead
-    # of re-running k-means per query (m narrow passes saved per lookup).
-    sub = dim // m
-    books = None
-    for j in range(m):
-        cents = kmeans_centroids(
-            _pq_sub(embeddings, j, sub), k=k, n_iter=n_iter, scale=scale
-        ).select(F.lit(j).alias("subspace"), "centroid_id", "cvec")
-        books = cents if books is None else books.unionByName(cents)
+    # serving rebuilds only the query's m*k LUT entries from the stored
+    # books instead of re-running k-means per query
+    books = train_codebooks(embeddings, m, k, n_iter, scale, dim)
     books.coalesce(1).write.mode("overwrite").parquet(path + "_codebooks")
-
-    codes = pq_encode(embeddings, m=m, k=k, n_iter=n_iter, scale=scale, dim=dim)
-    coarse = ivf_assignments(embeddings, coarse_ids).select(
-        "vec_id", "centroid_id"
-    )
-    codes.join(coarse, "vec_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(path)
+    coarse = ivf_assignments(embeddings, coarse_ids).select("vec_id", "centroid_id")
+    _encode(embeddings, books, m, dim).join(coarse, "vec_id").write.mode(
+        "overwrite"
+    ).partitionBy("centroid_id").parquet(path)
 
 
 def ivfpq_topk_indexed(
     embeddings: DataFrame,
     index: DataFrame,
+    codebooks: DataFrame,
     query_vec_id: int = 0,
     k_results: int = 20,
     coarse_ids: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7),
     n_probe: int = 2,
     m: int = 4,
-    k: int = 4,
-    n_iter: int = 1,
-    scale: int = 10_000,
     dim: int = 64,
-    codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """IVF+PQ served from the materialized index: probe the coarse lists
     (tiny broadcast ranking), join the index on its PARTITION column so
     dynamic partition pruning skips every non-probed list at the file
-    level, then rank by summed ADC lookups — no float vector of the
-    corpus is read at any point. With ``codebooks`` (the stored
-    ``pq_write_index`` sibling table — the serving path), the query's ADC
-    lookup tables come from m*k tiny stored rows and NOTHING is
-    re-trained at query time; without it each subspace codebook is
-    re-derived deterministically (the self-contained baseline, m k-means
-    passes per query)."""
-    from apache_beam_challange_spark.functions.vector import cosine
-    from apache_beam_challange_spark.operators.similarity import _query_vec
-
-    sub = dim // m
-    # shared serve-path helpers — the same codebook + probe definitions
-    # the IVF build/serve/append paths use (operators/similarity.py), so
-    # the routes can never drift on tie-break or metric
-    from apache_beam_challange_spark.operators.similarity import (
-        centroid_table,
-        probe_centroids,
-    )
-
-    coarse_cents = centroid_table(embeddings, coarse_ids)
-    q = _query_vec(embeddings, query_vec_id)
-    probes = probe_centroids(coarse_cents, q, n_probe)
-    out = index.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != query_vec_id
-    )
-    adc_terms = []
-    for j in range(m):
-        sub_df = _pq_sub(embeddings, j, sub)
-        if codebooks is not None:
-            cents = codebooks.filter(F.col("subspace") == j).select(
-                "centroid_id", "cvec"
-            )
-        else:
-            cents = kmeans_centroids(sub_df, k=k, n_iter=n_iter, scale=scale)
-        qsub = sub_df.filter(F.col("vec_id") == query_vec_id).select(
-            F.col("embedding").alias("qvec")
+    level, then rank by ADC lookups — no float vector of the corpus is
+    read at any point. The query's lookup table comes from the STORED
+    ``codebooks`` (the ``pq_write_index`` sibling table, m*k tiny rows);
+    nothing is trained at query time. A batch of one of
+    :func:`ivfpq_knn_join_indexed`."""
+    return _single(
+        ivfpq_knn_join_indexed(
+            embeddings, index, codebooks, [query_vec_id], k_results,
+            coarse_ids, n_probe, m, dim,
         )
-        lut = (
-            cents.crossJoin(F.broadcast(qsub))
-            .withColumn("__d", _sq_l2(F.col("cvec"), F.col("qvec")))
-            .select(
-                F.col("centroid_id").alias(f"code_{j}"),
-                (F.col("__d") * F.col("__d")).alias(f"p_{j}"),
-            )
-        )
-        out = out.join(F.broadcast(lut), f"code_{j}")
-        adc_terms.append(F.col(f"p_{j}"))
-    adc = adc_terms[0]
-    for t in adc_terms[1:]:
-        adc = adc + t
-    return (
-        out.select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-        .limit(k_results)
     )
 
 
@@ -644,75 +614,22 @@ def ivfpq_refined_topk_indexed(
     coarse_ids: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7),
     n_probe: int = 2,
     m: int = 4,
-    scale: int = 10_000,
     dim: int = 64,
 ) -> DataFrame:
     """The production IVFPQ+refine SERVING path: coarse probes prune the
     at-rest codes table at the file level (dynamic partition pruning on
-    its ``centroid_id`` partitioning), the query's ADC lookup tables come
+    its ``centroid_id`` partitioning), the query's ADC lookup table comes
     from the STORED ``codebooks`` (``pq_write_index`` writes them beside
     the codes — m*k tiny rows; nothing is re-trained at query time), the
     ADC top ``n_refine`` shortlist is exact-rerank'd against the float
     vectors. Identical results to :func:`ivfpq_refined_topk`; query-time
-    work drops from (m k-means trainings + full encode) to (one pruned
-    codes scan + m broadcast LUT joins + an n_refine-row rerank)."""
-    from apache_beam_challange_spark.functions.vector import cosine
-    from apache_beam_challange_spark.operators.similarity import _query_vec
-
-    sub = dim // m
-    # shared serve-path helpers — the same codebook + probe definitions
-    # the IVF build/serve/append paths use (operators/similarity.py), so
-    # the routes can never drift on tie-break or metric
-    from apache_beam_challange_spark.operators.similarity import (
-        centroid_table,
-        probe_centroids,
+    work drops from (one k-means training + full encode) to (one pruned
+    codes scan + one broadcast LUT join + an n_refine-row rerank)."""
+    shortlist = ivfpq_knn_join_indexed(
+        embeddings, index, codebooks, [query_vec_id], n_refine,
+        coarse_ids, n_probe, m, dim,
     )
-
-    coarse_cents = centroid_table(embeddings, coarse_ids)
-    q = _query_vec(embeddings, query_vec_id)
-    probes = probe_centroids(coarse_cents, q, n_probe)
-    out = index.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != query_vec_id
-    )
-    adc_terms = []
-    for j in range(m):
-        qsub = _pq_sub(embeddings, j, sub).filter(
-            F.col("vec_id") == query_vec_id
-        ).select(F.col("embedding").alias("qvec"))
-        lut = (
-            codebooks.filter(F.col("subspace") == j)
-            .crossJoin(F.broadcast(qsub))
-            .withColumn("__d", _sq_l2(F.col("cvec"), F.col("qvec")))
-            .select(
-                F.col("centroid_id").alias(f"code_{j}"),
-                (F.col("__d") * F.col("__d")).alias(f"p_{j}"),
-            )
-        )
-        out = out.join(F.broadcast(lut), f"code_{j}")
-        adc_terms.append(F.col(f"p_{j}"))
-    adc = adc_terms[0]
-    for t in adc_terms[1:]:
-        adc = adc + t
-    shortlist = (
-        out.select("vec_id", F.round(adc, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-        .limit(n_refine)
-        .select("vec_id")
-    )
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    return (
-        vecs.join(F.broadcast(shortlist), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k_results)
-    )
+    return _refine(embeddings, shortlist, query_vec_id, k_results)
 
 
 def opq_variance_keys(
@@ -788,23 +705,13 @@ def opq_topk(
             "action) and pass opq_allocation_from_keys(rows) — engine "
             "operators perform no collect themselves"
         )
-    order = [d for group in subs for d in group]
     v = as_double(F.col("embedding"))
     permuted = embeddings.select(
         "vec_id",
         "label",
-        F.array(*[v.getItem(d - 1) for d in order]).alias("embedding"),
+        F.array(*[v.getItem(d - 1) for group in subs for d in group]).alias("embedding"),
     )
-    return pq_topk(
-        permuted,
-        query_vec_id=query_vec_id,
-        k_results=k_results,
-        m=m,
-        k=k,
-        n_iter=n_iter,
-        scale=scale,
-        dim=dim,
-    )
+    return pq_topk(permuted, query_vec_id, k_results, m, k, n_iter, scale, dim)
 
 
 def opq_alloc_ctes(m: int = 4, dim: int = 64, scale: int = 10_000) -> str:
@@ -890,64 +797,20 @@ def ivfpq_knn_join_indexed(
     whole query set ranks the broadcast coarse codebook in one window
     (`probe_centroids_batch`), the (qid, centroid_id) probe pairs join
     the index partition column (DPP opens the union of probed list
-    directories once), and each subspace's ADC lookup table is built for
-    ALL queries in one broadcast (qid, code_j, p_j) join — queries*m*k
-    tiny rows. One windowed rank serves every query; no corpus float
-    vector is read and no stage repeats per query."""
-    from pyspark.sql import Window
-
-    from apache_beam_challange_spark.functions.vector import as_double
+    directories once), and the ADC lookup table is built for ALL queries
+    in one broadcast — queries*m*k tiny rows. One windowed rank serves
+    every query; no corpus float vector is read and no stage repeats per
+    query."""
     from apache_beam_challange_spark.operators.similarity import (
         centroid_table,
         probe_centroids_batch,
     )
 
-    sub = dim // m
     qids = list(query_ids)
-    coarse_cents = centroid_table(embeddings, coarse_ids)
     qvecs = embeddings.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"),
-        as_double(F.col("embedding")).alias("qvec"),
+        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qvec")
     )
-    probes = probe_centroids_batch(coarse_cents, qvecs, n_probe)
-    out = index.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    adc_terms = []
-    for j in range(m):
-        sub_df = _pq_sub(embeddings, j, sub)
-        cents = codebooks.filter(F.col("subspace") == j).select(
-            "centroid_id", "cvec"
-        )
-        qsub = sub_df.filter(F.col("vec_id").isin(qids)).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("__qsub"),
-        )
-        lut = (
-            cents.crossJoin(F.broadcast(qsub))
-            .withColumn("__d", _sq_l2(F.col("cvec"), F.col("__qsub")))
-            .select(
-                "qid",
-                F.col("centroid_id").alias(f"code_{j}"),
-                (F.col("__d") * F.col("__d")).alias(f"p_{j}"),
-            )
-        )
-        out = out.join(F.broadcast(lut), ["qid", f"code_{j}"])
-        adc_terms.append(F.col(f"p_{j}"))
-    adc = adc_terms[0]
-    for t in adc_terms[1:]:
-        adc = adc + t
-    wk = Window.partitionBy("query_vec_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id")
-    )
-    return (
-        out.select(
-            F.col("qid").alias("query_vec_id"),
-            "vec_id",
-            "label",
-            F.round(adc, 6).alias("adc_dist"),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k_results)
-        .drop("rk")
-    )
+    cents = centroid_table(embeddings, coarse_ids)
+    probes = probe_centroids_batch(cents, qvecs, n_probe)
+    cand = index.join(F.broadcast(probes), "centroid_id")
+    return _adc_topk(embeddings, cand, codebooks, qids, k_results, m, dim)

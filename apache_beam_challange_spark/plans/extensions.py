@@ -1445,9 +1445,9 @@ def ivfpq_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH `knn_join_lsh_vec10`, MIPS `mips_knn_join_vec10`, graph
     `nsw_knn_join_vec10`, and now the compressed-codes route). The whole
     query set probes the coarse codebook in one window, the probe pairs
-    DPP-prune the partitioned codes table once, and all ten ADC lookup
-    tables ride one broadcast join per subspace; no corpus float vector
-    is read. The oracle reuses the verified IVF + PQ CTE chains with the
+    DPP-prune the partitioned codes table once, and all ten queries' ADC
+    lookup tables ride one broadcast join; no corpus float vector is
+    read. The oracle reuses the verified IVF + PQ CTE chains with the
     LUT and ranking stages partitioned by qid."""
     from apache_beam_challange_spark.operators.clustering import (
         ivfpq_knn_join_indexed,

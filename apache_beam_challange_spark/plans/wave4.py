@@ -877,7 +877,7 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the one data-sized pass is the slate-filtered basket
     aggregate (pushdown via broadcast semi-join on the 16-part slate);
     the quadratic stage is SLATE-bounded (16x15 ordered pairs), and the
-    4 MM rounds run on 240-row frames checkpointed per round."""
+    4 MM rounds run in the driver over the 240 collected pair rows."""
     li = load_table(spark, sf_dir, "lineitem")
     sv, st, k = _BT_SV, _BT_ST, _BT_SLATE
     slate = (
@@ -932,26 +932,21 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n2"),
         )
-        .localCheckpoint()
     )
-    wtot = prs.groupBy("pa").agg(
-        F.sum("w2").cast("long").alias("w2tot"),
-        F.count(F.lit(1)).cast("long").alias("n_opp"),
-    )
-    # r13 (the wave6 driver-solve discipline): the MM rounds walk a
+    # The wave6 driver-solve discipline: the MM rounds walk a
     # PARAMETER-BOUNDED frame — prs is slate^2 = 240 rows regardless of
-    # corpus size — so the trajectory runs in the driver after ONE
-    # collect of the checkpointed pair stats: exact Python-int MM terms
-    # (all operands positive, so // == Spark's div), and the one float
-    # normalization replays the identical IEEE chain (long->double
-    # casts, multiply, divide, floor — same left association). Replaces
-    # 4 rounds x (2 broadcasts + join + agg + checkpoint job) with zero
-    # in-loop Spark jobs; the data-sized slate/basket aggregates and the
-    # final join/ordering stay in Spark unchanged.
+    # corpus size — so the trajectory and the per-part win totals run in
+    # the driver after ONE collect of the pair stats: exact Python-int MM
+    # terms (all operands positive, so // == Spark's div), and the one
+    # float normalization replays the identical IEEE chain (long->double
+    # casts, multiply, divide, floor — same left association). Only the
+    # data-sized slate/basket aggregates run in Spark.
     pr_rows = collect_bounded(prs, k * (k - 1))
     w2tot_d: dict[int, int] = {}
+    n_opp_d: dict[int, int] = {}
     for pa, _pb, w2, n2 in pr_rows:
         w2tot_d[pa] = w2tot_d.get(pa, 0) + w2
+        n_opp_d[pa] = n_opp_d.get(pa, 0) + 1
     import math as _math
 
     s_d: dict[int, int] = {pa: sv for pa in w2tot_d}
@@ -968,16 +963,17 @@ def bradley_terry_part_prefs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for pa, sp in sp_d.items()
         }
-    scores = local_frame(spark, sorted(s_d.items()), "pk long, s long")
-    return (
-        scores.join(wtot, scores.pk == wtot.pa)
-        .select(
-            F.col("pk").alias("p_partkey"),
-            ((F.col("w2tot") - F.col("n_opp")) / F.lit(2)).cast("long").alias("wins"),
-            (F.col("s").cast("double") / F.lit(float(sv))).alias("bt_score"),
-        )
-        .orderBy(F.col("bt_score").desc(), "p_partkey")
+    # w2tot = 2*wins + n_opp, so the difference is always even
+    scores = local_frame(
+        spark,
+        [(pa, (w2tot_d[pa] - n_opp_d[pa]) // 2, s) for pa, s in sorted(s_d.items())],
+        "p_partkey long, wins long, s long",
     )
+    return scores.select(
+        "p_partkey",
+        "wins",
+        (F.col("s").cast("double") / F.lit(float(sv))).alias("bt_score"),
+    ).orderBy(F.col("bt_score").desc(), "p_partkey")
 
 
 # --- Holt linear-trend forecast backtest ---------------------------------------

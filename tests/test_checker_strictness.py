@@ -9,13 +9,18 @@ the strict behavior so the leniency can never silently return.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
+
+_CHECKER = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tools",
+    "check_correctness.py",
+)
 
 
 def _checker():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", "/root/repo/tools/check_correctness.py"
-    )
+    spec = importlib.util.spec_from_file_location("check_correctness", _CHECKER)
     mod = importlib.util.module_from_spec(spec)
     sys.modules.setdefault("check_correctness", mod)
     spec.loader.exec_module(mod)

@@ -3,6 +3,7 @@ from __future__ import annotations
 import glob
 
 from apache_beam_challange_spark.cli import main
+from conftest import TESTDATA_ROOT
 
 
 def test_cli_total_distance(spark, sf_dir, tmp_path):
@@ -51,9 +52,9 @@ def test_cli_cycle_rides_faithful_swaps(spark, tmp_path):
     from apache_beam_challange_spark.cli import main
 
     sane, swapped = str(tmp_path / "sane"), str(tmp_path / "swapped")
-    main(["cycle-rides", "--sf-dir", "/root/testdata/sf0.001",
+    main(["cycle-rides", "--sf-dir", f"{TESTDATA_ROOT}/sf0.001",
           "--output", sane, "--top-n", "5"], spark=spark)
-    main(["cycle-rides", "--sf-dir", "/root/testdata/sf0.001",
+    main(["cycle-rides", "--sf-dir", f"{TESTDATA_ROOT}/sf0.001",
           "--output", swapped, "--top-n", "5", "--faithful"], spark=spark)
 
     def rows(path):

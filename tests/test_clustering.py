@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from apache_beam_challange_spark.operators.clustering import kmeans_assignments
+from conftest import TESTDATA_ROOT
 
 
 def _emb(spark, rows):
@@ -113,7 +114,7 @@ def test_opq_allocation_balances_and_recall_not_regressed(spark):
     )
     from apache_beam_challange_spark.operators.similarity import cosine_topk
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     m, dim = 4, 64
     subs = opq_allocation_from_keys(
         opq_variance_keys(emb).collect(), m=m, dim=dim

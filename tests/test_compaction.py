@@ -7,6 +7,7 @@ import glob
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.sources.sinks import compact_parquet
+from conftest import TESTDATA_ROOT
 
 
 def _parquet_files(path):
@@ -78,7 +79,7 @@ def test_zorder_compaction_clusters_both_dims(spark, tmp_path):
 
     src = str(tmp_path / "src")
     (
-        spark.read.parquet("/root/testdata/sf0.01/orders.parquet")
+        spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/orders.parquet")
         .select(
             "o_orderkey",
             "o_custkey",

@@ -104,13 +104,17 @@ def test_bradley_terry_collects_slate_squared(spark, collect_sizes, sf_dir):
     assert got <= bound, f"bradley_terry collected {got} > {bound}"
 
 
+@pytest.mark.parametrize("m", [1, 4])
 @pytest.mark.parametrize("n_vecs", [64, 256])
-def test_kmeans_collects_k_dim_per_round(spark, collect_sizes, n_vecs):
+def test_kmeans_collects_k_dim_per_round(spark, collect_sizes, n_vecs, m):
+    """Plain k-means (m = 1) and PQ (m = 4 subspace codebooks) train in
+    one Lloyd loop: exactly one collect per round whatever m is, each
+    bounded by k*dim rows."""
     from apache_beam_challange_spark.operators.clustering import (
-        kmeans_centroids,
+        train_codebooks,
     )
 
-    k, dim, n_iter = 4, 6, 2
+    k, dim, n_iter = 4, 8, 2
     vecs = spark.range(n_vecs).select(
         F.col("id").alias("vec_id"),
         F.lit("x").alias("label"),
@@ -122,10 +126,10 @@ def test_kmeans_collects_k_dim_per_round(spark, collect_sizes, n_vecs):
         ).alias("embedding"),
     )
     collect_sizes.clear()
-    kmeans_centroids(vecs, k=k, n_iter=n_iter)
+    train_codebooks(vecs, m, k, n_iter, 10_000, dim)
     assert len(collect_sizes) == n_iter
     assert all(s <= k * dim for s in collect_sizes), (
-        f"kmeans round state {collect_sizes} exceeds k*dim={k * dim}"
+        f"codebook round state {collect_sizes} exceeds k*dim={k * dim}"
     )
 
 
@@ -168,7 +172,12 @@ def test_mmr_collects_candidates_and_pairs(spark, collect_sizes, sf_dir):
 
 @pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_BIG])
 def test_opq_collects_one_key_per_dim(spark, collect_sizes, sf_dir):
+    """The allocation collects one variance key per dimension; the PQ
+    training after it collects one k*dim codebook state per round for all
+    subspaces together (4 centroids x 64 dims)."""
     from apache_beam_challange_spark.plans.extensions import opq_topk_vec0
 
-    got = _max_collect(spark, collect_sizes, opq_topk_vec0, sf_dir)
-    assert got <= 64, f"opq variance keys {got} > 64 dims"
+    _max_collect(spark, collect_sizes, opq_topk_vec0, sf_dir)
+    keys, *rounds = collect_sizes
+    assert keys <= 64, f"opq variance keys {keys} > 64 dims"
+    assert len(rounds) == 1 and rounds[0] <= 4 * 64, rounds

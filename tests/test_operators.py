@@ -14,6 +14,7 @@ from apache_beam_challange_spark.operators.joins import (
     all_pairs,
     full_outer_zero_fill,
 )
+from conftest import TESTDATA_ROOT
 
 
 def test_full_outer_zero_fill_semantics(spark):
@@ -54,7 +55,7 @@ def test_q2_faithful_swaps_labels(spark):
     amount) header; faithful mode reproduces that byte-compatibly."""
     from apache_beam_challange_spark.plans.canonical import q2_top_pairs_ops
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     sane = q2_top_pairs_ops(spark, sf_dir).collect()
     swapped = q2_top_pairs_ops(spark, sf_dir, faithful=True).collect()
     assert [r["start_station_id"] for r in swapped] == [

@@ -143,10 +143,12 @@ def test_pmi_dim_joins_broadcast(plans):
 
 def test_kmeans_assignment_broadcasts_codebook(plans):
     """K-means assignment must stream the vector table against a broadcast
-    k-row codebook — the big side is never shuffled for the cross join."""
+    k-row codebook (a hash join on the subspace key, which k-means shares
+    with PQ) — the big side is never shuffled for the join."""
     p = plans("kmeans_embedding_clusters")
-    assert "BroadcastNestedLoopJoin" in p
+    assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
+    assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
 
 
 def test_rolling_frame_single_window_shuffle(plans):

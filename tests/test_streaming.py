@@ -23,6 +23,7 @@ from apache_beam_challange_spark.streaming.windows import (
     run_to_memory,
     tumbling_counts,
 )
+from conftest import TESTDATA_ROOT
 
 ROW_SCHEMA = StructType(
     [
@@ -755,7 +756,7 @@ def test_maintain_lsh_index_stream_matches_batch_rebuild(spark, tmp_path):
         maintain_lsh_index_stream,
     )
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, f"{TESTDATA_ROOT}/sf0.001", "embeddings")
     d = tmp_path / "vec_in"
     d.mkdir()
     # two micro-batch files splitting the corpus

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from apache_beam_challange_spark.operators.graph import triangle_stats
+from conftest import TESTDATA_ROOT
 
 QS = entrymod.all_queries()
 
@@ -340,7 +341,7 @@ def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
 
     # sf0.001's 1.5k orders fit in ~3 row groups even at a 16 KiB block
     # size — too few to measure clustering; use the sf0.01 table (15k rows)
-    orders = spark.read.parquet("/root/testdata/sf0.01/orders.parquet").select(
+    orders = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/orders.parquet").select(
         "o_orderkey",
         "o_custkey",
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01")).cast("long").alias("day"),
@@ -942,8 +943,8 @@ def test_dq_report_fails_on_injected_violations(spark, tmp_path):
     import shutil
 
     d = str(tmp_path / "sf")
-    shutil.copytree("/root/testdata/sf0.001", d)
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    shutil.copytree(f"{TESTDATA_ROOT}/sf0.001", d)
+    orders = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.001/orders.parquet")
     first = orders.limit(1)
     bad = (
         orders.unionAll(first)  # duplicate o_orderkey

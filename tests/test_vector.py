@@ -12,6 +12,7 @@ from apache_beam_challange_spark.operators.similarity import (
     ann_lsh_topk,
     cosine_topk,
 )
+from conftest import TESTDATA_ROOT
 
 
 def _vec_df(spark, rows):
@@ -73,7 +74,7 @@ def test_ivf_indexed_matches_inline_and_prunes(spark, tmp_path):
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivf_index")
     cb = (0, 1, 2, 3, 4, 5, 6, 7)
@@ -114,7 +115,7 @@ def test_ann_recall_floors_vs_exact(spark):
         ivf_topk,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
     recalls = {}
     for name, df, floor in [
@@ -155,13 +156,16 @@ def test_ivfpq_indexed_matches_inline_and_prunes(spark, tmp_path):
     from apache_beam_challange_spark.functions.vector import as_double
     from pyspark.sql import functions as F
 
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     emb = load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "ivfpq_index")
     pq_write_index(emb, path)
     index = spark.read.parquet(path)
+    codebooks = spark.read.parquet(path + "_codebooks")
 
-    indexed = ivfpq_topk_indexed(emb, index, query_vec_id=0, k_results=10)
+    indexed = ivfpq_topk_indexed(
+        emb, index, codebooks, query_vec_id=0, k_results=10
+    )
     cents = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("centroid_id"),
         as_double(F.col("embedding")).alias("cvec"),
@@ -185,7 +189,7 @@ def test_knn_join_matches_single_query_ivf(spark):
         knn_join_ivf,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.001/embeddings.parquet")
     single = [
         (r["vec_id"], r["cosine_sim"])
         for r in ivf_topk(emb, 3, k=5, n_probe=2).collect()
@@ -213,7 +217,7 @@ def test_ivfpq_refined_indexed_matches_inline(spark, tmp_path):
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, f"{TESTDATA_ROOT}/sf0.001", "embeddings")
     path = str(tmp_path / "ivfpq_idx")
     pq_write_index(emb, path)
     index = spark.read.parquet(path)
@@ -266,7 +270,7 @@ def test_lsh_indexed_matches_inline(spark, tmp_path):
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, f"{TESTDATA_ROOT}/sf0.001", "embeddings")
     path = str(tmp_path / "lsh_index")
     lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
     index = spark.read.parquet(path)
@@ -299,7 +303,7 @@ def test_lsh_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, f"{TESTDATA_ROOT}/sf0.001", "embeddings")
     base = emb.filter(F.col("vec_id") < 250)
     delta = emb.filter(F.col("vec_id") >= 250)
 
@@ -351,7 +355,7 @@ def test_ivf_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, f"{TESTDATA_ROOT}/sf0.001", "embeddings")
     ids = (0, 1, 2, 3, 4, 5, 6, 7)
     base = emb.filter(F.col("vec_id") < 250)  # codebook ids all < 250
     delta = emb.filter(F.col("vec_id") >= 250)
@@ -399,7 +403,7 @@ def test_nsw_recall_floor_vs_exact(spark):
         nsw_topk_batch,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
     adj = nsw_build_graph(emb).localCheckpoint()
     # graph degree bound: no node keeps more than M neighbors
@@ -547,7 +551,7 @@ def test_knn_join_lsh_corpus_scans_constant_in_batch_size(spark, tmp_path):
         lsh_write_index,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     path = str(tmp_path / "lsh_idx")
     lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
     index = spark.read.parquet(path)
@@ -588,7 +592,8 @@ def test_ivfpq_knn_join_dpp_and_qid0_matches_single(spark, sf_dir):
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower()
     assert "CartesianProduct" not in plan
-    assert plan.count("embeddings.parquet") <= 8  # probes + 4 subspace LUT builds
+    # coarse probes + the one LUT build for every (qid, subspace)
+    assert plan.count("embeddings.parquet") <= 5
     got0 = [
         (r.vec_id, r.adc_dist)
         for r in batch.collect()
@@ -615,7 +620,7 @@ def test_nsw_append_equals_rebuild_and_serves_identically(spark):
         nsw_topk_batch,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     base = emb.filter(SF.col("vec_id") < 1500)
     delta = emb.filter(SF.col("vec_id") >= 1500)
     adj_base = nsw_build_graph(base).localCheckpoint()
@@ -648,7 +653,7 @@ def test_nsw_append_index_commit_discipline(spark, tmp_path):
     import apache_beam_challange_spark.operators.similarity as sim
     from apache_beam_challange_spark.sources.catalog import is_materialized
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.001/embeddings.parquet")
     base = emb.filter(SF.col("vec_id") < 150)
     delta = emb.filter(SF.col("vec_id") >= 150)
     path = str(tmp_path / "nsw_idx")
@@ -690,7 +695,7 @@ def test_filtered_ann_prefilter_beats_postfilter(spark):
         cosine_topk,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     qlab = emb.filter(SF.col("vec_id") == 0).select("label").head()[0]
     pred = SF.col("label") != qlab
     pre = ann_lsh_multitable_topk_filtered(emb, 0, pred, k=20).collect()

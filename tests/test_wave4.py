@@ -372,12 +372,11 @@ def test_bradley_terry_dominant_item_wins(spark):
 
 
 def test_bradley_terry_serve_plan_is_checkpoint_bounded(plans):
-    """The MM rounds run in the driver over the checkpointed pair stats;
-    the serve plan joins those materialized stats to the driver's scores
-    (a local scan) — no lineitem rescan rides the final join."""
+    """The MM rounds and the per-part win totals run in the driver over
+    the collected pair stats; the serve plan is the driver's result as a
+    local scan — no lineitem rescan rides it."""
     p = plans("bradley_terry_part_prefs")
     assert "FileScan parquet" not in p
-    assert "Scan ExistingRDD" in p
     assert "LocalTableScan" in p
 
 

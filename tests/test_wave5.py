@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import apache_beam_challange_spark.plans.wave5 as w5
+from conftest import TESTDATA_ROOT
 
 _SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -455,7 +456,7 @@ def test_fdr_bh_matches_textbook_stepup(spark):
     p-values (procedure check, independent of the erf approximation)."""
     import pathlib
 
-    out = w5.fdr_bh_hourly_purchase_rate(spark, "/root/testdata/sf0.001").collect()
+    out = w5.fdr_bh_hourly_purchase_rate(spark, f"{TESTDATA_ROOT}/sf0.001").collect()
     ps = sorted((r.p_raw, r.hour) for r in out)
     m = len(ps)
     adj = {}
@@ -1137,7 +1138,7 @@ def test_fwl_matches_two_stage_regression(spark):
 def test_theil_decomposition_identity(spark):
     """between + within must equal the direct global Theil-T on the same
     customers (fixed-point granularity)."""
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     dec = w5.theil_decomposition_by_nation(spark, sf_dir).collect()[0]
     assert dec.theil_between >= -1e-9
     assert dec.theil_within >= 0

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import apache_beam_challange_spark.plans.wave6 as w6
+from conftest import TESTDATA_ROOT
 
 _SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
@@ -1348,7 +1349,7 @@ def test_huber_driver_solve_matches_spark_irls(spark):
     cent histogram; the original in-Spark route stays as the wide-domain
     fallback. Both must return IDENTICAL rows (same exact-integer
     trajectory, same final rounding expressions)."""
-    sf_dir = "/root/testdata/sf0.001"
+    sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     got = sorted(
         tuple(r) for r in w6.huber_location_by_type(spark, sf_dir).collect()
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.operators import jpeg as J
 from apache_beam_challange_spark.operators import video as V
+from conftest import TESTDATA_ROOT
 
 # --- MJPEG/AVI container --------------------------------------------------------
 
@@ -557,7 +558,7 @@ def test_hnsw_deep_hierarchy_recall_at_scale(spark):
         suggested_max_level,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.1/embeddings.parquet")
     n = emb.count()
     ml = suggested_max_level(n)
     assert ml == 4 and suggested_max_level(500) == 3
