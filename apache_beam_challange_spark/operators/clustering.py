@@ -33,9 +33,10 @@ Product quantization (Jegou et al., "Product Quantization for Nearest
 Neighbor Search", TPAMI'11) is the same algorithm over ``m`` subspaces at
 once: every route below is a thin caller of four pieces — one Lloyd loop
 for all subspace codebooks (:func:`train_codebooks`), one nearest-centroid
-argmin (:func:`_nearest`), one qid-keyed ADC ranker (:func:`_adc_topk`)
-and one exact-cosine refine (:func:`_refine`). Plain k-means is the
-``m = 1`` case.
+argmin (:func:`_nearest`) and one qid-keyed ADC ranker (:func:`_adc_topk`);
+the refined routes hand the ADC shortlist to the exact-rerank core's one
+ranker (:func:`operators.similarity.rank_candidates`). Plain k-means is
+the ``m = 1`` case.
 """
 
 from __future__ import annotations
@@ -43,7 +44,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from apache_beam_challange_spark.functions.vector import as_double, cosine
+from apache_beam_challange_spark.functions.vector import as_double
+from apache_beam_challange_spark.operators.similarity import (
+    centroid_table,
+    ivf_assignments,
+    ivf_candidates,
+    probe_centroids_batch,
+    query_vectors,
+    rank_candidates,
+    with_vectors,
+)
 from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 #: widest vector k-means trains on (the 64-dim embedding corpus); bounds
@@ -87,10 +97,14 @@ def _subvecs(embeddings: DataFrame, m: int, dim: int) -> DataFrame:
 def _nearest(svecs: DataFrame, books: DataFrame) -> DataFrame:
     """The one nearest-centroid argmin: each ``(vec_id, subspace)`` row of
     ``svecs`` against its subspace's broadcast codebook, keeping the
-    lexicographic ``(dist, centroid_id)`` minimum as a hash aggregate over
-    ``min(struct(...))``. Returns ``(vec_id, label, subspace, dist,
-    centroid_id, svec)``. Serves the Lloyd step, PQ encoding and
-    :func:`kmeans_assignments`."""
+    lexicographic ``(dist, centroid_id)`` minimum via ``min(struct(...))``.
+    Returns ``(vec_id, label, subspace, dist, centroid_id, svec)``. Serves
+    the Lloyd step, PQ encoding and :func:`kmeans_assignments`.
+
+    Spark plans this ``min(struct)`` as a partial + final SortAggregate
+    with or without ``svec`` in the struct; only ``min_by`` plans a
+    HashAggregate, and it has no ``centroid_id`` tie-break — so carrying
+    ``svec`` costs no hash aggregate."""
     return (
         svecs.join(F.broadcast(books), "subspace")
         .withColumn("dist", _sq_l2(F.col("svec"), F.col("cvec")))
@@ -156,7 +170,7 @@ def kmeans_centroids(
 ) -> DataFrame:
     """Train the codebook: ``n_iter`` Lloyd rounds, returning
     ``(centroid_id, cvec)`` — the coarse quantizer an IVF index consumes
-    (:func:`operators.similarity.ivf_topk_with_centroids`). The ``m = 1``
+    (:func:`operators.similarity.knn_join_ivf`). The ``m = 1``
     case of :func:`train_codebooks`.
 
     ``init_cents`` (a ``(centroid_id, cvec)`` frame) resumes training
@@ -334,27 +348,14 @@ def _adc_topk(
     )
 
 
-def _refine(
-    embeddings: DataFrame, shortlist: DataFrame, query_vec_id: int, k_results: int
+def _shortlist_candidates(
+    embeddings: DataFrame, shortlist: DataFrame, query_vec_id: int
 ) -> DataFrame:
-    """The one exact-cosine refine: re-rank the ``shortlist`` ids (one
-    broadcast semi-join back to the float vectors — exact math touches
-    only those rows) by cosine against the query, top ``k_results``."""
-    from apache_beam_challange_spark.operators.similarity import _query_vec
-
-    vec = as_double(F.col("embedding"))
-    vecs = embeddings.select("vec_id", "label", vec.alias("vec"))
-    return (
-        vecs.join(F.broadcast(shortlist.select("vec_id")), "vec_id")
-        .crossJoin(F.broadcast(_query_vec(embeddings, query_vec_id)))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k_results)
-    )
+    """The refine's candidate stage: the float rows of the ADC
+    ``shortlist`` ids (one broadcast semi-join — exact math touches only
+    those rows) against the broadcast query row."""
+    cand = with_vectors(embeddings, F.broadcast(shortlist.select("vec_id")))
+    return cand.crossJoin(F.broadcast(query_vectors(embeddings, [query_vec_id])))
 
 
 def _single(ranked: DataFrame) -> DataFrame:
@@ -525,18 +526,15 @@ def ivfpq_refined_topk(
     corpus. Recall rises from ADC-rank quality to probe-coverage quality
     (the IVF recall ceiling), the canonical IVFADC+R design (Jegou et al.
     TPAMI'11 §V "re-ranking with source coding")."""
-    from apache_beam_challange_spark.operators.similarity import (
-        centroid_table,
-        ivf_candidates,
-    )
-
     cand = ivf_candidates(
-        embeddings, centroid_table(embeddings, coarse_ids), query_vec_id, n_probe=n_probe
+        embeddings, centroid_table(embeddings, coarse_ids), [query_vec_id], n_probe
     )
     shortlist = pq_topk(
         embeddings, query_vec_id, n_refine, m, k, n_iter, scale, dim, candidates=cand
     )
-    return _refine(embeddings, shortlist, query_vec_id, k_results)
+    cand = _shortlist_candidates(embeddings, shortlist, query_vec_id)
+    ranked = rank_candidates(cand, embeddings, [query_vec_id], k_results)
+    return ranked.drop("query_vec_id")
 
 
 def pq_write_index(
@@ -565,13 +563,12 @@ def pq_write_index(
     and readers (which gate on
     :func:`~apache_beam_challange_spark.sources.catalog.is_materialized`
     over BOTH directories) rebuild instead of serving a torn index."""
-    from apache_beam_challange_spark.operators.similarity import ivf_assignments
-
     # serving rebuilds only the query's m*k LUT entries from the stored
     # books instead of re-running k-means per query
     books = train_codebooks(embeddings, m, k, n_iter, scale, dim)
     books.coalesce(1).write.mode("overwrite").parquet(path + "_codebooks")
-    coarse = ivf_assignments(embeddings, coarse_ids).select("vec_id", "centroid_id")
+    cents = centroid_table(embeddings, coarse_ids)
+    coarse = ivf_assignments(embeddings, cents).select("vec_id", "centroid_id")
     _encode(embeddings, books, m, dim).join(coarse, "vec_id").write.mode(
         "overwrite"
     ).partitionBy("centroid_id").parquet(path)
@@ -629,7 +626,9 @@ def ivfpq_refined_topk_indexed(
         embeddings, index, codebooks, [query_vec_id], n_refine,
         coarse_ids, n_probe, m, dim,
     )
-    return _refine(embeddings, shortlist, query_vec_id, k_results)
+    cand = _shortlist_candidates(embeddings, shortlist, query_vec_id)
+    ranked = rank_candidates(cand, embeddings, [query_vec_id], k_results)
+    return ranked.drop("query_vec_id")
 
 
 def opq_variance_keys(
@@ -792,8 +791,7 @@ def ivfpq_knn_join_indexed(
     m: int = 4,
     dim: int = 64,
 ) -> DataFrame:
-    """Batch IVF+PQ k-NN join from the AT-REST codes index (round 8 —
-    completes the batch-serving family across every index type): the
+    """Batch IVF+PQ k-NN join from the AT-REST codes index: the
     whole query set ranks the broadcast coarse codebook in one window
     (`probe_centroids_batch`), the (qid, centroid_id) probe pairs join
     the index partition column (DPP opens the union of probed list
@@ -801,16 +799,8 @@ def ivfpq_knn_join_indexed(
     in one broadcast — queries*m*k tiny rows. One windowed rank serves
     every query; no corpus float vector is read and no stage repeats per
     query."""
-    from apache_beam_challange_spark.operators.similarity import (
-        centroid_table,
-        probe_centroids_batch,
-    )
-
     qids = list(query_ids)
-    qvecs = embeddings.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qvec")
-    )
     cents = centroid_table(embeddings, coarse_ids)
-    probes = probe_centroids_batch(cents, qvecs, n_probe)
+    probes = probe_centroids_batch(cents, embeddings, qids, n_probe)
     cand = index.join(F.broadcast(probes), "centroid_id")
     return _adc_topk(embeddings, cand, codebooks, qids, k_results, m, dim)

@@ -1,20 +1,27 @@
 """Similarity search over embedding columns (SURVEY.md §2.9).
 
-Two paths, same API:
+Two ANN families, each served through one core:
 
-- :func:`cosine_topk` — brute-force exact top-k: one narrow pass computing
-  cosine against a broadcast query vector, then TakeOrderedAndProject.
-  At 100 TB this is a full scan but *no shuffle at all* — the partial top-k
-  merge ships k rows per partition. The right baseline, and often the right
-  answer when k is small and the scan is already needed.
+- **Exact rerank** (brute force, IVF, LSH, MIPS): every route is ONE
+  batch-shaped candidate stage per index type plus ONE ranker — the
+  filter-then-refine shape. A candidate stage turns a list of query ids
+  into ``(qid, vec_id, label, __v)`` rows: :func:`exact_candidates`
+  (every vector but the query), :func:`ivf_candidates` (the members of
+  each query's probed inverted lists, inline or at rest) and
+  :func:`lsh_candidates` (one broadcast equi-join of the corpus buckets
+  against the queries' ``(qid, table_idx, bucket)`` probe rows from
+  :func:`query_buckets` — single-table, multi-probe, multitable, at
+  rest, filtered, and MIPS over the augmented frame in plans/mips.py).
+  :func:`rank_candidates` then scores every candidate exactly against
+  the broadcast query vectors and keeps each query's top k: one query
+  is a zero-shuffle TakeOrderedAndProject, a batch one per-qid window.
+  A single query is a batch of one.
+- **Graph search** (NSW, Vamana, HNSW): one driver-cached beam search
+  over the at-rest adjacency (:func:`_graph_topk`).
 
-- :func:`ann_lsh_topk` — sign-random-projection LSH: hyperplanes are
-  *deterministic* pseudo-random vectors (sin-hash of (plane, component), so
-  oracle SQL can reproduce them), each vector maps to a bit-string bucket,
-  and only the query's bucket (plus optional 1-bit-flip neighbors) is
-  scanned exactly. The bucket filter prunes the candidate set before any
-  cosine math — the scan reads, hashes, filters; at scale you'd persist the
-  bucket id partition-bucketed to skip files entirely.
+LSH hyperplanes are *deterministic* pseudo-random vectors (sin-hash of
+(plane, component)), so the DuckDB oracles reproduce every bucket, and
+every ranking breaks ties on vec_id after rounding to 6 places.
 """
 
 from __future__ import annotations
@@ -26,13 +33,7 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine
 from apache_beam_challange_spark.sources.catalog import read_parquet
-from apache_beam_challange_spark.sources.driver import local_frame
-
-
-def _query_vec(embeddings: DataFrame, query_vec_id: int) -> DataFrame:
-    return embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        as_double(F.col("embedding")).alias("__qvec")
-    )
+from apache_beam_challange_spark.sources.driver import collect_bounded, local_frame
 
 
 def _cos_py(q: list, v: list) -> float:
@@ -316,24 +317,245 @@ def _rank_visited(
     )
 
 
-def cosine_topk(embeddings: DataFrame, query_vec_id: int, k: int = 20) -> DataFrame:
-    """Exact top-k by cosine similarity against one stored vector.
+# --- exact-rerank ANN: candidate stages + one ranker ---------------------------
 
-    The single-row query side is broadcast (scalar-like join), keeping the
-    big side's partitioning untouched."""
-    q = _query_vec(embeddings, query_vec_id)
-    scored = (
-        embeddings.filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(as_double(F.col("embedding")), F.col("__qvec")), 6).alias(
-                "cosine_sim"
-            ),
-        )
+#: the deterministic sampled IVF codebook: stored vectors 0..7 act as centroids
+IVF_CODEBOOK = (0, 1, 2, 3, 4, 5, 6, 7)
+
+
+def _vectors(embeddings: DataFrame) -> DataFrame:
+    """``(vec_id, label, __v)``: the float vectors a candidate row carries."""
+    return embeddings.select(
+        "vec_id", "label", as_double(F.col("embedding")).alias("__v")
     )
-    return scored.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(k)
+
+
+def query_vectors(embeddings: DataFrame, qids) -> DataFrame:
+    """``(qid, __qv)``: the query vectors, read through ONE definition so
+    the probe stages and the ranker share a subtree (Spark reuses its
+    broadcast instead of scanning the queries twice)."""
+    return embeddings.filter(_in_pred("vec_id", qids)).select(
+        F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("__qv")
+    )
+
+
+def _top_k(df: DataFrame, key: str, n_keys: int, order, k: int) -> DataFrame:
+    """Each ``key`` group's first ``k`` rows of ``df`` by ``order``, in the
+    shape the group count calls for: one group ends in
+    ``orderBy(...).limit(k)``, a zero-shuffle TakeOrderedAndProject (the
+    partial top-k merge ships k rows per partition); more groups rank with
+    one ``row_number`` window partitioned by ``key``."""
+    from pyspark.sql import Window
+
+    if n_keys == 1:
+        return df.orderBy(*order).limit(k)
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= k)
+        .drop("__rk")
+    )
+
+
+def rank_candidates(
+    cand: DataFrame,
+    embeddings: DataFrame,
+    qids,
+    k: int,
+    score=cosine,
+    score_col: str = "cosine_sim",
+) -> DataFrame:
+    """The one exact rerank of every brute-force, IVF, LSH and MIPS
+    route: ``cand`` rows ``(qid, vec_id, label, __v)`` join the broadcast
+    query vectors (:func:`query_vectors`) — unless the candidate stage
+    already broadcast the query rows and carried their ``__qv`` along —
+    score by ``score`` (``cosine`` or ``dot``) rounded to 6 places, and
+    keep each query's top ``k`` by (score desc, vec_id): a
+    TakeOrderedAndProject for one query, a per-qid window for a batch
+    (:func:`_top_k`). Returns ``(query_vec_id, vec_id, label,
+    <score_col>)``."""
+    qids = sorted({int(q) for q in qids})
+    if "__qv" not in cand.columns:
+        cand = cand.join(F.broadcast(query_vectors(embeddings, qids)), "qid")
+    scored = cand.select(
+        F.col("qid").alias("query_vec_id"),
+        "vec_id",
+        "label",
+        F.round(score(F.col("__v"), F.col("__qv")), 6).alias(score_col),
+    )
+    order = [F.col(score_col).desc(), F.col("vec_id")]
+    return _top_k(scored, "query_vec_id", len(qids), order, k)
+
+
+def with_vectors(embeddings: DataFrame, ids: DataFrame) -> DataFrame:
+    """Candidate rows for ``ids`` (``vec_id`` plus its ``qid``): the ids
+    join the vector table once, so stages whose index stores no vectors
+    (bucket indexes, compressed shortlists) hand the ranker the same row
+    shape."""
+    return _vectors(embeddings).join(ids, "vec_id")
+
+
+def exact_candidates(embeddings: DataFrame, qids) -> DataFrame:
+    """Brute-force candidate stage: every vector except the query, for
+    each query — one narrow pass against the broadcast query rows, which
+    ride along as ``__qv``."""
+    return (
+        _vectors(embeddings)
+        .crossJoin(F.broadcast(query_vectors(embeddings, qids)))
+        .filter(F.col("vec_id") != F.col("qid"))
+    )
+
+
+def knn_join_exact(embeddings: DataFrame, query_ids, k: int) -> DataFrame:
+    """Exact top-``k`` cosine neighbors of every query in ``query_ids``.
+    At 100 TB this is a full scan but, for one query, no shuffle at all
+    — the right baseline, and often the right answer when k is small and
+    the scan is already needed."""
+    cand = exact_candidates(embeddings, query_ids)
+    return rank_candidates(cand, embeddings, query_ids, k)
+
+
+def centroid_table(
+    source: DataFrame, codebook_ids: tuple[int, ...] = IVF_CODEBOOK
+) -> DataFrame:
+    """The broadcastable IVF codebook ``(centroid_id, cvec)`` extracted
+    from stored vectors — one definition for build, serve, append and
+    batch paths, so index build and index serve can never disagree on
+    the codebook."""
+    return source.filter(F.col("vec_id").isin(list(codebook_ids))).select(
+        F.col("vec_id").alias("centroid_id"),
+        as_double(F.col("embedding")).alias("cvec"),
+    )
+
+
+def ivf_assignments(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
+    """IVF coarse quantization shared by every IVF path: ``(vec_id,
+    label, vec, centroid_id)``, every vector assigned to its nearest
+    centroid of the broadcast codebook ``cents`` (argmax cosine,
+    centroid-id tie-break). The codebook broadcasts, so assignment
+    reads the table once — the inverted lists are then just a
+    centroid_id column to partition by."""
+    from pyspark.sql import Window
+
+    aw = Window.partitionBy("vec_id").orderBy(
+        F.col("__sim").desc(), F.col("centroid_id")
+    )
+    return (
+        embeddings.select(
+            "vec_id", "label", as_double(F.col("embedding")).alias("vec")
+        )
+        .crossJoin(F.broadcast(cents))
+        .withColumn("__sim", cosine(F.col("vec"), F.col("cvec")))
+        .withColumn("__rk", F.row_number().over(aw))
+        .filter(F.col("__rk") == 1)
+        .select("vec_id", "label", "vec", "centroid_id")
+    )
+
+
+def probe_centroids_batch(
+    cents: DataFrame, embeddings: DataFrame, qids, n_probe: int
+) -> DataFrame:
+    """The one IVF probe: rank the broadcast codebook ``cents`` (the same
+    broadcast inline assignment reads) against every query vector
+    (:func:`query_vectors`) and keep each query's ``n_probe`` nearest
+    lists (centroid-id tie-break), returning ``(qid, centroid_id, __qv)``
+    probe rows — the query vector rides along for the rerank. The
+    codebook and the query set are both small, so the whole probe stage
+    is broadcast-local; one query's probe is a TakeOrderedAndProject, a
+    batch's a per-qid window (:func:`_top_k`)."""
+    qids = sorted({int(q) for q in qids})
+    scored = (
+        query_vectors(embeddings, qids)
+        .crossJoin(F.broadcast(cents))
+        .withColumn("__qsim", cosine(F.col("cvec"), F.col("__qv")))
+    )
+    order = [F.col("__qsim").desc(), F.col("centroid_id")]
+    return _top_k(scored, "qid", len(qids), order, n_probe).select(
+        "qid", "centroid_id", "__qv"
+    )
+
+
+def ivf_candidates(
+    embeddings: DataFrame,
+    cents: DataFrame,
+    qids,
+    n_probe: int,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """IVF candidate stage: the members of each query's ``n_probe``
+    probed inverted lists, query excluded — lists assigned inline against
+    ``cents``, or read from the at-rest ``index`` (:func:`ivf_write_index`),
+    whose join on the partition column lets dynamic partition pruning
+    skip every non-probed list at the file level. Composable with any
+    precision stage: exact cosine (:func:`knn_join_ivf`) or compressed
+    ADC (IVF+PQ, :func:`operators.clustering.pq_topk`)."""
+    probes = probe_centroids_batch(cents, embeddings, qids, n_probe)
+    lists = ivf_assignments(embeddings, cents) if index is None else index
+    cand = (
+        lists.join(F.broadcast(probes), "centroid_id")
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", "label", F.col("vec").alias("__v"), "__qv")
+    )
+    # identity on a clean index; makes a crash-retried incremental append
+    # (duplicate rows, see ivf_append_index) result-invisible
+    return cand if index is None else cand.dropDuplicates(["qid", "vec_id"])
+
+
+def knn_join_ivf(
+    embeddings: DataFrame,
+    query_ids,
+    k: int,
+    n_probe: int = 2,
+    cents: DataFrame | None = None,
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """IVF approximate top-``k`` for every query in ``query_ids``: rank
+    the codebook ``cents`` (default: the sampled :data:`IVF_CODEBOOK`;
+    or k-means output, :func:`operators.clustering.kmeans_centroids`)
+    against each query, exact-search only its ``n_probe`` nearest
+    inverted lists — inline, or served from the at-rest ``index``. With
+    |codebook| lists the scan shrinks by roughly n_probe/|codebook|, the
+    standard recall/cost dial; a batch probes every list in ONE
+    equi-join on ``centroid_id``, never queries x corpus."""
+    if cents is None:
+        cents = centroid_table(embeddings)
+    cand = ivf_candidates(embeddings, cents, query_ids, n_probe, index)
+    return rank_candidates(cand, embeddings, query_ids, k)
+
+
+def ivf_write_index(
+    embeddings: DataFrame, path: str, codebook_ids: tuple[int, ...]
+) -> None:
+    """Materialize the IVF inverted lists AT REST: every vector written
+    under ``path`` hive-partitioned by its ``centroid_id``. This is the
+    100 TB posture for ANN — the index is built once (here coarse
+    quantization; at real scale offline k-means), and a query touches only
+    ``n_probe`` of the |codebook| partition directories, skipping the rest
+    of the files entirely."""
+    assigned = ivf_assignments(embeddings, centroid_table(embeddings, codebook_ids))
+    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+
+
+def ivf_append_index(
+    new_embeddings: DataFrame,
+    codebook_source: DataFrame,
+    path: str,
+    codebook_ids: tuple[int, ...],
+) -> None:
+    """Incremental IVF maintenance: assign ONLY the new vectors against
+    the FIXED stored codebook (``codebook_source`` is any table holding
+    the codebook vectors — the base corpus or a stored centroids table;
+    serving systems never retrain between periodic rebuilds) and append
+    their rows into the existing ``centroid_id`` partitions. Because the
+    codebook is fixed, appended rows are bit-identical to a from-scratch
+    rebuild over the union — test-asserted. Same at-least-once append
+    seam as :func:`lsh_append_index`; the indexed reader de-duplicates
+    candidate ids, so a crash-retry re-append cannot change served
+    results."""
+    cents = centroid_table(codebook_source, codebook_ids)
+    ivf_assignments(new_embeddings, cents).write.mode("append").partitionBy(
+        "centroid_id"
+    ).parquet(path)
 
 
 def _hyperplane(plane: int, dim: int) -> F.Column:
@@ -372,412 +594,6 @@ def lsh_bucket(vec: F.Column, num_planes: int, dim: int) -> F.Column:
         for p in range(num_planes)
     ]
     return F.concat(*bits)
-
-
-def centroid_table(source: DataFrame, codebook_ids: tuple[int, ...]) -> DataFrame:
-    """The broadcastable IVF codebook ``(centroid_id, cvec)`` extracted
-    from stored vectors — ONE definition for build, serve, append and
-    batch-join paths (this and the two helpers below existed as eight
-    near-identical inline copies; a tie-break or metric change applied to
-    one copy would silently desynchronize index-build from index-serve —
-    found by review)."""
-    return source.filter(F.col("vec_id").isin(list(codebook_ids))).select(
-        F.col("vec_id").alias("centroid_id"),
-        as_double(F.col("embedding")).alias("cvec"),
-    )
-
-
-def assign_nearest(vecs: DataFrame, cents: DataFrame) -> DataFrame:
-    """Coarse quantization shared by every IVF path: broadcast the
-    codebook, score cosine, keep the argmax with centroid-id tie-break.
-    ``vecs`` must carry (vec_id, ..., vec); output appends
-    ``centroid_id``."""
-    from pyspark.sql import Window
-
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.col("__sim").desc(), F.col("centroid_id")
-    )
-    keep = [c for c in vecs.columns] + ["centroid_id"]
-    return (
-        vecs.crossJoin(F.broadcast(cents))
-        .withColumn("__sim", cosine(F.col("vec"), F.col("cvec")))
-        .withColumn("__rk", F.row_number().over(aw))
-        .filter(F.col("__rk") == 1)
-        .select(*keep)
-    )
-
-
-def probe_centroids(cents: DataFrame, q: DataFrame, n_probe: int) -> DataFrame:
-    """Single-query probe ranking shared by every IVF serve path: rank
-    the codebook against the broadcast query vector, keep the top
-    ``n_probe`` list ids (centroid-id tie-break)."""
-    from pyspark.sql import Window
-
-    pw = Window.orderBy(F.col("__qsim").desc(), F.col("centroid_id"))
-    return (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("__qsim", cosine(F.col("cvec"), F.col("__qvec")))
-        .withColumn("__rk", F.row_number().over(pw))
-        .filter(F.col("__rk") <= n_probe)
-        .select("centroid_id")
-    )
-
-
-def ivf_assignments(
-    embeddings: DataFrame, codebook_ids: tuple[int, ...]
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest centroid
-    (argmax cosine, centroid-id tie-break). The codebook here is a
-    deterministic sample of stored vectors (at real scale: k-means
-    centroids, trained offline); it broadcasts, so assignment is one
-    narrow pass over the table — the inverted lists are then just a
-    cluster_id column to partition/bucket by."""
-    cents = centroid_table(embeddings, codebook_ids)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    return assign_nearest(vecs, cents)
-
-
-def ivf_candidates(
-    embeddings: DataFrame,
-    cents: DataFrame,
-    query_vec_id: int,
-    n_probe: int = 2,
-) -> DataFrame:
-    """The IVF recall stage alone: assign every vector to its nearest
-    centroid (broadcast codebook), rank centroids against the query, and
-    return the members of the ``n_probe`` probed inverted lists (query
-    vector excluded) — ``(vec_id, label, vec, centroid_id)``. Composable
-    with any precision stage: exact cosine (:func:`ivf_topk_with_centroids`)
-    or compressed ADC (IVF+PQ, :func:`operators.clustering.pq_topk`)."""
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    assigned = assign_nearest(vecs, cents)
-    q = _query_vec(embeddings, query_vec_id)
-    probes = probe_centroids(cents, q, n_probe)
-    return assigned.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != query_vec_id
-    )
-
-
-def ivf_topk_with_centroids(
-    embeddings: DataFrame,
-    cents: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k against an arbitrary ``(centroid_id, cvec)``
-    codebook — sampled vectors, or k-means output
-    (:func:`operators.clustering.kmeans_centroids`). Rank centroids against
-    the query, probe the ``n_probe`` nearest inverted lists, exact-search
-    only those. With |codebook| lists and n_probe probes the scan shrinks
-    by roughly n_probe/|codebook| — the standard recall/cost dial."""
-    candidates = ivf_candidates(embeddings, cents, query_vec_id, n_probe=n_probe)
-    q = _query_vec(embeddings, query_vec_id)
-    return (
-        candidates.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    codebook_ids: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7),
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k with the deterministic sampled codebook
-    (stored vectors ``codebook_ids`` act as centroids). See
-    :func:`ivf_topk_with_centroids` for the general form."""
-    cents = embeddings.filter(F.col("vec_id").isin(list(codebook_ids))).select(
-        F.col("vec_id").alias("centroid_id"),
-        as_double(F.col("embedding")).alias("cvec"),
-    )
-    return ivf_topk_with_centroids(
-        embeddings, cents, query_vec_id, k=k, n_probe=n_probe
-    )
-
-
-def ivf_write_index(
-    embeddings: DataFrame, path: str, codebook_ids: tuple[int, ...]
-) -> None:
-    """Materialize the IVF inverted lists AT REST: every vector written
-    under ``path`` hive-partitioned by its ``centroid_id``. This is the
-    100 TB posture for ANN — the index is built once (here coarse
-    quantization; at real scale offline k-means), and a query touches only
-    ``n_probe`` of the |codebook| partition directories, skipping the rest
-    of the files entirely."""
-    assigned = ivf_assignments(embeddings, codebook_ids)
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-
-
-def ivf_append_index(
-    new_embeddings: DataFrame,
-    codebook_source: DataFrame,
-    path: str,
-    codebook_ids: tuple[int, ...],
-) -> None:
-    """Incremental IVF maintenance: assign ONLY the new vectors against
-    the FIXED stored codebook (``codebook_source`` is any table holding
-    the codebook vectors — the base corpus or a stored centroids table;
-    serving systems never retrain between periodic rebuilds) and append
-    their rows into the existing ``centroid_id`` partitions. Because the
-    codebook is fixed, appended rows are bit-identical to a from-scratch
-    rebuild over the union — test-asserted. Same at-least-once append
-    seam as :func:`lsh_append_index`; the indexed reader de-duplicates
-    candidate ids, so a crash-retry re-append cannot change served
-    results."""
-    cents = centroid_table(codebook_source, codebook_ids)
-    vecs = new_embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    assign_nearest(vecs, cents).write.mode("append").partitionBy(
-        "centroid_id"
-    ).parquet(path)
-
-
-def ivf_topk_indexed(
-    embeddings: DataFrame,
-    index: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    codebook_ids: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7),
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF top-k served from the materialized index: rank centroids
-    against the query (tiny broadcast), then join the index on
-    ``centroid_id`` — the partition column — so Spark's dynamic partition
-    pruning drops every non-probed inverted list at the FILE level before
-    any vector is read. Same results as :func:`ivf_topk`; the scan cost
-    drops from full-table to ~n_probe/|codebook|."""
-    cents = centroid_table(embeddings, codebook_ids)
-    q = _query_vec(embeddings, query_vec_id)
-    probes = probe_centroids(cents, q, n_probe)
-    candidates = (
-        index.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != query_vec_id)
-        # identity on a clean index; makes a crash-retried incremental
-        # append (duplicate rows, see ivf_append_index) result-invisible
-        .dropDuplicates(["vec_id"])
-    )
-    return (
-        candidates.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_lsh_multitable_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    # default matches lsh_write_index / ann_lsh_multitable_topk_indexed so
-    # a default-parameter inline-vs-indexed comparison probes the SAME
-    # table count (a 8-vs-16 defaults skew silently halved inline recall
-    # in such comparisons; found by review)
-    num_tables: int = 16,
-    num_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """OR-amplified LSH: ``num_tables`` independent hash tables (table t
-    uses the deterministic planes ``t*num_planes .. (t+1)*num_planes-1``),
-    candidates = vectors sharing the query's bucket in ANY table, then
-    exact cosine over the distinct union. The standard recall amplifier
-    for sign-random-projection LSH: per-table neighbor-capture q becomes
-    ``1-(1-q)^L`` at the cost of a ~L/2^planes-of-corpus candidate scan.
-
-    Plan shape (the part that survives 100 TB): vector components
-    posexplode to narrow (vec_id, j, x) rows, broadcast-join the
-    (plane, j, h) component matrix (L*planes*dim literal rows), and the
-    per-plane projections are ONE codegen'd hash aggregation — the same
-    comp→proj→buck pipeline the DuckDB oracle runs, chosen over the
-    per-row ``aggregate(zip_with(...))`` fold because Spark's higher-order
-    functions are interpreted per element (measured 4.2 s → this shape at
-    sf0.1; the aggregation partial-combines map-side so the shuffle is
-    L*|corpus| narrow rows). Candidates then come from ONE equi-join on
-    (table_idx, bucket) against the query's broadcast bucket list —
-    exactly the MinHash band-join shape, never all-pairs — then one
-    distinct on vec_id, a semi-join back to the vectors, and a
-    zero-shuffle exact-cosine TakeOrdered. The float-sum accumulation
-    order within a (vec_id, plane) group is j-ascending on both engines
-    (narrow intra-partition order), keeping projections bit-identical to
-    the sequential fold."""
-    flat = _multitable_buckets(embeddings, num_tables, num_planes, dim)
-    qvec = _query_vec(embeddings, query_vec_id)
-    cand_ids = _bucket_candidate_ids(flat, query_vec_id)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    return (
-        vecs.join(cand_ids, "vec_id")
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_lsh_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    num_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: exact cosine ranking restricted to the query's
-    LSH bucket. With 2^num_planes buckets the candidate set shrinks
-    geometrically; recall is tuned by num_planes (fewer planes = higher
-    recall, bigger candidate sets)."""
-    with_bucket = embeddings.select(
-        "vec_id",
-        "label",
-        as_double(F.col("embedding")).alias("vec"),
-        lsh_bucket(as_double(F.col("embedding")), num_planes, dim).alias("bucket"),
-    )
-    q = with_bucket.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("vec").alias("__qvec"), F.col("bucket").alias("__qbucket")
-    )
-    candidates = (
-        with_bucket.filter(F.col("vec_id") != query_vec_id)
-        .join(F.broadcast(q), F.col("bucket") == F.col("__qbucket"))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-    )
-    return candidates.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")).limit(k)
-
-
-def knn_join_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    codebook_ids: tuple[int, ...] = (0, 1, 2, 3, 4, 5, 6, 7),
-    n_probe: int = 2,
-) -> DataFrame:
-    """Batch k-NN JOIN: for EVERY query vector, its ``k`` nearest corpus
-    vectors by cosine — the operator a curation pipeline actually runs
-    (dedup/enrichment is never one query at a time). Both sides coarse-
-    quantize against the same broadcast codebook; each query is scored
-    only against corpus members of its ``n_probe`` nearest inverted
-    lists, via ONE equi-join on ``centroid_id`` — the classic IVF
-    batch-probe shape, never queries x corpus all-pairs. Per-query top-k
-    is a window rank over the probed candidates.
-
-    Output: ``(query_vec_id, vec_id, label, cosine_sim)``, self-matches
-    excluded (query and corpus may be the same table).
-
-    Scale posture: with |lists| inverted lists and ``n_probe`` probes the
-    join's expected output is ``n_probe/|lists|`` of the all-pairs
-    volume; both sides shuffle once on ``centroid_id`` (or not at all
-    when the corpus is already hive-partitioned by it — the at-rest
-    layout ``ivf_write_index`` produces), and the window's partition key
-    ``query_vec_id`` distributes the ranking."""
-    from pyspark.sql import Window
-
-    cents = centroid_table(corpus, codebook_ids)
-    corpus_vecs = corpus.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    assigned = assign_nearest(corpus_vecs, cents)
-    query_vecs = queries.select(
-        F.col("vec_id").alias("query_vec_id"),
-        as_double(F.col("embedding")).alias("qvec"),
-    )
-    pw = Window.partitionBy("query_vec_id").orderBy(
-        F.col("__qsim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        query_vecs.crossJoin(F.broadcast(cents))
-        .withColumn("__qsim", cosine(F.col("qvec"), F.col("cvec")))
-        .withColumn("__rk", F.row_number().over(pw))
-        .filter(F.col("__rk") <= n_probe)
-        .select("query_vec_id", "qvec", "centroid_id")
-    )
-    kw = Window.partitionBy("query_vec_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("vec_id")
-    )
-    return (
-        assigned.join(probes, "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_vec_id"))
-        .select(
-            "query_vec_id",
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("qvec")), 6).alias("cosine_sim"),
-        )
-        .withColumn("__rk", F.row_number().over(kw))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-
-
-def ann_lsh_multiprobe_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    num_planes: int = 4,
-    dim: int = 64,
-    max_flips: int = 1,
-) -> DataFrame:
-    """Multi-probe LSH — the OTHER standard amplification (Lv et al.,
-    "Multi-probe LSH", VLDB'07): ONE hash table, but the query probes
-    every bucket within ``max_flips`` sign flips of its own (flipping the
-    bits most likely to be borderline; here: all of them, the exhaustive
-    variant for small plane counts). Probing 1+planes of the 2^planes
-    buckets multiplies candidates (and recall) by ~(1+planes) without
-    building more tables — the memory-lean alternative to
-    :func:`ann_lsh_multitable_topk`. The probe test is a broadcast join
-    against the single query-bucket row with a per-character Hamming
-    predicate on the bit-string (codegen-friendly; no UDF)."""
-    with_bucket = embeddings.select(
-        "vec_id",
-        "label",
-        as_double(F.col("embedding")).alias("vec"),
-        lsh_bucket(as_double(F.col("embedding")), num_planes, dim).alias("bucket"),
-    )
-    q = with_bucket.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("vec").alias("__qvec"), F.col("bucket").alias("__qbucket")
-    )
-    hamming = sum(
-        (
-            F.substring(F.col("bucket"), i + 1, 1)
-            != F.substring(F.col("__qbucket"), i + 1, 1)
-        ).cast("int")
-        for i in range(num_planes)
-    )
-    return (
-        with_bucket.filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .filter(hamming <= max_flips)
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
 
 
 def _multitable_buckets(
@@ -830,25 +646,136 @@ def _multitable_buckets(
     )
 
 
-def _bucket_candidate_ids(flat: DataFrame, query_vec_id: int) -> DataFrame:
-    """Distinct candidate vec_ids sharing any (table_idx, bucket) row with
-    the query — the OR-amplified band equi-join shared by the cosine
-    multitable route and the augmented-MIPS route (plans/mips.py); one
-    definition so tie-break/join fixes can never desynchronize the two."""
-    q = flat.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("table_idx").alias("__qtable"),
-        F.col("bucket").alias("__qbucket"),
+def _single_table_buckets(
+    embeddings: DataFrame, num_planes: int, dim: int
+) -> DataFrame:
+    """``(vec_id, label, __v, table_idx, bucket)`` for one hash table: the
+    bucket is a narrow per-row fold (:func:`lsh_bucket`), so the rows
+    carry their vectors and the probe join needs no shuffle."""
+    return _vectors(embeddings).select(
+        "vec_id",
+        "label",
+        "__v",
+        F.lit(0).alias("table_idx"),
+        lsh_bucket(F.col("__v"), num_planes, dim).alias("bucket"),
     )
-    return (
-        flat.filter(F.col("vec_id") != query_vec_id)
-        .join(
-            F.broadcast(q),
-            (F.col("table_idx") == F.col("__qtable"))
-            & (F.col("bucket") == F.col("__qbucket")),
-        )
-        .select("vec_id")
-        .dropDuplicates(["vec_id"])
+
+
+def query_buckets(
+    buckets: DataFrame,
+    qids,
+    prefix: str = "",
+    max_flips: int = 0,
+    num_planes: int = 0,
+) -> DataFrame:
+    """``(qid, table_idx, bucket[, __qv])`` probe rows — the one
+    query-side bucket build of every LSH route. ``buckets`` holds ``(vec_id, table_idx,
+    bucket)`` rows covering the queries (the corpus bucket frame, or any
+    frame hashed like it: the filter on the query ids is pushed to the
+    scan). ``prefix`` mirrors the stored partition value of an at-rest
+    index (:func:`lsh_write_index` writes ``"b" + bucket``). With
+    ``max_flips`` a query also probes every bucket within that many sign
+    flips of its own (multi-probe), one row per probed bucket, so the
+    probe stays ONE equi-join rather than a Hamming-predicate
+    nested-loop join."""
+    from itertools import combinations
+
+    bucket = F.concat(F.lit(prefix), F.col("bucket"))
+    if max_flips:
+        bit = [F.substring("bucket", i + 1, 1) for i in range(num_planes)]
+        flip = [F.translate(b, "01", "10") for b in bit]
+        flips = [
+            F.concat(
+                F.lit(prefix),
+                *[flip[i] if i in s else bit[i] for i in range(num_planes)],
+            )
+            for n in range(max_flips + 1)
+            for s in combinations(range(num_planes), n)
+        ]
+        bucket = F.explode(F.array(*flips))
+    # a bucket frame that carries vectors hands the query's along
+    # (``__qv``), so the ranker needs no second broadcast of the query rows
+    qv = [F.col("__v").alias("__qv")] if "__v" in buckets.columns else []
+    return buckets.filter(_in_pred("vec_id", qids)).select(
+        F.col("vec_id").alias("qid"), "table_idx", bucket.alias("bucket"), *qv
     )
+
+
+def lsh_candidates(
+    buckets: DataFrame, qb: DataFrame, embeddings: DataFrame | None = None
+) -> DataFrame:
+    """The one LSH probe: corpus ``buckets`` rows sharing a ``(table_idx,
+    bucket)`` with a query's probe rows ``qb`` (:func:`query_buckets`),
+    in ONE broadcast equi-join — the MinHash band-join shape, never
+    all-pairs; on an at-rest index the join keys are its partition
+    columns, so dynamic partition pruning opens only the probed bucket
+    directories. Rows that carry ``(label, __v)`` (one table, one bucket
+    per vector) are candidates as they stand, the query's ``__qv`` riding
+    the probe row; otherwise the distinct
+    ``(qid, vec_id)`` pairs — a vector can share several tables'
+    buckets, and a crash-retried append can store a row twice — join
+    the vectors of ``embeddings`` once (:func:`with_vectors`)."""
+    hits = buckets.join(F.broadcast(qb), ["table_idx", "bucket"]).filter(
+        F.col("vec_id") != F.col("qid")
+    )
+    if embeddings is None:
+        return hits.drop("table_idx", "bucket")
+    return with_vectors(embeddings, hits.select("qid", "vec_id").dropDuplicates())
+
+
+def knn_join_lsh(
+    embeddings: DataFrame,
+    query_ids,
+    k: int,
+    num_planes: int = 4,
+    dim: int = 64,
+    max_flips: int = 0,
+) -> DataFrame:
+    """Single-table sign-random-projection LSH top-``k`` for every query:
+    exact cosine only over vectors sharing the query's bucket. With
+    2^num_planes buckets the candidate set shrinks geometrically; recall
+    is tuned by num_planes. ``max_flips`` > 0 is multi-probe LSH (Lv et
+    al., "Multi-probe LSH", VLDB'07): the same one table, but each query
+    also probes every bucket within ``max_flips`` sign flips of its own
+    — the memory-lean alternative to more tables
+    (:func:`knn_join_lsh_multitable`)."""
+    flat = _single_table_buckets(embeddings, num_planes, dim)
+    qb = query_buckets(flat, query_ids, max_flips=max_flips, num_planes=num_planes)
+    return rank_candidates(lsh_candidates(flat, qb), embeddings, query_ids, k)
+
+
+def knn_join_lsh_multitable(
+    embeddings: DataFrame,
+    query_ids,
+    k: int,
+    num_tables: int = 16,
+    num_planes: int = 4,
+    dim: int = 64,
+    index: DataFrame | None = None,
+    predicate=None,
+) -> DataFrame:
+    """OR-amplified LSH top-``k`` for every query: ``num_tables``
+    independent hash tables (table t uses the deterministic planes
+    ``t*num_planes .. (t+1)*num_planes-1``), candidates = vectors sharing
+    the query's bucket in ANY table, then exact cosine over the distinct
+    union. Per-table neighbor capture q becomes ``1-(1-q)^L`` at the cost
+    of a ~L/2^planes-of-corpus candidate scan.
+
+    Inline, the corpus buckets come from the codegen'd comp→proj→buck
+    pipeline (:func:`_multitable_buckets`); with ``index`` (the at-rest
+    :func:`lsh_write_index` layout) only the queries are hashed and the
+    probe prunes the index's bucket directories — the L*planes
+    projection passes happened once, at build. ``predicate`` (any Column
+    over ``vec_id``/``label``) is FILTERED vector search: it is applied
+    in the candidate stage (pre-filter), so the ranking covers only
+    qualifying vectors and surfaces k survivors whenever they exist,
+    where post-filtering a fixed shortlist loses recall."""
+    hashed = _multitable_buckets(embeddings, num_tables, num_planes, dim)
+    qb = query_buckets(hashed, query_ids, prefix="" if index is None else "b")
+    cand = lsh_candidates(hashed if index is None else index, qb, embeddings)
+    if predicate is not None:
+        cand = cand.filter(predicate)
+    return rank_candidates(cand, embeddings, query_ids, k)
 
 
 def lsh_write_index(
@@ -896,78 +823,13 @@ def lsh_append_index(
     ``_temporary`` and moves them at job commit, so a crash mid-job leaves
     no visible partial rows; a crash DURING commit can leave a subset of
     the delta visible. The retry simply re-appends: duplicate (vec_id,
-    table_idx, bucket) rows are harmless to serving because the indexed
-    query de-duplicates candidate ids before ranking
-    (:func:`ann_lsh_multitable_topk_indexed` ``dropDuplicates``) — append
-    is semantically idempotent, also test-asserted. On a transactional
+    table_idx, bucket) rows are harmless to serving because the probe
+    de-duplicates candidate ids before ranking (:func:`lsh_candidates`)
+    — append is semantically idempotent, also test-asserted. On a transactional
     table format the append becomes one atomic commit."""
     _multitable_buckets(new_embeddings, num_tables, num_planes, dim).withColumn(
         "bucket", F.concat(F.lit("b"), F.col("bucket"))
     ).write.mode("append").partitionBy("table_idx", "bucket").parquet(path)
-
-
-def probe_index_candidates(
-    index: DataFrame, qb: DataFrame, query_vec_id: int
-) -> DataFrame:
-    """Distinct candidate ids from an at-rest bucket index probed by the
-    query's (__qtable, __qbucket) list — the partition-column equi-join
-    dynamic partition pruning keys on. ONE definition shared by the
-    cosine indexed route and the MIPS indexed route (plans/mips.py), the
-    same no-desync rationale as :func:`_bucket_candidate_ids`."""
-    return (
-        index.join(
-            F.broadcast(qb),
-            (F.col("table_idx") == F.col("__qtable"))
-            & (F.col("bucket") == F.col("__qbucket")),
-        )
-        .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id")
-        .dropDuplicates(["vec_id"])
-    )
-
-
-def ann_lsh_multitable_topk_indexed(
-    embeddings: DataFrame,
-    index: DataFrame,
-    query_vec_id: int,
-    k: int = 20,
-    num_tables: int = 16,
-    num_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Multitable LSH top-k served from the at-rest bucket index: the
-    query's bucket list (recomputed for one vector — a pruned scan) joins
-    the index on its PARTITION columns (table_idx, bucket), dynamic
-    partition pruning drops every non-probed bucket directory, the
-    distinct candidate ids semi-join back to the vectors, exact cosine
-    ranks. Identical results to :func:`ann_lsh_multitable_topk`."""
-    qb = _multitable_buckets(
-        embeddings.filter(F.col("vec_id") == query_vec_id),
-        num_tables,
-        num_planes,
-        dim,
-    ).select(
-        F.col("table_idx").alias("__qtable"),
-        # lsh_write_index stores "b"-prefixed buckets (string-typed
-        # partition values); mirror the prefix on the query side.
-        F.concat(F.lit("b"), F.col("bucket")).alias("__qbucket"),
-    )
-    cand_ids = probe_index_candidates(index, qb, query_vec_id)
-    qvec = _query_vec(embeddings, query_vec_id)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    return (
-        vecs.join(cand_ids, "vec_id")
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
 
 
 # --- single-layer NSW graph ANN ----------------------------------------------
@@ -1106,127 +968,6 @@ def nsw_topk_batch(
     )
 
 
-def probe_index_candidates_batch(index: DataFrame, qb: DataFrame) -> DataFrame:
-    """Batch twin of :func:`probe_index_candidates` (VERDICT r7 #3): a
-    QUERY-SET bucket table (qid, __qtable, __qbucket) joins the at-rest
-    index on its partition columns in ONE broadcast equi-join — dynamic
-    partition pruning opens the union of all probed bucket directories
-    once, instead of one index pass per query. Returns distinct
-    (qid, vec_id) candidate pairs with self-matches dropped per query."""
-    return (
-        index.join(
-            F.broadcast(qb),
-            (F.col("table_idx") == F.col("__qtable"))
-            & (F.col("bucket") == F.col("__qbucket")),
-        )
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-        .dropDuplicates(["qid", "vec_id"])
-    )
-
-
-def knn_join_rerank(
-    cand: DataFrame,
-    vecs: DataFrame,
-    qvecs: DataFrame,
-    score,
-    score_col: str,
-    k: int,
-) -> DataFrame:
-    """Shared batch-serving rerank (review: this shape was forking into
-    per-module copies): distinct (qid, vec_id) candidates join the
-    vector table ("vec_id", "label", "__v") and the broadcast query
-    vectors ("qid", "__qv") ONCE; a per-qid row_number window ranks by
-    the rounded score (desc, vec_id ties) and keeps top-``k``. One
-    definition of the rounding/tie-break discipline for the LSH-cosine
-    and MIPS-dot batch routes, the same no-desync rationale as
-    :func:`probe_index_candidates`."""
-    from pyspark.sql import Window
-
-    wk = Window.partitionBy("query_vec_id").orderBy(
-        F.col(score_col).desc(), F.col("vec_id")
-    )
-    return (
-        cand.join(vecs, "vec_id")
-        .join(qvecs, "qid")
-        .select(
-            F.col("qid").alias("query_vec_id"),
-            "vec_id",
-            "label",
-            F.round(score(F.col("__v"), F.col("__qv")), 6).alias(score_col),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .drop("rk")
-    )
-
-
-def knn_join_lsh_indexed(
-    embeddings: DataFrame,
-    index: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    num_tables: int = 16,
-    num_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Batch k-NN join served from the at-rest multitable LSH bucket
-    index: every query in ``query_ids`` computes its bucket list in one
-    pruned pass over the query rows, the query-set probes the index's
-    partition columns in one join (DPP opens only probed directories),
-    and ONE exact-cosine rerank ranks all candidates per query
-    (row_number window) — the ``knn_join_vec10`` discipline on the LSH
-    index family. The corpus is scanned a CONSTANT number of times
-    regardless of query count (plan-pinned in tests/test_vector.py);
-    per-query results equal :func:`ann_lsh_multitable_topk_indexed`."""
-    qids = list(query_ids)
-    qb = _multitable_buckets(
-        embeddings.filter(F.col("vec_id").isin(qids)),
-        num_tables,
-        num_planes,
-        dim,
-    ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("table_idx").alias("__qtable"),
-        # lsh_write_index stores "b"-prefixed buckets (string-typed
-        # partition values); mirror the prefix on the query side.
-        F.concat(F.lit("b"), F.col("bucket")).alias("__qbucket"),
-    )
-    cand = probe_index_candidates_batch(index, qb)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("__v")
-    )
-    qvecs = F.broadcast(
-        embeddings.filter(F.col("vec_id").isin(qids)).select(
-            F.col("vec_id").alias("qid"),
-            as_double(F.col("embedding")).alias("__qv"),
-        )
-    )
-    return knn_join_rerank(cand, vecs, qvecs, cosine, "cosine_sim", k)
-
-
-def probe_centroids_batch(
-    cents: DataFrame, qvecs: DataFrame, n_probe: int
-) -> DataFrame:
-    """Batch twin of :func:`probe_centroids`: rank the broadcast codebook
-    against EVERY query vector (``qvecs``: (qid, qvec)) in one plan —
-    per-qid row_number window, centroid-id tie-break — returning
-    (qid, centroid_id) probe pairs. The codebook and the query set are
-    both dimension-sized, so the whole probe stage is broadcast-local."""
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("qid").orderBy(
-        F.col("__qsim").desc(), F.col("centroid_id")
-    )
-    return (
-        cents.crossJoin(F.broadcast(qvecs))
-        .withColumn("__qsim", cosine(F.col("cvec"), F.col("qvec")))
-        .withColumn("__rk", F.row_number().over(pw))
-        .filter(F.col("__rk") <= n_probe)
-        .select("qid", "centroid_id")
-    )
-
-
 def nsw_append_graph(
     adjacency: DataFrame,
     old_buckets: DataFrame,
@@ -1308,46 +1049,6 @@ def nsw_append_index(
         os.remove(stale_marker)
     new_buck.write.mode("append").parquet(path + "_buckets")
     appended.sortWithinPartitions("src").write.mode("overwrite").parquet(path)
-
-
-def ann_lsh_multitable_topk_filtered(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    predicate,
-    k: int = 20,
-    num_tables: int = 16,
-    num_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """FILTERED vector search (round 8) — the production ANN query shape
-    'top-k neighbors WHERE <metadata predicate>', with the predicate
-    pushed into the CANDIDATE stage (pre-filter), not applied to a fixed
-    shortlist afterwards: post-filtering a top-k loses recall whenever
-    the predicate is selective (a k-list with f qualifying rows serves
-    only f results), while the pre-filter ranks only qualifying vectors
-    and always surfaces k survivors when they exist — the gap is
-    test-measured in tests/test_vector.py. ``predicate`` is any Column
-    over the vector table's metadata (vec_id, label); at rest the same
-    shape applies the predicate between the bucket probe and the rerank,
-    where it also prunes the point-lookup join."""
-    flat = _multitable_buckets(embeddings, num_tables, num_planes, dim)
-    qvec = _query_vec(embeddings, query_vec_id)
-    cand_ids = _bucket_candidate_ids(flat, query_vec_id)
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("vec")
-    )
-    return (
-        vecs.join(cand_ids, "vec_id")
-        .filter(predicate)
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("vec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(k)
-    )
 
 
 # --- DiskANN-class (Vamana) on-disk graph index --------------------------------
@@ -1741,7 +1442,7 @@ def vamana_insert_graph(
 
 # --- multi-layer HNSW ----------------------------------------------------------
 #
-# The hierarchy the single-layer NSW route stood in for (VERDICT r11 #6):
+# The hierarchy the single-layer NSW route stood in for:
 # nodes get geometric levels (p = 1/4 per step), every layer l holds the
 # LSH-bucketed top-M neighbor graph over the nodes with level >= l, and a
 # query greedily descends from a deterministic top-layer entry point — the
@@ -1920,20 +1621,21 @@ def hnsw_topk_batch(
     qids = sorted({int(q) for q in query_ids})
     is_q = _in_pred("vec_id", qids)
     stats = sorted(
-        levels.groupBy(F.least("level", F.lit(max_level)).alias("level"))
-        .agg(
-            F.min(F.when(~is_q, F.col("vec_id"))).alias("mn"),
-            F.collect_set(F.when(is_q, F.col("vec_id"))).alias("qs"),
-        )
-        .collect(),
-        key=lambda r: -r["level"],
+        collect_bounded(
+            levels.groupBy(F.least("level", F.lit(max_level)).alias("level")).agg(
+                F.min(F.when(~is_q, F.col("vec_id"))).alias("mn"),
+                F.collect_set(F.when(is_q, F.col("vec_id"))).alias("qs"),
+            ),
+            max_level + 1,
+        ),
+        key=lambda r: -r[0],
     )
     entry: dict[int, tuple[int, int]] = {}
     for q in qids:
-        for r in stats:
-            ids = [i for i in (r["mn"], *r["qs"]) if i is not None and i != q]
+        for level, mn, qs in stats:
+            ids = [i for i in (mn, *qs) if i is not None and i != q]
             if ids:
-                entry[q] = (r["level"], min(ids))
+                entry[q] = (level, min(ids))
                 break
     top = max((lvl for lvl, _ in entry.values()), default=0)
     return _graph_topk(

@@ -243,7 +243,7 @@ WHERE list_cosine_similarity(a.e, b.e) >= 0.4
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (>= 0.4): the semantic-dedup
     shape. Brute-force all-pairs with a broadcast right side here (the
-    exact baseline); the LSH-bucketed variant (ann_lsh_topk) is the scale
+    exact baseline); the LSH-bucketed variant (knn_join_lsh) is the scale
     path — bucket first, exact-compare within buckets only."""
     from apache_beam_challange_spark.functions.vector import as_double, cosine
 

@@ -1048,8 +1048,7 @@ def hybrid_rrf_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded before the final cut. Both arms are the engine's existing
     retrieval operators; the fusion adds one tiny join over two
     top-depth lists."""
-    from apache_beam_challange_spark.functions.vector import as_double, cosine
-    from apache_beam_challange_spark.operators.similarity import _query_vec
+    from apache_beam_challange_spark.operators.similarity import knn_join_exact
 
     lex = (
         _bm25_scores(spark, sf_dir)
@@ -1063,25 +1062,11 @@ def hybrid_rrf_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = _query_vec(emb, 0)
-    vec = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        )
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("v"), F.col("__qvec")), 6).alias("cs"),
-        )
-        .orderBy(F.col("cs").desc(), F.col("doc_id"))
-        .limit(_RRF_DEPTH)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.col("cs").desc(), F.col("doc_id")))
-            .alias("r_vec"),
-        )
+    vec = knn_join_exact(emb, [0], _RRF_DEPTH).select(
+        F.col("vec_id").alias("doc_id"),
+        F.row_number()
+        .over(Window.orderBy(F.col("cosine_sim").desc(), F.col("vec_id")))
+        .alias("r_vec"),
     )
     fused = (
         lex.join(vec, "doc_id", "full_outer")

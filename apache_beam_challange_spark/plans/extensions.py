@@ -44,8 +44,10 @@ from apache_beam_challange_spark.operators.clustering import (
 from apache_beam_challange_spark.operators.graph import dedup_clusters
 from apache_beam_challange_spark.operators.relational import tfidf_top_terms
 from apache_beam_challange_spark.operators.similarity import (
-    ann_lsh_topk,
-    cosine_topk,
+    knn_join_exact,
+    knn_join_ivf,
+    knn_join_lsh,
+    knn_join_lsh_multitable,
     nsw_topk_batch,
     nsw_write_index,
 )
@@ -901,13 +903,9 @@ def ivf_topk_trained_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAINED centroids, probe the 2 nearest, exact-search only those.
     Composes operators/clustering.py with operators/similarity.py; the
     oracle chains the unrolled k-means CTEs into the IVF probe SQL."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ivf_topk_with_centroids,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_centroids(emb, k=4, n_iter=2)
-    return ivf_topk_with_centroids(emb, cents, query_vec_id=0, k=20, n_probe=2)
+    return knn_join_ivf(emb, [0], 20, n_probe=2, cents=cents).drop("query_vec_id")
 
 
 @query(
@@ -948,20 +946,16 @@ ORDER BY cosine_sim DESC, a.vec_id
 LIMIT 20""",
 )
 def ivf_retrain_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF RE-TRAINING (VERDICT r8 #8's remaining serving
-    niche): the 2-round codebook is published AT REST (versioned-pointer
-    discipline, sources/publish.py), read back, and continued for ONE
-    more Lloyd round from the STORED state before serving. The oracle is
-    a from-scratch THREE-round CTE chain — hash equality proves the
-    retraining contract exactly: resume-from-stored(m rounds)+n ==
-    train(m+n), i.e. periodic re-training is trajectory continuation,
-    never a silently different model. (Parquet doubles round-trip
-    exactly; every Lloyd update is a deterministic fixed-point function
-    of (corpus, centroids) — operators/clustering.py.) Drift/balance
-    behavior is pinned separately in tests/test_quantization.py."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ivf_topk_with_centroids,
-    )
+    """Incremental IVF RE-TRAINING: the 2-round codebook is published AT REST
+    (versioned-pointer discipline, sources/publish.py), read back, and
+    continued for ONE more Lloyd round from the STORED state before serving.
+    The oracle is a from-scratch THREE-round CTE chain — hash equality
+    proves the retraining contract exactly: resume-from-stored(m rounds)+n
+    == train(m+n), i.e. periodic re-training is trajectory continuation,
+    never a silently different model. (Parquet doubles round-trip exactly;
+    every Lloyd update is a deterministic fixed-point function of (corpus,
+    centroids) — operators/clustering.py.) Drift/balance behavior is pinned
+    separately in tests/test_quantization.py."""
     from apache_beam_challange_spark.sources.publish import (
         publish,
         read_published,
@@ -974,7 +968,7 @@ def ivf_retrain_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish(kmeans_centroids(emb, k=4, n_iter=2), base)
         stored = read_published(spark, base)
     retrained = kmeans_centroids(emb, k=4, n_iter=1, init_cents=stored)
-    return ivf_topk_with_centroids(emb, retrained, query_vec_id=0, k=20, n_probe=2)
+    return knn_join_ivf(emb, [0], 20, n_probe=2, cents=retrained).drop("query_vec_id")
 
 
 @query("pq_topk_vec0", oracle=pq_oracle_sql())
@@ -1021,7 +1015,8 @@ def cosine_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-20 against vector 0 — the ANN baseline:
     one narrow scan + partial-top-k merge, zero shuffles."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, query_vec_id=0, k=20)
+    return knn_join_exact(emb, [0], 20).drop("query_vec_id")
+
 
 
 _ANN_CTE = """
@@ -1074,12 +1069,12 @@ def ann_lsh_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — kept as the building-block baseline; the SERVABLE path is
     ``ann_lsh_multitable_topk_vec0`` (OR-amplification, recall 0.85)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_topk(emb, query_vec_id=0, k=20, num_planes=4, dim=64)
+    return knn_join_lsh(emb, [0], 20, num_planes=4, dim=64).drop("query_vec_id")
 
 
 # 16 tables x 4 planes: global plane index p in 0..63, table = p // 4,
 # bucket = the table's 4 sign bits in plane order — identical layout to
-# operators.similarity.ann_lsh_multitable_topk(num_tables=16). The
+# operators.similarity.knn_join_lsh_multitable(num_tables=16). The
 # bucket-table prefix is shared by the single-query and batch oracles.
 _ANN_MULTI_BUCK_CTE = """
 vecs AS (
@@ -1133,14 +1128,9 @@ def ann_lsh_multitable_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured recall@20 = 0.85 vs exact (floor 0.80 pinned in
     tests/test_vector.py), vs 0.10 for the single-table baseline. One
     band-shaped equi-join on (table_idx, bucket); no all-pairs anywhere."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_multitable_topk(
-        emb, query_vec_id=0, k=20, num_tables=16, num_planes=4, dim=64
-    )
+    ranked = knn_join_lsh_multitable(emb, [0], 20, num_tables=16, num_planes=4, dim=64)
+    return ranked.drop("query_vec_id")
 
 
 @query(
@@ -1244,10 +1234,8 @@ def ivf_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook, probe the query's 2 nearest inverted lists, exact-search only
     those (~2/8 of the table). The second ANN family next to LSH buckets;
     also fully oracle-verified."""
-    from apache_beam_challange_spark.operators.similarity import ivf_topk
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(emb, query_vec_id=0, k=20, n_probe=2)
+    return knn_join_ivf(emb, [0], 20, n_probe=2).drop("query_vec_id")
 
 
 @query(
@@ -1271,15 +1259,15 @@ def ivf_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning, so non-probed lists are skipped at the FILE level. Same
     oracle as ivf_topk_vec0 — the index must be semantically invisible."""
     from apache_beam_challange_spark.operators.similarity import (
-        ivf_topk_indexed,
+        IVF_CODEBOOK,
         ivf_write_index,
     )
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "ivf_index_8", "embeddings")
     if not is_materialized(path):
-        ivf_write_index(emb, path, (0, 1, 2, 3, 4, 5, 6, 7))
+        ivf_write_index(emb, path, IVF_CODEBOOK)
     index = read_parquet(spark, path)
-    return ivf_topk_indexed(emb, index, query_vec_id=0, k=20, n_probe=2)
+    return knn_join_ivf(emb, [0], 20, n_probe=2, index=index).drop("query_vec_id")
 
 
 _PQ_CTES, _PQ_JOINS, _PQ_ADC = pq_parts_ctes()
@@ -1309,14 +1297,13 @@ def ivfpq_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     (precision stage — no float vectors read). Both stages are the
     already-verified operators composed; the oracle chains the IVF CTEs
     into the per-subspace PQ chains."""
-    from apache_beam_challange_spark.operators.similarity import ivf_candidates
+    from apache_beam_challange_spark.operators.similarity import (
+        centroid_table,
+        ivf_candidates,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"),
-        as_double(F.col("embedding")).alias("cvec"),
-    )
-    cand = ivf_candidates(emb, cents, query_vec_id=0, n_probe=2)
+    cand = ivf_candidates(emb, centroid_table(emb), [0], n_probe=2)
     return pq_topk(emb, query_vec_id=0, k_results=20, candidates=cand)
 
 
@@ -1379,12 +1366,8 @@ def knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     many-queries-at-once shape a curation pipeline runs, vs the
     single-query ann_* entries). The oracle reuses the IVF assign CTE and
     ranks per query over the probed lists."""
-    from apache_beam_challange_spark.operators.similarity import knn_join_ivf
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return knn_join_ivf(
-        emb.filter(F.col("vec_id") < 10), emb, k=5, n_probe=2
-    )
+    return knn_join_ivf(emb, list(range(10)), 5, n_probe=2)
 
 
 _IVFPQ_BATCH_LUTS = ",\n".join(
@@ -1650,14 +1633,9 @@ def ann_lsh_multiprobe_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket space; with production plane counts (16-64 planes) the probe
     set stays a vanishing fraction. The memory-lean twin of the 16-table
     OR amplification."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multiprobe_topk,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_multiprobe_topk(
-        emb, query_vec_id=0, k=20, num_planes=4, dim=64, max_flips=2
-    )
+    ranked = knn_join_lsh(emb, [0], 20, num_planes=4, dim=64, max_flips=2)
+    return ranked.drop("query_vec_id")
 
 
 @query("opq_topk_vec0", oracle=opq_oracle_sql())
@@ -1867,10 +1845,8 @@ def ann_lsh_multitable_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> Da
     query's 16 bucket ids join the partition columns so pruning opens
     only the probed directories. Same oracle as the inline multitable
     query — the index must be semantically invisible."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk_indexed,
-        lsh_write_index,
-    )
+    from apache_beam_challange_spark.operators.similarity import lsh_write_index
+
     emb = load_table(spark, sf_dir, "embeddings")
     # layer name versioned (_b): the stored bucket format changed to
     # "b"-prefixed strings, so pre-existing content-keyed artifacts from
@@ -1879,9 +1855,10 @@ def ann_lsh_multitable_topk_indexed_vec0(spark: SparkSession, sf_dir: str) -> Da
     if not is_materialized(path):
         lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
     index = read_parquet(spark, path)
-    return ann_lsh_multitable_topk_indexed(
-        emb, index, query_vec_id=0, k=20, num_tables=16, num_planes=4, dim=64
+    ranked = knn_join_lsh_multitable(
+        emb, [0], 20, num_tables=16, num_planes=4, dim=64, index=index
     )
+    return ranked.drop("query_vec_id")
 
 
 @query(
@@ -1907,7 +1884,7 @@ LIMIT 20
 """.strip(),
 )
 def ann_lsh_filtered_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTERED vector search (round 8): top-20 cosine neighbors of
+    """FILTERED vector search: top-20 cosine neighbors of
     vector 0 among vectors of a DIFFERENT label — the 'ANN WHERE
     metadata predicate' shape every production vector store serves. The
     predicate is PRE-FILTERED into the candidate stage (ranked only over
@@ -1915,15 +1892,10 @@ def ann_lsh_filtered_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_vector.py measures the recall gap post-filtering leaves
     on this exact query. The query's label is a documented 1-row scalar
     lookup (the watermark-scalar discipline)."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk_filtered,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     qlab = emb.filter(F.col("vec_id") == 0).select("label").head()[0]
-    return ann_lsh_multitable_topk_filtered(
-        emb, query_vec_id=0, predicate=F.col("label") != qlab, k=20
-    )
+    ranked = knn_join_lsh_multitable(emb, [0], 20, predicate=F.col("label") != qlab)
+    return ranked.drop("query_vec_id")
 
 
 _ANN_LSH_BATCH_ORACLE = f"""
@@ -1951,27 +1923,23 @@ ORDER BY query_vec_id, cosine_sim DESC, vec_id
 
 @query("knn_join_lsh_vec10", oracle=_ANN_LSH_BATCH_ORACLE)
 def knn_join_lsh_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch k-NN join over the AT-REST multitable LSH index (VERDICT r7
-    #3): top-5 neighbors for EVERY query in a 10-vector batch — the
-    query set's bucket lists probe the index partition columns in ONE
-    broadcast equi-join (DPP opens the union of probed directories
-    once), then one windowed exact-cosine rerank ranks all queries. The
-    corpus is never rescanned per query: the plan contains a CONSTANT
-    number of embeddings scans regardless of batch size (pinned in
-    tests/test_vector.py). The oracle replays the same 16-table buckets
-    partitioned by qid."""
-    from apache_beam_challange_spark.operators.similarity import (
-        knn_join_lsh_indexed,
-        lsh_write_index,
-    )
+    """Batch k-NN join over the AT-REST multitable LSH index: top-5 neighbors
+    for EVERY query in a 10-vector batch — the query set's bucket lists
+    probe the index partition columns in ONE broadcast equi-join (DPP opens
+    the union of probed directories once), then one windowed exact-cosine
+    rerank ranks all queries. The corpus is never rescanned per query: the
+    plan contains a CONSTANT number of embeddings scans regardless of batch
+    size (pinned in tests/test_vector.py). The oracle replays the same
+    16-table buckets partitioned by qid."""
+    from apache_beam_challange_spark.operators.similarity import lsh_write_index
+
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "lsh_index_16x4_b", "embeddings")
     if not is_materialized(path):
         lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
     index = read_parquet(spark, path)
-    return knn_join_lsh_indexed(
-        emb, index, query_ids=list(range(10)), k=5,
-        num_tables=16, num_planes=4, dim=64,
+    return knn_join_lsh_multitable(
+        emb, list(range(10)), 5, num_tables=16, num_planes=4, dim=64, index=index
     )
 
 

@@ -42,10 +42,11 @@ from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, dot
 from apache_beam_challange_spark.operators.similarity import (
-    _bucket_candidate_ids,
     _multitable_buckets,
-    _query_vec,
-    probe_index_candidates,
+    exact_candidates,
+    lsh_candidates,
+    query_buckets,
+    rank_candidates,
 )
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import (
@@ -86,35 +87,46 @@ def mips_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine rankings coincide; tests/test_mips.py proves the norm
     sensitivity on a constructed varied-norm fixture instead."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return mips_topk(emb, query_vec_id=0, k=_TOPK)
+    return mips_topk(emb, [0], _TOPK).drop("query_vec_id")
 
 
-def mips_topk(embeddings: DataFrame, query_vec_id: int, k: int) -> DataFrame:
-    """Exact MIPS top-k of ``embeddings`` (vec_id, label, embedding)
-    against one stored vector — the reusable arm the registry query and
-    the constructed-fixture tests share."""
-    vecs = embeddings.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
+
+def mips_topk(embeddings: DataFrame, query_ids, k: int) -> DataFrame:
+    """Exact MIPS top-``k`` of ``embeddings`` (vec_id, label, embedding)
+    for every query in ``query_ids``: the brute-force candidate stage
+    ranked by the unnormalized dot product."""
+    cand = exact_candidates(embeddings, query_ids)
+    return rank_candidates(cand, embeddings, query_ids, k, dot, "dot_score")
+
+
+def mips_lsh_topk(
+    embeddings: DataFrame, query_ids, k: int, index: DataFrame | None = None
+) -> DataFrame:
+    """Augmented-LSH MIPS top-``k`` for every query in ``query_ids``: the
+    16-table LSH probe over the augmented frame, ranked by exact dot.
+    Each query hashes as ``[q, 0]`` — its augmented component is 0 BY
+    CONSTRUCTION, so its buckets need no corpus norm. The corpus side is
+    hashed inline (:func:`_augmented_frame`, vec 0 carrying the
+    designated query row's 0 component) or read from the at-rest
+    ``index`` (:func:`mips_lsh_write_index`, the same rows stored with
+    "b"-prefixed buckets)."""
+    q_aug = embeddings.select(
+        "vec_id",
+        F.concat(as_double(F.col("embedding")), F.array(F.lit(0.0))).alias(
+            "embedding"
+        ),
     )
-    qvec = _query_vec(embeddings, query_vec_id)
-    return _dot_rerank(vecs.filter(F.col("vec_id") != query_vec_id), qvec, k)
-
-
-def _dot_rerank(base: DataFrame, qvec: DataFrame, k: int) -> DataFrame:
-    """Exact-dot TakeOrdered rerank over (vec_id, label, v) rows — ONE
-    definition of the rounding/tie-break discipline for all three MIPS
-    arms (exact, inline LSH, indexed), so a change can never
-    desynchronize the route-equality invariant the tests pin (review)."""
-    return (
-        base.crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "label",
-            F.round(dot(F.col("v"), F.col("__qvec")), 6).alias("dot_score"),
+    qb = query_buckets(
+        _multitable_buckets(q_aug, _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM),
+        query_ids,
+        prefix="" if index is None else "b",
+    )
+    if index is None:
+        index = _multitable_buckets(
+            _augmented_frame(embeddings), _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM
         )
-        .orderBy(F.col("dot_score").desc(), F.col("vec_id"))
-        .limit(k)
-    )
+    cand = lsh_candidates(index, qb, embeddings)
+    return rank_candidates(cand, embeddings, query_ids, k, dot, "dot_score")
 
 
 # The oracle replays the identical augmentation + 65-dim sin-hash: the
@@ -322,15 +334,7 @@ def mips_augmented_lsh_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
     the proven multitable band-join shape. Recall@20 vs the exact twin
     is measured and pinned in tests/test_mips.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
-    flat = _multitable_buckets(
-        _augmented_frame(emb), _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM
-    )
-    cand_ids = _bucket_candidate_ids(flat, query_vec_id=0)
-    qvec = _query_vec(emb, 0)
-    return _dot_rerank(vecs.join(cand_ids, "vec_id"), qvec, _TOPK)
+    return mips_lsh_topk(emb, [0], _TOPK).drop("query_vec_id")
 
 
 @query("mips_augmented_lsh_topk_indexed_vec0", oracle=_MIPS_LSH_ORACLE)
@@ -355,27 +359,8 @@ def mips_augmented_lsh_topk_indexed_vec0(
     path = warehouse_path(sf_dir, "mips_lsh_index_16x4_b", "embeddings")
     if not is_materialized(path, parts=(path + "_meta",)):
         mips_lsh_write_index(emb, path)
-    index = read_parquet(spark, path)
-    # query-side buckets: one augmented row ([q, 0]), a pruned 1-row pass
-    q_aug = emb.filter(F.col("vec_id") == 0).select(
-        "vec_id",
-        F.concat(
-            as_double(F.col("embedding")), F.array(F.lit(0.0))
-        ).alias("embedding"),
-    )
-    qb = _multitable_buckets(
-        q_aug, _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM
-    ).select(
-        F.col("table_idx").alias("__qtable"),
-        # the stored partition value is "b"-prefixed (string-typed)
-        F.concat(F.lit("b"), F.col("bucket")).alias("__qbucket"),
-    )
-    cand_ids = probe_index_candidates(index, qb, query_vec_id=0)
-    vecs = emb.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("v")
-    )
-    qvec = _query_vec(emb, 0)
-    return _dot_rerank(vecs.join(cand_ids, "vec_id"), qvec, _TOPK)
+    ranked = mips_lsh_topk(emb, [0], _TOPK, index=read_parquet(spark, path))
+    return ranked.drop("query_vec_id")
 
 
 _MIPS_BATCH_ORACLE = f"""
@@ -429,48 +414,19 @@ ORDER BY query_vec_id, dot_score DESC, vec_id
 @query("mips_knn_join_vec10", oracle=_MIPS_BATCH_ORACLE)
 def mips_knn_join_vec10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch MIPS k-NN join served from the AT-REST augmented-bucket
-    index (VERDICT r7 #3): top-5 by exact dot for EVERY query in a
+    index: top-5 by exact dot for EVERY query in a
     10-vector batch. Each query's augmented component is 0 BY
     CONSTRUCTION, so the whole query-set's bucket lists come from one
     pruned pass over the 10 query rows — no stored norm needed to serve
     — and probe the index partition columns in ONE broadcast equi-join
-    (DPP opens the union of probed directories once). One windowed
-    exact-dot rerank ranks all queries; the corpus scan count is
+    (DPP opens the union of probed directories once); one rank serves
+    every query (:func:`mips_lsh_topk`); the corpus scan count is
     CONSTANT in batch size (pinned in tests/test_mips.py). Stored-side
     quirk replayed by the oracle: vec 0 hashes at rest with augmentation
     0 (it is the testbed's designated single-query row), so it can reach
     candidacy for queries 1..9 only through those buckets."""
-    from apache_beam_challange_spark.operators.similarity import (
-        knn_join_rerank,
-        probe_index_candidates_batch,
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     path = warehouse_path(sf_dir, "mips_lsh_index_16x4_b", "embeddings")
     if not is_materialized(path, parts=(path + "_meta",)):
         mips_lsh_write_index(emb, path)
-    index = read_parquet(spark, path)
-    q_aug = emb.filter(F.col("vec_id") < 10).select(
-        "vec_id",
-        F.concat(
-            as_double(F.col("embedding")), F.array(F.lit(0.0))
-        ).alias("embedding"),
-    )
-    qb = _multitable_buckets(
-        q_aug, _MIPS_TABLES, _MIPS_PLANES, _MIPS_DIM
-    ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("table_idx").alias("__qtable"),
-        # the stored partition value is "b"-prefixed (string-typed)
-        F.concat(F.lit("b"), F.col("bucket")).alias("__qbucket"),
-    )
-    cand = probe_index_candidates_batch(index, qb)
-    vecs = emb.select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("__v")
-    )
-    qvecs = F.broadcast(
-        emb.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"),
-            as_double(F.col("embedding")).alias("__qv"),
-        )
-    )
-    return knn_join_rerank(cand, vecs, qvecs, dot, "dot_score", 5)
+    return mips_lsh_topk(emb, list(range(10)), 5, index=read_parquet(spark, path))

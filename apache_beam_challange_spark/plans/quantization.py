@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from apache_beam_challange_spark.functions.vector import as_double, cosine
+from apache_beam_challange_spark.operators.similarity import rank_candidates
 from apache_beam_challange_spark.plans.registry import query
 from apache_beam_challange_spark.sources.catalog import load_table
 
@@ -126,15 +127,21 @@ def bq_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("hamming").asc(), F.col("vec_id"))
         .limit(_BQ_SHORTLIST)
     )
-    return (
-        short.select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(_TOPK)
+    return _rerank(emb, short)
+
+
+def _rerank(emb: DataFrame, short: DataFrame) -> DataFrame:
+    """Exact-cosine top-20 of vector 0 over a shortlist's float rows,
+    through the exact-rerank core's one ranker."""
+    cand = short.select(
+        F.lit(0).cast("long").alias("qid"),
+        "vec_id",
+        "label",
+        F.col("v").alias("__v"),
+        F.col("qv").alias("__qv"),
     )
+    ranked = rank_candidates(cand, emb, [0], _TOPK)
+    return ranked.drop("query_vec_id")
 
 
 _PREFIX_DIM = 16
@@ -193,12 +200,4 @@ def matryoshka_topk_vec0(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("prefix_sim").desc(), F.col("vec_id"))
         .limit(_MAT_SHORTLIST)
     )
-    return (
-        short.select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-        .limit(_TOPK)
-    )
+    return _rerank(emb, short)

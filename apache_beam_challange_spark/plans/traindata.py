@@ -2121,10 +2121,10 @@ def mmr_candidate_sims(spark: SparkSession, sf_dir: str, k_cand: int = 50):
     top-k cut, so it is k_cand x k_cand by construction — never
     corpus-sized (plan-asserted in tests/test_plans.py)."""
     from apache_beam_challange_spark.functions.vector import as_double, cosine
-    from apache_beam_challange_spark.operators.similarity import cosine_topk
+    from apache_beam_challange_spark.operators.similarity import knn_join_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand = cosine_topk(emb, query_vec_id=0, k=k_cand)
+    cand = knn_join_exact(emb, [0], k_cand)
     cvecs = cand.select("vec_id", "label", "cosine_sim").join(
         emb.select("vec_id", "embedding"), "vec_id"
     )

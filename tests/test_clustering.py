@@ -112,7 +112,7 @@ def test_opq_allocation_balances_and_recall_not_regressed(spark):
         opq_variance_keys,
         pq_topk,
     )
-    from apache_beam_challange_spark.operators.similarity import cosine_topk
+    from apache_beam_challange_spark.operators.similarity import knn_join_exact
 
     emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     m, dim = 4, 64
@@ -142,7 +142,7 @@ def test_opq_allocation_balances_and_recall_not_regressed(spark):
     energies = [sum(keys[d] for d in g) for g in subs]
     assert max(energies) - min(energies) <= max(keys.values())
 
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    exact = {r["vec_id"] for r in knn_join_exact(emb, [0], 20).collect()}
     pq = {r["vec_id"] for r in pq_topk(emb, 0, k_results=20).collect()}
     opq = {
         r["vec_id"]

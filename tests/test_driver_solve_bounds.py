@@ -181,3 +181,14 @@ def test_opq_collects_one_key_per_dim(spark, collect_sizes, sf_dir):
     keys, *rounds = collect_sizes
     assert keys <= 64, f"opq variance keys {keys} > 64 dims"
     assert len(rounds) == 1 and rounds[0] <= 4 * 64, rounds
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_BIG])
+def test_hnsw_entry_stats_collect_one_row_per_level(spark, collect_sizes, sf_dir):
+    """HNSW's entry rule reads one stats row per capped level (min
+    non-query vec_id and the queries on it) — never a row per vector."""
+    from apache_beam_challange_spark.operators.similarity import HNSW_MAX_LEVEL
+    from apache_beam_challange_spark.plans.wave8 import hnsw_knn_join_vec10
+
+    got = _max_collect(spark, collect_sizes, hnsw_knn_join_vec10, sf_dir)
+    assert got <= HNSW_MAX_LEVEL + 1, f"hnsw entry stats {got} > levels"

@@ -68,7 +68,7 @@ def test_mips_ranking_is_norm_sensitive_on_varied_norm_fixture(spark):
         ],
         "vec_id long, label string, embedding array<double>",
     )
-    got = [r.vec_id for r in mips_topk(emb, query_vec_id=0, k=3).collect()]
+    got = [r.vec_id for r in mips_topk(emb, [0], 3).collect()]
     assert got == [3, 1, 2]  # dot: 5.0 > 2.0 > 0.99; cosine would be 1,2,3
 
 

@@ -55,12 +55,46 @@ def test_column_pruning(plans):
     assert scan_lines and all("props" not in l for l in scan_lines)
 
 
-def test_cosine_topk_has_no_shuffle(plans):
-    """Brute-force similarity must be scan + broadcast + TakeOrdered —
-    zero hash exchanges."""
-    p = plans("cosine_topk_vec0")
-    assert "Exchange hashpartitioning" not in p
+#: every one-query registered route ranked by the exact-rerank core
+#: (operators/similarity.rank_candidates), with the score it rounds and
+#: whether its candidate stage is narrow (no aggregate before the rank)
+_ONE_QUERY_RERANK = {
+    "cosine_topk_vec0": ("cosine_sim", True),
+    "ann_lsh_topk_vec0": ("cosine_sim", True),
+    "ann_lsh_multiprobe_topk_vec0": ("cosine_sim", True),
+    "ann_lsh_multitable_topk_vec0": ("cosine_sim", False),
+    "ann_lsh_multitable_topk_indexed_vec0": ("cosine_sim", False),
+    "ann_lsh_filtered_topk_vec0": ("cosine_sim", False),
+    "ivf_topk_vec0": ("cosine_sim", False),
+    "ivf_topk_indexed_vec0": ("cosine_sim", False),
+    "ivf_topk_trained_vec0": ("cosine_sim", False),
+    "ivf_retrain_topk_vec0": ("cosine_sim", False),
+    "ivfpq_refined_topk_vec0": ("cosine_sim", False),
+    "ivfpq_refined_topk_indexed_vec0": ("cosine_sim", False),
+    "bq_topk_vec0": ("cosine_sim", True),
+    "matryoshka_topk_vec0": ("cosine_sim", True),
+    "mips_topk_vec0": ("dot_score", True),
+    "mips_augmented_lsh_topk_vec0": ("dot_score", False),
+    "mips_augmented_lsh_topk_indexed_vec0": ("dot_score", False),
+}
+
+
+@pytest.mark.parametrize("name", list(_ONE_QUERY_RERANK))
+def test_one_query_ann_rank_is_take_ordered(plans, name):
+    """A single query ranks as a partial-top-k merge
+    (TakeOrderedAndProject), never the per-qid window a batch ranks
+    with; no candidate stage degenerates to a CartesianProduct; and
+    routes whose candidate stage is narrow (brute force, single-table
+    and multi-probe LSH, the quantized shortlists) are scan + broadcast +
+    TakeOrdered with zero hash exchanges."""
+    score, narrow = _ONE_QUERY_RERANK[name]
+    p = plans(name)
     assert "TakeOrderedAndProject" in p
+    assert "CartesianProduct" not in p
+    windows = [line for line in p.splitlines() if "Window [" in line]
+    assert not any(score in line for line in windows), windows
+    if narrow:
+        assert "Exchange hashpartitioning" not in p
 
 
 def test_semi_join_stays_semi(plans):
@@ -622,15 +656,6 @@ def test_merge_compiles_to_joins_not_cartesian(plans):
         p = plans(name)
         assert "CartesianProduct" not in p, name
         assert ("SortMergeJoin" in p) or ("ShuffledHashJoin" in p), name
-
-
-def test_filtered_ann_is_band_join_plus_takeordered(plans):
-    """Filtered vector search keeps the multitable band-join shape — the
-    predicate rides the candidate stage, the rerank is a partial-top-k
-    merge, and nothing degenerates to an all-pairs scan."""
-    p = plans("ann_lsh_filtered_topk_vec0")
-    assert "TakeOrderedAndProject" in p
-    assert "CartesianProduct" not in p
 
 
 def test_interval_join_is_equi_join_not_nlj(plans):

@@ -648,7 +648,7 @@ def test_mips_topk_matches_numpy_on_generated_vectors(spark, vec_rows):
         [(i, f"v{i}", v) for i, v in enumerate(vec_rows)],
         "vec_id long, label string, embedding array<double>",
     )
-    got = [r.vec_id for r in mips_topk(emb, query_vec_id=0, k=5).collect()]
+    got = [r.vec_id for r in mips_topk(emb, [0], 5).collect()]
     q = np.asarray(vec_rows[0])
     scored = sorted(
         ((round(float(np.asarray(v) @ q), 6), i) for i, v in enumerate(vec_rows) if i != 0),

@@ -158,14 +158,14 @@ def _sse_and_max_share(emb, cents):
 
 def _recall_vs_exact(emb, cents, qid, k=10):
     from apache_beam_challange_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk_with_centroids,
+        knn_join_exact,
+        knn_join_ivf,
     )
 
-    exact = {r.vec_id for r in cosine_topk(emb, qid, k=k).collect()}
+    exact = {r.vec_id for r in knn_join_exact(emb, [qid], k).collect()}
     served = {
         r.vec_id
-        for r in ivf_topk_with_centroids(emb, cents, qid, k=k, n_probe=2).collect()
+        for r in knn_join_ivf(emb, [qid], k, n_probe=2, cents=cents).collect()
     }
     return len(exact & served) / k
 

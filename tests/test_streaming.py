@@ -748,7 +748,7 @@ def test_maintain_lsh_index_stream_matches_batch_rebuild(spark, tmp_path):
     from pyspark.sql.types import ArrayType, FloatType, IntegerType
 
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk_indexed,
+        knn_join_lsh_multitable,
         lsh_write_index,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
@@ -795,8 +795,8 @@ def test_maintain_lsh_index_stream_matches_batch_rebuild(spark, tmp_path):
     def serve(p):
         return [
             tuple(r)
-            for r in ann_lsh_multitable_topk_indexed(
-                emb, spark.read.parquet(p), query_vec_id=0, k=10
+            for r in knn_join_lsh_multitable(
+                emb, [0], 10, index=spark.read.parquet(p)
             ).collect()
         ]
 

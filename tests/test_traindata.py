@@ -886,11 +886,11 @@ def test_mmr_diversifies_vs_plain_topk(spark, sf_dir):
     import itertools
 
     from apache_beam_challange_spark.functions.vector import as_double, cosine
-    from apache_beam_challange_spark.operators.similarity import cosine_topk
+    from apache_beam_challange_spark.operators.similarity import knn_join_exact
     from apache_beam_challange_spark.sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    plain = [r.vec_id for r in cosine_topk(emb, 0, k=50).collect()]
+    plain = [r.vec_id for r in knn_join_exact(emb, [0], 50).collect()]
     mmr_rows = sorted(
         QS["mmr_diversified_topk_vec0"](spark, sf_dir).collect(),
         key=lambda r: r.rank,

@@ -9,8 +9,8 @@ from apache_beam_challange_spark.operators.similarity import (
     HNSW_UPPER_ROUNDS,
     NSW_ROUNDS,
     VAMANA_ROUNDS,
-    ann_lsh_topk,
-    cosine_topk,
+    knn_join_exact,
+    knn_join_lsh,
 )
 from conftest import TESTDATA_ROOT
 
@@ -43,7 +43,7 @@ def test_cosine_topk_ranks_expected(spark):
         (2, [0.0, 1.0, 0.0], 1),   # orthogonal
         (3, [-1.0, 0.0, 0.0], 1),  # opposite
     ]
-    out = cosine_topk(_vec_df(spark, rows), query_vec_id=0, k=3).collect()
+    out = knn_join_exact(_vec_df(spark, rows), [0], 3).collect()
     assert [r["vec_id"] for r in out] == [1, 2, 3]
     assert out[0]["cosine_sim"] > 0.99
 
@@ -55,9 +55,7 @@ def test_ann_lsh_recalls_identical_vector(spark):
         (1, [float(i) for i in range(64)], 0),          # exact duplicate
         (2, [float(63 - i) for i in range(64)], 1),     # reversed
     ]
-    out = ann_lsh_topk(
-        _vec_df(spark, rows), query_vec_id=0, k=5, num_planes=4, dim=64
-    ).collect()
+    out = knn_join_lsh(_vec_df(spark, rows), [0], 5, num_planes=4, dim=64).collect()
     ids = [r["vec_id"] for r in out]
     assert ids[0] == 1 and out[0]["cosine_sim"] == 1.0
 
@@ -68,8 +66,7 @@ def test_ivf_indexed_matches_inline_and_prunes(spark, tmp_path):
     partitioned index scan, so non-probed inverted lists are skipped at
     the file level."""
     from apache_beam_challange_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_indexed,
+        knn_join_ivf,
         ivf_write_index,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
@@ -81,8 +78,8 @@ def test_ivf_indexed_matches_inline_and_prunes(spark, tmp_path):
     ivf_write_index(emb, path, cb)
     index = spark.read.parquet(path)
 
-    indexed = ivf_topk_indexed(emb, index, 0, k=10, codebook_ids=cb, n_probe=2)
-    inline = ivf_topk(emb, 0, k=10, codebook_ids=cb, n_probe=2)
+    indexed = knn_join_ivf(emb, [0], 10, n_probe=2, index=index)
+    inline = knn_join_ivf(emb, [0], 10, n_probe=2)
     assert [tuple(r) for r in indexed.collect()] == [
         tuple(r) for r in inline.collect()
     ]
@@ -108,25 +105,18 @@ def test_ann_recall_floors_vs_exact(spark):
         pq_topk,
     )
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multiprobe_topk,
-        ann_lsh_multitable_topk,
-        ann_lsh_topk,
-        cosine_topk,
-        ivf_topk,
+        knn_join_ivf,
+        knn_join_lsh_multitable,
     )
 
     emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    exact = {r["vec_id"] for r in knn_join_exact(emb, [0], 20).collect()}
     recalls = {}
     for name, df, floor in [
-        ("lsh", ann_lsh_topk(emb, 0, k=20, num_planes=4, dim=64), 0.05),
-        ("lsh_multi", ann_lsh_multitable_topk(emb, 0, k=20, num_tables=16), 0.80),
-        (
-            "lsh_multiprobe",
-            ann_lsh_multiprobe_topk(emb, 0, k=20, max_flips=2),
-            0.80,
-        ),
-        ("ivf", ivf_topk(emb, 0, k=20, n_probe=2), 0.90),
+        ("lsh", knn_join_lsh(emb, [0], 20, num_planes=4, dim=64), 0.05),
+        ("lsh_multi", knn_join_lsh_multitable(emb, [0], 20, num_tables=16), 0.80),
+        ("lsh_multiprobe", knn_join_lsh(emb, [0], 20, max_flips=2), 0.80),
+        ("ivf", knn_join_ivf(emb, [0], 20, n_probe=2), 0.90),
         ("pq", pq_topk(emb, 0, k_results=20), 0.30),
         ("ivfpq_refined", ivfpq_refined_topk(emb, 0, k_results=20), 0.90),
     ]:
@@ -154,7 +144,6 @@ def test_ivfpq_indexed_matches_inline_and_prunes(spark, tmp_path):
     from apache_beam_challange_spark.operators.similarity import ivf_candidates
     from apache_beam_challange_spark.sources.catalog import load_table
     from apache_beam_challange_spark.functions.vector import as_double
-    from pyspark.sql import functions as F
 
     sf_dir = f"{TESTDATA_ROOT}/sf0.001"
     emb = load_table(spark, sf_dir, "embeddings")
@@ -170,7 +159,7 @@ def test_ivfpq_indexed_matches_inline_and_prunes(spark, tmp_path):
         F.col("vec_id").alias("centroid_id"),
         as_double(F.col("embedding")).alias("cvec"),
     )
-    cand = ivf_candidates(emb, cents, query_vec_id=0, n_probe=2)
+    cand = ivf_candidates(emb, cents, [0], 2)
     inline = pq_topk(emb, query_vec_id=0, k_results=10, candidates=cand)
     assert [tuple(r) for r in indexed.collect()] == [
         tuple(r) for r in inline.collect()
@@ -184,21 +173,17 @@ def test_knn_join_matches_single_query_ivf(spark):
     """The batch kNN join restricted to one query must return exactly the
     single-query IVF top-k (same codebook, probes, rounding, tie-break) —
     batching is a plan optimization, not a semantics change."""
-    from apache_beam_challange_spark.operators.similarity import (
-        ivf_topk,
-        knn_join_ivf,
-    )
+    from apache_beam_challange_spark.operators.similarity import knn_join_ivf
 
     emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.001/embeddings.parquet")
     single = [
         (r["vec_id"], r["cosine_sim"])
-        for r in ivf_topk(emb, 3, k=5, n_probe=2).collect()
+        for r in knn_join_ivf(emb, [3], 5, n_probe=2).collect()
     ]
     batch = [
         (r["vec_id"], r["cosine_sim"])
-        for r in knn_join_ivf(
-            emb.filter(F.col("vec_id") == 3), emb, k=5, n_probe=2
-        )
+        for r in knn_join_ivf(emb, list(range(10)), 5, n_probe=2)
+        .filter(F.col("query_vec_id") == 3)
         .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
         .collect()
     ]
@@ -240,8 +225,7 @@ def test_amplified_lsh_always_finds_exact_duplicate(spark):
     duplicate recall is 1.0 by construction for both amplified LSH paths,
     the guarantee embedding-dedup relies on."""
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multiprobe_topk,
-        ann_lsh_multitable_topk,
+        knn_join_lsh_multitable,
     )
 
     base = [float((i * 37) % 19 - 9) for i in range(64)]
@@ -251,8 +235,8 @@ def test_amplified_lsh_always_finds_exact_duplicate(spark):
     ]
     df = _vec_df(spark, rows)
     for out in (
-        ann_lsh_multitable_topk(df, 0, k=3, num_tables=16).collect(),
-        ann_lsh_multiprobe_topk(df, 0, k=3, max_flips=2).collect(),
+        knn_join_lsh_multitable(df, [0], 3, num_tables=16).collect(),
+        knn_join_lsh(df, [0], 3, max_flips=2).collect(),
     ):
         assert out[0]["vec_id"] == 1 and out[0]["cosine_sim"] == 1.0
 
@@ -264,8 +248,7 @@ def test_lsh_indexed_matches_inline(spark, tmp_path):
     probed (table_idx, bucket) directories — static or dynamic partition
     filters on the index read, never a full-index scan."""
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk,
-        ann_lsh_multitable_topk_indexed,
+        knn_join_lsh_multitable,
         lsh_write_index,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
@@ -275,10 +258,8 @@ def test_lsh_indexed_matches_inline(spark, tmp_path):
     lsh_write_index(emb, path, num_tables=16, num_planes=4, dim=64)
     index = spark.read.parquet(path)
 
-    served = ann_lsh_multitable_topk_indexed(
-        emb, index, query_vec_id=0, k=10, num_tables=16
-    )
-    inline = ann_lsh_multitable_topk(emb, query_vec_id=0, k=10, num_tables=16)
+    served = knn_join_lsh_multitable(emb, [0], 10, num_tables=16, index=index)
+    inline = knn_join_lsh_multitable(emb, [0], 10, num_tables=16)
     assert [tuple(r) for r in served.collect()] == [
         tuple(r) for r in inline.collect()
     ]
@@ -297,7 +278,7 @@ def test_lsh_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk_indexed,
+        knn_join_lsh_multitable,
         lsh_append_index,
         lsh_write_index,
     )
@@ -327,8 +308,8 @@ def test_lsh_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
     def serve(path):
         return [
             tuple(r)
-            for r in ann_lsh_multitable_topk_indexed(
-                emb, spark.read.parquet(path), query_vec_id=0, k=10
+            for r in knn_join_lsh_multitable(
+                emb, [0], 10, index=spark.read.parquet(path)
             ).collect()
         ]
 
@@ -350,8 +331,8 @@ def test_ivf_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
 
     from apache_beam_challange_spark.operators.similarity import (
         ivf_append_index,
-        ivf_topk_indexed,
         ivf_write_index,
+        knn_join_ivf,
     )
     from apache_beam_challange_spark.sources.catalog import load_table
 
@@ -375,9 +356,8 @@ def test_ivf_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
     def serve(p):
         return [
             tuple(r)
-            for r in ivf_topk_indexed(
-                emb, spark.read.parquet(p), query_vec_id=0, k=10,
-                codebook_ids=ids,
+            for r in knn_join_ivf(
+                emb, [0], 10, index=spark.read.parquet(p)
             ).collect()
         ]
 
@@ -398,13 +378,12 @@ def test_nsw_recall_floor_vs_exact(spark):
         NSW_M,
         NSW_ROUNDS,
         NSW_SEED_STEP,
-        cosine_topk,
         nsw_build_graph,
         nsw_topk_batch,
     )
 
     emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    exact = {r["vec_id"] for r in knn_join_exact(emb, [0], 20).collect()}
     adj = nsw_build_graph(emb).localCheckpoint()
     # graph degree bound: no node keeps more than M neighbors
     from pyspark.sql import functions as F
@@ -420,13 +399,16 @@ def test_nsw_recall_floor_vs_exact(spark):
     assert len(got) <= 20 and budget < 3000  # fixed serve budget
 
 
-def _graph_search(spark, sf_dir, family):
-    """``serve(query_ids, k)`` for one graph-ANN family over a graph
-    freshly built from the sf0.001 embeddings."""
+def _ann_search(spark, sf_dir, family, tmp_path):
+    """``serve(query_ids, k)`` for one ANN route over the sf0.001
+    embeddings: a graph family over a freshly built graph, or an
+    exact-rerank route (at-rest indexes written under ``tmp_path``)."""
     from apache_beam_challange_spark.operators import similarity as S
+    from apache_beam_challange_spark.plans import mips
     from apache_beam_challange_spark.sources.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "index")
     if family == "nsw":
         adj = S.nsw_build_graph(emb).localCheckpoint()
         return lambda ids, k: S.nsw_topk_batch(emb, adj, ids, k=k)
@@ -434,9 +416,41 @@ def _graph_search(spark, sf_dir, family):
         adj = S.vamana_build_graph(emb).localCheckpoint()
         med = S.vamana_medoid(emb).first()["medoid_id"]
         return lambda ids, k: S.vamana_topk_batch(emb, adj, med, ids, k=k)
-    adj = S.hnsw_build_graph(emb).localCheckpoint()
-    lv = S.hnsw_levels(emb).localCheckpoint()
-    return lambda ids, k: S.hnsw_topk_batch(emb, adj, lv, ids, k=k)
+    if family == "hnsw":
+        adj = S.hnsw_build_graph(emb).localCheckpoint()
+        lv = S.hnsw_levels(emb).localCheckpoint()
+        return lambda ids, k: S.hnsw_topk_batch(emb, adj, lv, ids, k=k)
+    if family == "ivf_at_rest":
+        S.ivf_write_index(emb, path, S.IVF_CODEBOOK)
+        index = spark.read.parquet(path)
+        return lambda ids, k: S.knn_join_ivf(emb, ids, k, index=index)
+    if family == "lsh_at_rest":
+        S.lsh_write_index(emb, path)
+        index = spark.read.parquet(path)
+        return lambda ids, k: S.knn_join_lsh_multitable(emb, ids, k, index=index)
+    if family == "mips_at_rest":
+        mips.mips_lsh_write_index(emb, path)
+        index = spark.read.parquet(path)
+        return lambda ids, k: mips.mips_lsh_topk(emb, ids, k, index=index)
+    return {
+        "exact": lambda ids, k: S.knn_join_exact(emb, ids, k),
+        "ivf": lambda ids, k: S.knn_join_ivf(emb, ids, k),
+        "lsh": lambda ids, k: S.knn_join_lsh(emb, ids, k),
+        "lsh_multiprobe": lambda ids, k: S.knn_join_lsh(emb, ids, k, max_flips=2),
+        "lsh_multitable": lambda ids, k: S.knn_join_lsh_multitable(emb, ids, k),
+        "lsh_filtered": lambda ids, k: S.knn_join_lsh_multitable(
+            emb, ids, k, predicate=F.col("label") != 1
+        ),
+        "mips_exact": lambda ids, k: mips.mips_topk(emb, ids, k),
+        "mips_lsh": lambda ids, k: mips.mips_lsh_topk(emb, ids, k),
+    }[family]
+
+
+#: exact-rerank routes build their plans without a driver collect
+_RERANK_ROUTES = [
+    "exact", "ivf", "ivf_at_rest", "lsh", "lsh_multiprobe", "lsh_multitable",
+    "lsh_at_rest", "lsh_filtered", "mips_exact", "mips_lsh", "mips_at_rest",
+]
 
 
 @pytest.mark.parametrize(
@@ -444,25 +458,26 @@ def _graph_search(spark, sf_dir, family):
     [
         ("nsw", 2 + NSW_ROUNDS),
         ("vamana", 2 + VAMANA_ROUNDS),
-        (
-            "hnsw",
-            2 + HNSW_MAX_LEVEL * (1 + HNSW_UPPER_ROUNDS) + 1 + NSW_ROUNDS,
-        ),
-    ],
-    ids=["nsw", "vamana", "hnsw"],
+        ("hnsw", 2 + HNSW_MAX_LEVEL * (1 + HNSW_UPPER_ROUNDS) + NSW_ROUNDS),
+    ]
+    + [(r, 0) for r in _RERANK_ROUTES],
+    ids=["nsw", "vamana", "hnsw"] + _RERANK_ROUTES,
 )
 def test_graph_search_query_alone_equals_in_batch(
-    spark, sf_dir, family, max_collects
+    spark, sf_dir, family, max_collects, tmp_path
 ):
-    """One search serves every graph-ANN family: a query's rows are
-    identical served alone and inside a batch of 8 (same trajectory,
-    scores and tie-breaks), and the driver's collect count stays within
-    the family's bound at both sizes — the seed fetch, then at most one
-    fetch per layer start and per round (HNSW adds its one entry-stats
-    collect), never one per query."""
+    """Every ANN route serves a query identically alone and inside a
+    batch of 8 (same candidates, scores and tie-breaks), and the
+    driver's collect count stays within the route's bound at both sizes.
+    Graph search: the seed fetch, then at most one fetch per layer start
+    and per round, never one per query (HNSW's entry stats go through
+    ``collect_bounded``, pinned in tests/test_driver_solve_bounds.py).
+    Exact-rerank routes (one candidate stage + one ranker) collect
+    nothing while building; a query alone ranks with a
+    TakeOrderedAndProject, a batch with a per-qid window."""
     from unittest import mock
 
-    serve = _graph_search(spark, sf_dir, family)
+    serve = _ann_search(spark, sf_dir, family, tmp_path)
     # patch the CONCRETE class (Spark 4 instances are
     # pyspark.sql.classic.dataframe.DataFrame, which overrides the base)
     DataFrame = type(spark.range(1))
@@ -540,14 +555,13 @@ def test_rank_visited_cut_keeps_rounding_ties(spark):
 
 @pytest.mark.slow
 def test_knn_join_lsh_corpus_scans_constant_in_batch_size(spark, tmp_path):
-    """VERDICT r7 #3 pin: the batched LSH kNN join never rescans the
+    """The batched LSH kNN join never rescans the
     corpus per query — the executed plan holds the SAME number of
     embeddings-parquet scans for 2 queries as for 10 (query-set probes
     are ONE broadcast join), the index read is DPP-pruned, and the batch
     answers equal the single-query indexed route per query."""
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk_indexed,
-        knn_join_lsh_indexed,
+        knn_join_lsh_multitable,
         lsh_write_index,
     )
 
@@ -565,8 +579,8 @@ def test_knn_join_lsh_corpus_scans_constant_in_batch_size(spark, tmp_path):
     # 5 constant scans: bucket pass + query vectors + corpus vectors +
     # the DPP subquery's replicated probe plan — what matters is the
     # count does NOT grow with the batch
-    small = knn_join_lsh_indexed(emb, index, list(range(2)), k=5)
-    large = knn_join_lsh_indexed(emb, index, list(range(10)), k=5)
+    small = knn_join_lsh_multitable(emb, list(range(2)), 5, index=index)
+    large = knn_join_lsh_multitable(emb, list(range(10)), 5, index=index)
     assert nscans(small) == nscans(large) <= 6
 
     got = {
@@ -574,9 +588,7 @@ def test_knn_join_lsh_corpus_scans_constant_in_batch_size(spark, tmp_path):
     }
     want = set()
     for qid in range(2):
-        for r in ann_lsh_multitable_topk_indexed(
-            emb, index, qid, k=5
-        ).collect():
+        for r in knn_join_lsh_multitable(emb, [qid], 5, index=index).collect():
             want.add((qid, r.vec_id, r.cosine_sim))
     assert got == want
 
@@ -682,7 +694,7 @@ def test_nsw_append_index_commit_discipline(spark, tmp_path):
 
 
 def test_filtered_ann_prefilter_beats_postfilter(spark):
-    """Round-8 filtered-ANN pin: (a) every returned row satisfies the
+    """Filtered-ANN pin: (a) every returned row satisfies the
     predicate; (b) the pre-filtered top-k returns MORE qualifying
     results than post-filtering the unfiltered top-k (the recall the
     pre-filter shape exists to recover) — and each one it returns ranks
@@ -690,32 +702,51 @@ def test_filtered_ann_prefilter_beats_postfilter(spark):
     from pyspark.sql import functions as SF
 
     from apache_beam_challange_spark.operators.similarity import (
-        ann_lsh_multitable_topk,
-        ann_lsh_multitable_topk_filtered,
-        cosine_topk,
+        knn_join_lsh_multitable,
     )
 
     emb = spark.read.parquet(f"{TESTDATA_ROOT}/sf0.01/embeddings.parquet")
     qlab = emb.filter(SF.col("vec_id") == 0).select("label").head()[0]
     pred = SF.col("label") != qlab
-    pre = ann_lsh_multitable_topk_filtered(emb, 0, pred, k=20).collect()
+    pre = knn_join_lsh_multitable(emb, [0], 20, predicate=pred).collect()
     assert len(pre) == 20
     assert all(r.label != qlab for r in pre)
 
     post = [
         r
-        for r in ann_lsh_multitable_topk(emb, 0, k=20).collect()
+        for r in knn_join_lsh_multitable(emb, [0], 20).collect()
         if r.label != qlab
     ]
     assert len(post) < len(pre), (len(post), len(pre))
 
     # qualifying ground truth: exact cosine over the filtered corpus
-    # (the query row itself must survive the filter for _query_vec)
+    # (the query row itself must survive the filter for query_vectors)
     truth = {
         r.vec_id
-        for r in cosine_topk(
-            emb.filter(pred | (SF.col("vec_id") == 0)), 0, k=20
+        for r in knn_join_exact(
+            emb.filter(pred | (SF.col("vec_id") == 0)), [0], 20
         ).collect()
     }
     recall = len({r.vec_id for r in pre} & truth) / 20
     assert recall >= 0.80, recall
+
+
+def test_rank_tail_lives_only_in_the_ranker():
+    """The rounded-score rank exists once: no exact-rerank module grows
+    its own ``.limit(`` tail outside the ranker's shape helper."""
+    import ast
+    import inspect
+
+    from apache_beam_challange_spark.operators import similarity
+    from apache_beam_challange_spark.plans import mips
+
+    hits = []
+    for mod in (similarity, mips):
+        for fn in ast.parse(inspect.getsource(mod)).body:
+            if isinstance(fn, ast.FunctionDef) and fn.name != "_top_k":
+                hits += [
+                    f"{mod.__name__}.{fn.name}:{node.lineno}"
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Attribute) and node.attr == "limit"
+                ]
+    assert not hits, f"rank through similarity.rank_candidates: {hits}"

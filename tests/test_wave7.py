@@ -221,7 +221,7 @@ def test_vamana_recall_floor(spark, sf_dir, vamana_graph):
     long-range edges buy (pure top-M graphs strand greedy search in
     local clusters)."""
     from apache_beam_challange_spark.operators.similarity import (
-        cosine_topk,
+        knn_join_exact,
         vamana_medoid,
         vamana_topk_batch,
     )
@@ -235,7 +235,7 @@ def test_vamana_recall_floor(spark, sf_dir, vamana_graph):
     }
     exact = {
         r["vec_id"]
-        for r in cosine_topk(emb, 0, k=20).collect()
+        for r in knn_join_exact(emb, [0], 20).collect()
         if r["vec_id"] != 0
     }
     assert len(got & exact) >= 0.8 * len(exact)
@@ -300,7 +300,7 @@ def test_vamana_insert_maintains_serving(spark, sf_dir):
     they belong there — serving quality holds without a rebuild."""
     from apache_beam_challange_spark.operators.similarity import (
         VAMANA_CAP,
-        cosine_topk,
+        knn_join_exact,
         vamana_build_graph,
         vamana_insert_graph,
         vamana_medoid,
@@ -335,7 +335,7 @@ def test_vamana_insert_maintains_serving(spark, sf_dir):
     }
     exact = {
         r["vec_id"]
-        for r in cosine_topk(emb, 0, k=20).collect()
+        for r in knn_join_exact(emb, [0], 20).collect()
         if r["vec_id"] != 0
     }
     assert len(got & exact) >= 0.8 * len(exact)

@@ -272,12 +272,12 @@ def test_hnsw_recall_floor_vs_exact(spark, hnsw_parts):
     schedule — upper layers 2x4, layer 0 8x16). The serve budget is
     corpus-size-independent: <= 1 + 2*2*4*8 + 8*16*16 scored vectors."""
     from apache_beam_challange_spark.operators.similarity import (
-        cosine_topk,
+        knn_join_exact,
         hnsw_topk_batch,
     )
 
     emb, adj, lv = hnsw_parts
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    exact = {r["vec_id"] for r in knn_join_exact(emb, [0], 20).collect()}
     got = {r["vec_id"] for r in hnsw_topk_batch(emb, adj, lv, [0], k=20).collect()}
     assert len(got & exact) / 20 >= 0.9
     assert 1 + 2 * 2 * 4 * 8 + 8 * 16 * 16 < 2200  # fixed serve budget
@@ -551,7 +551,7 @@ def test_hnsw_deep_hierarchy_recall_at_scale(spark):
     Also pins the empty-top-level fallback: serving descends from the
     highest POPULATED level at or under the cap."""
     from apache_beam_challange_spark.operators.similarity import (
-        cosine_topk,
+        knn_join_exact,
         hnsw_build_graph,
         hnsw_levels,
         hnsw_topk_batch,
@@ -567,7 +567,7 @@ def test_hnsw_deep_hierarchy_recall_at_scale(spark):
     top_pop = lv.agg(F.max("level")).collect()[0][0]
     assert lv.filter(F.col("level") >= top_pop).count() <= 32  # O(1) top
     adj = hnsw_build_graph(emb, max_level=ml).localCheckpoint()
-    exact = {r["vec_id"] for r in cosine_topk(emb, 0, k=20).collect()}
+    exact = {r["vec_id"] for r in knn_join_exact(emb, [0], 20).collect()}
     got = {
         r["vec_id"]
         for r in hnsw_topk_batch(emb, adj, lv, [0], k=20, max_level=ml).collect()

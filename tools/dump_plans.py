@@ -1,6 +1,8 @@
 """Regenerate PLANS.md: formatted physical plans of the flagship queries,
 as judge-readable evidence of the scale posture (pushdown, broadcast,
-partial aggregation, codegen)."""
+partial aggregation, codegen). ``python tools/dump_plans.py`` rewrites
+every section; ``python tools/dump_plans.py name ...`` only the named
+ones."""
 
 from __future__ import annotations
 
@@ -302,11 +304,25 @@ PLAN_EXCLUDED: dict[str, str] = {
 
 
 def main() -> None:
+    """``python tools/dump_plans.py [name ...]``: regenerate every section,
+    or only the named flagships' sections of the existing PLANS.md."""
     from apache_beam_challange_spark.session import get_spark
     import __spark_entry__ as e
 
+    only = sys.argv[1:]
+    unknown = sorted(set(only) - set(FLAGSHIPS))
+    if unknown:
+        raise SystemExit(f"not a PLANS.md flagship: {unknown}")
     spark = get_spark("plans-dump")
     qs = e.all_queries()
+    path = os.path.join(ROOT, "PLANS.md")
+    sections = {}
+    if only:
+        with open(path) as f:
+            text = f.read()
+        for chunk in text.split("\n## ")[1:]:
+            name = chunk.split("\n", 1)[0]
+            sections[name] = f"## {chunk.rstrip()}\n"
     out = [
         "# PLANS — physical plans of flagship queries (sf0.01)",
         "",
@@ -317,12 +333,15 @@ def main() -> None:
         "",
     ]
     for name in FLAGSHIPS:
+        if only and name not in only:
+            out.append(sections[name])
+            continue
         df = qs[name](spark, "/root/testdata/sf0.01")
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+    with open(path, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(FLAGSHIPS)} plans)")
+    print(f"wrote PLANS.md ({len(only or FLAGSHIPS)} plans regenerated)")
 
 
 if __name__ == "__main__":
