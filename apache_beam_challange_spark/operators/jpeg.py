@@ -1,12 +1,13 @@
 """Baseline JPEG (JFIF) codec — pure stdlib+numpy, exact-integer DCT path.
 
-Closes the JPEG half of the documented codec seam (multimodal.py keeps
-video as the remaining ``NotImplementedError``): a REAL baseline JPEG
-encoder and a full decoder — marker parser (APP0/DQT/SOF0/DHT/SOS),
-canonical Huffman decode with the standard Annex K luminance tables, DC
-prediction across blocks, byte unstuffing, dequantization, and an
-8x8 inverse DCT — with every lossy step in EXACT integer arithmetic so a
-SQL oracle can replay encode->decode reconstruction bit-for-bit:
+The JPEG member of the native codec family (``multimodal._decode_real``
+routes JPEG bytes here; MJPEG video in operators/video.py reuses it): a
+REAL baseline JPEG encoder and a full decoder — marker parser
+(APP0/DQT/SOF0/DHT/SOS), canonical Huffman decode with the standard
+Annex K luminance tables, DC prediction across blocks, byte unstuffing,
+dequantization, and an 8x8 inverse DCT — with every lossy step in EXACT
+integer arithmetic so a SQL oracle can replay encode->decode
+reconstruction bit-for-bit:
 
 - the 1-D DCT basis is the pinned 1e-6 fixed-point table
   :data:`JPEG_T_FP6` (``T[u][x] = alpha(u)/2 * cos((2x+1)u*pi/16)``,
@@ -35,12 +36,16 @@ dimensions are multiples of 8 so no edge-replication policy is needed.
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 
+from apache_beam_challange_spark.operators.multimodal import codec_stage
+from apache_beam_challange_spark.operators.parallelize import (
+    spread_for_python_stage,
+)
+
 if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 #: pinned 1e-6 fixed-point DCT-II basis, T[u][x] = alpha(u)/2 *
@@ -441,64 +446,36 @@ def decode_jpeg(data: bytes) -> tuple[int, int, "np.ndarray"]:
     return w, h, px.transpose(0, 2, 1, 3).reshape(h, w)
 
 
-# --- DataFrame plumbing (mapInPandas, same shape as the BMP/PNG family) -------
+# --- DataFrame plumbing (the codec stage, same shape as the BMP/PNG family) ---
 
 
 def attach_jpeg_image(docs: "DataFrame") -> "DataFrame":
     """documents -> (doc_id, jpeg binary): per-doc deterministic baseline
-    JPEG bytes, Arrow-batched."""
-    import pandas as pd
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "jpeg": [encode_jpeg(int(i)) for i in ids]}
-            )
-
-    # the documents parquet is often a single file/partition; the shared
-    # guard spreads the per-doc python codec work across executor cores
-    # (row-content deterministic — every downstream aggregate is order-free)
-    from apache_beam_challange_spark.operators.parallelize import (
-        spread_for_python_stage,
+    JPEG bytes through the codec stage. The documents parquet is often a
+    single file/partition, so the shared guard spreads the per-doc codec
+    work across executor cores (row-content deterministic — every
+    downstream aggregate is order-free)."""
+    return codec_stage(
+        spread_for_python_stage(docs.select("doc_id")),
+        lambda d: {"jpeg": encode_jpeg(d)},
+        "doc_id",
+        "doc_id long, jpeg binary",
     )
 
-    return spread_for_python_stage(docs.select("doc_id")).mapInPandas(
-        encode, "doc_id long, jpeg binary"
-    )
+
+def _jpeg_pixel_rows(blob: bytes) -> dict:
+    w, h, px = decode_jpeg(blob)
+    y, x = np.indices((h, w))
+    return {"y": y.ravel(), "x": x.ravel(), "recon": px.ravel()}
 
 
 def decode_jpeg_pixels(images: "DataFrame") -> "DataFrame":
     """(doc_id, jpeg) -> long-format reconstructed pixels
     (doc_id, y, x, recon): the REAL decode path — bitstream in, exact
     IDCT out — feeding relational feature/error aggregation."""
-    import pandas as pd
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, ys, xs, vs = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-                w, h, px = decode_jpeg(bytes(blob))
-                yy, xx = np.mgrid[0:h, 0:w]
-                ids.append(np.full(w * h, doc_id, np.int64))
-                ys.append(yy.ravel().astype(np.int64))
-                xs.append(xx.ravel().astype(np.int64))
-                vs.append(px.ravel().astype(np.int64))
-            if not ids:
-                yield pd.DataFrame(
-                    {"doc_id": [], "y": [], "x": [], "recon": []}
-                ).astype("int64")
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "y": np.concatenate(ys),
-                    "x": np.concatenate(xs),
-                    "recon": np.concatenate(vs),
-                }
-            )
-
-    return images.mapInPandas(extract, "doc_id long, y long, x long, recon long")
+    return codec_stage(
+        images, _jpeg_pixel_rows, "jpeg", "doc_id long, y long, x long, recon long"
+    )
 
 
 # --- color baseline: YCbCr 4:2:0, interleaved MCUs ----------------------------
@@ -840,54 +817,27 @@ def decode_jpeg_color(data: bytes) -> tuple[int, int, "np.ndarray"]:
 
 
 def attach_jpeg_color_image(docs: "DataFrame") -> "DataFrame":
-    import pandas as pd
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "jpeg": [encode_jpeg_color(int(i)) for i in ids]}
-            )
-
-    from apache_beam_challange_spark.operators.parallelize import (
-        spread_for_python_stage,
+    """documents -> (doc_id, jpeg binary): per-doc YCbCr 4:2:0 baseline
+    JPEG bytes, spread by the shared guard like :func:`attach_jpeg_image`."""
+    return codec_stage(
+        spread_for_python_stage(docs.select("doc_id")),
+        lambda d: {"jpeg": encode_jpeg_color(d)},
+        "doc_id",
+        "doc_id long, jpeg binary",
     )
 
-    return spread_for_python_stage(docs.select("doc_id")).mapInPandas(
-        encode, "doc_id long, jpeg binary"
-    )
+
+def _jpeg_color_pixel_rows(blob: bytes) -> dict:
+    w, h, px = decode_jpeg_color(blob)
+    y, x, c = np.indices((h, w, 3))
+    return {"y": y.ravel(), "x": x.ravel(), "c": c.ravel(), "recon": px.ravel()}
 
 
 def decode_jpeg_color_pixels(images: "DataFrame") -> "DataFrame":
     """(doc_id, jpeg) -> long-format RGB pixels (doc_id, y, x, c, recon)."""
-    import pandas as pd
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, ys, xs, cs, vs = [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["jpeg"]):
-                w, h, px = decode_jpeg_color(bytes(blob))
-                yy, xx, cc = np.mgrid[0:h, 0:w, 0:3]
-                ids.append(np.full(w * h * 3, doc_id, np.int64))
-                ys.append(yy.ravel().astype(np.int64))
-                xs.append(xx.ravel().astype(np.int64))
-                cs.append(cc.ravel().astype(np.int64))
-                vs.append(px.ravel().astype(np.int64))
-            if not ids:
-                yield pd.DataFrame(
-                    {"doc_id": [], "y": [], "x": [], "c": [], "recon": []}
-                ).astype("int64")
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "y": np.concatenate(ys),
-                    "x": np.concatenate(xs),
-                    "c": np.concatenate(cs),
-                    "recon": np.concatenate(vs),
-                }
-            )
-
-    return images.mapInPandas(
-        extract, "doc_id long, y long, x long, c long, recon long"
+    return codec_stage(
+        images,
+        _jpeg_color_pixel_rows,
+        "jpeg",
+        "doc_id long, y long, x long, c long, recon long",
     )

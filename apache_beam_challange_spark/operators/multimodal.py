@@ -1,18 +1,20 @@
 """Multimodal column plumbing (SURVEY.md §2.9): images/audio/video as
-opaque ``binary`` columns with typed metadata, processed by Arrow-batched
-``mapInPandas`` — the canonical Spark shape for decode / feature-extract /
-resize / frame-sample stages whose kernels are Python libraries.
+opaque ``binary`` columns with typed metadata, encoded and decoded by ONE
+Arrow-batched stage, :func:`codec_stage` — the canonical Spark shape for
+decode / feature-extract / resize / frame-sample stages whose kernels are
+Python libraries. Every codec wrapper here and in ``operators/jpeg.py``
+and ``operators/video.py`` is a single call to it with its own per-payload
+kernel.
 
-Three real codecs ship natively: uncompressed 24-bit BMP (pure numpy —
-actual file bytes with header, row padding, bottom-up storage), PCM-16
-RIFF/WAVE, and 8-bit truecolor PNG (stdlib zlib DEFLATE, scanline
-filters 0-4, chunked IDAT, CRC-32 — the compressed-format member).
-Formats needing external codecs (JPEG/video) remain a documented seam in
-``_decode_real``; a deterministic byte-level fake also stands in for fast
-tests. Everything Spark-side is real and tested either way: the binary
-column, the Arrow batch boundary, the output schema contract, and the
-partition-preserving plan (mapInPandas is a narrow transform — at 100 TB
-each executor decodes its own partitions; no shuffle, no driver traffic).
+Every codec ships natively: uncompressed 24-bit BMP (pure numpy — actual
+file bytes with header, row padding, bottom-up storage), PCM-16
+RIFF/WAVE, 8-bit truecolor PNG (stdlib zlib DEFLATE, scanline filters
+0-4, chunked IDAT, CRC-32), baseline JPEG grayscale and color
+(``operators/jpeg.py``) and MJPEG/AVI video (``operators/video.py``),
+all reachable through ``_decode_real``. A deterministic byte-level fake
+also stands in for fast tests. The stage is a narrow ``mapInArrow`` — at
+100 TB each executor decodes its own partitions; no shuffle, no driver
+traffic.
 
 The fake decoder is pure arithmetic on the bytes, which lets even this
 Python-UDF path be verified against a DuckDB oracle computing the same
@@ -22,12 +24,48 @@ features from the hex representation.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from apache_beam_challange_spark.sources.driver import ddl_schemas
+
+
+def codec_stage(
+    df: DataFrame, kernel: Callable[[object], dict], col: str, ddl: str
+) -> DataFrame:
+    """The one Arrow-batched codec stage: one narrow ``mapInArrow`` over
+    ``(doc_id, col)`` that calls ``kernel`` on each ``col`` value (an
+    encoder passes ``col="doc_id"`` and gets the document id). The kernel
+    returns the document's output columns after ``doc_id`` as a dict by
+    column name (extra keys are ignored): a scalar per column for one
+    output row, or equal-length 1-D numpy arrays for a fan-out of rows.
+    ``doc_id`` is repeated once per output row, each output column is
+    built once per batch, and every column is typed by ``ddl``."""
+    _, schema = ddl_schemas(ddl)
+    names = schema.names[1:]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            outs = [kernel(v) for v in batch.column(col).to_pylist()]
+            if not outs:
+                continue
+            ids = batch.column("doc_id").to_numpy()
+            cols = [[o[n] for o in outs] for n in names]
+            if isinstance(cols[0][0], np.ndarray):
+                ids = np.repeat(ids, [len(a) for a in cols[0]])
+                cols = [np.concatenate(c) for c in cols]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip([ids, *cols], schema)],
+                schema=schema,
+            )
+
+    inputs = ["doc_id"] if col == "doc_id" else ["doc_id", col]
+    return df.select(*inputs).mapInArrow(run, ddl)
+
 
 #: Output schema of the image feature extractor — fixed contract so
 #: downstream plans can be analyzed before any Python runs.
@@ -266,36 +304,19 @@ WAV_FEATURES_SCHEMA = (
 
 
 def attach_wav_audio(docs: DataFrame) -> DataFrame:
-    """Encode a real WAV payload per document (Arrow-batched, narrow)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "audio_bytes": [encode_wav(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        encode, schema="doc_id bigint, audio_bytes binary"
+    """Encode a real WAV payload per document (the codec stage; narrow)."""
+    return codec_stage(
+        docs,
+        lambda d: {"audio_bytes": encode_wav(d)},
+        "doc_id",
+        "doc_id bigint, audio_bytes binary",
     )
 
 
 def decode_wav_features(audio: DataFrame) -> DataFrame:
     """Decode real WAV bytes back to sample statistics — audio twin of the
-    BMP round-trip, same shuffle-free mapInPandas shape."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_wav(d) for d in pdf["audio_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[
-                ["doc_id", "sample_rate", "n_samples", "abs_sum", "first", "last"]
-            ]
-
-    return audio.mapInPandas(extract, schema=WAV_FEATURES_SCHEMA)
+    BMP round-trip, same shuffle-free codec stage."""
+    return codec_stage(audio, decode_wav, "audio_bytes", WAV_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -306,26 +327,11 @@ AUDIO_FEATURES_SCHEMA = (
 
 def decode_audio_features(audio: DataFrame) -> DataFrame:
     """Real-codec WAV decode feeding signal features (energy / peak /
-    zero crossings) — same shuffle-free mapInPandas shape as
+    zero crossings) — same shuffle-free codec stage as
     :func:`decode_wav_features`."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [wav_audio_features(d) for d in pdf["audio_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[
-                [
-                    "doc_id",
-                    "sample_rate",
-                    "n_samples",
-                    "energy",
-                    "peak",
-                    "zero_crossings",
-                ]
-            ]
-
-    return audio.mapInPandas(extract, schema=AUDIO_FEATURES_SCHEMA)
+    return codec_stage(
+        audio, wav_audio_features, "audio_bytes", AUDIO_FEATURES_SCHEMA
+    )
 
 
 BMP_FEATURES_SCHEMA = (
@@ -335,47 +341,22 @@ BMP_FEATURES_SCHEMA = (
 
 
 def attach_bmp_image(docs: DataFrame) -> DataFrame:
-    """Encode a real BMP payload per document (Arrow-batched; the encode
-    side of the codec round-trip). Narrow transform — each partition
-    encodes its own rows."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "image_bytes": [encode_bmp(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        encode, schema="doc_id bigint, image_bytes binary"
+    """Encode a real BMP payload per document (the encode side of the
+    codec round-trip). Narrow transform — each partition encodes its own
+    rows."""
+    return codec_stage(
+        docs,
+        lambda d: {"image_bytes": encode_bmp(d)},
+        "doc_id",
+        "doc_id bigint, image_bytes binary",
     )
 
 
 def decode_bmp_features(images: DataFrame) -> DataFrame:
     """Decode real BMP bytes back to features via ``_decode_real`` — the
-    full codec round-trip behind the same mapInPandas plumbing as the fake
-    kernel. No shuffle; at 100 TB each executor decodes its partitions."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_decode_real(d) for d in pdf["image_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[
-                [
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "n_bytes",
-                    "pix_sum",
-                    "corner_br",
-                ]
-            ]
-
-    return images.mapInPandas(extract, schema=BMP_FEATURES_SCHEMA)
+    full codec round-trip through the same stage as the fake kernel. No
+    shuffle; at 100 TB each executor decodes its partitions."""
+    return codec_stage(images, _decode_real, "image_bytes", BMP_FEATURES_SCHEMA)
 
 
 def _decode_fake(data: bytes) -> dict:
@@ -390,45 +371,10 @@ def _decode_fake(data: bytes) -> dict:
     }
 
 
-def decode_image_features(images: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the binary column. Each pandas
-    batch is processed vectorized-per-batch in one Python call — the 10-100x
-    win over row-at-a-time UDFs for any real decode kernel."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["image_bytes"].map(_decode_fake)
-            out = pd.DataFrame(list(feats))
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
-
-    return images.mapInPandas(extract, schema=IMAGE_FEATURES_SCHEMA)
-
-
 def decode_image_features_arrow(images: DataFrame) -> DataFrame:
-    """The same feature extraction through ``mapInArrow`` — skips the
-    Arrow->pandas conversion entirely (measured ~2x faster than the pandas
-    variant for this byte-level kernel). Same schema, same values; kept
-    alongside the pandas path, which real numpy/PIL kernels prefer."""
-    import pyarrow as pa
-
-    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            data = batch.column(batch.schema.get_field_index("image_bytes")).to_pylist()
-            feats = [_decode_fake(d) for d in data]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index("doc_id")),
-                    pa.array([f["n_bytes"] for f in feats], pa.int32()),
-                    pa.array([f["width"] for f in feats], pa.int32()),
-                    pa.array([f["height"] for f in feats], pa.int32()),
-                    pa.array([f["channels"] for f in feats], pa.int32()),
-                    pa.array([f["sum_bytes"] for f in feats], pa.int64()),
-                ],
-                names=["doc_id", "n_bytes", "width", "height", "channels", "sum_bytes"],
-            )
-
-    return images.mapInArrow(extract, schema=IMAGE_FEATURES_SCHEMA)
+    """Feature extraction over the binary column with the fake byte-level
+    decoder — one batch per Python call, no Arrow->pandas conversion."""
+    return codec_stage(images, _decode_fake, "image_bytes", IMAGE_FEATURES_SCHEMA)
 
 
 def resize_images(images: DataFrame, factor: int = 2) -> DataFrame:
@@ -437,40 +383,29 @@ def resize_images(images: DataFrame, factor: int = 2) -> DataFrame:
     schema contract, Arrow batching, and narrow plan shape are identical).
     Audio resampling is the same shape: binary payload + rate metadata."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "image_bytes": [
-                        bytes(data[::factor]) for data in pdf["image_bytes"]
-                    ],
-                }
-            )
-            out["n_bytes"] = out["image_bytes"].map(len)
-            yield out
+    def resize(data: bytes) -> dict:
+        out = bytes(data[::factor])
+        return {"image_bytes": out, "n_bytes": len(out)}
 
-    return images.mapInPandas(
-        resize, schema="doc_id bigint, image_bytes binary, n_bytes int"
+    return codec_stage(
+        images, resize, "image_bytes", "doc_id bigint, image_bytes binary, n_bytes int"
     )
 
 
 def sample_frames(images: DataFrame, every: int = 4, n_frames: int = 4) -> DataFrame:
     """Frame-sampling plumbing for "video" payloads: emit every ``every``-th
-    byte as a frame record (1->N explode inside mapInPandas). The real
+    byte as a frame record (a 1->N fan-out in the codec stage). The real
     version would seek keyframes with ffmpeg — same schema, same plan."""
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, data in zip(pdf["doc_id"], pdf["image_bytes"]):
-                for i in range(n_frames):
-                    pos = i * every
-                    if pos < len(data):
-                        rows.append((doc_id, i, data[pos]))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_byte"])
+    def frames(data: bytes) -> dict:
+        pos = np.arange(n_frames) * every
+        keep = pos < len(data)
+        return {
+            "frame_idx": np.arange(n_frames)[keep],
+            "frame_byte": np.frombuffer(data, np.uint8)[pos[keep]],
+        }
 
-    return images.mapInPandas(frames, schema=FRAME_SAMPLE_SCHEMA)
+    return codec_stage(images, frames, "image_bytes", FRAME_SAMPLE_SCHEMA)
 
 
 # --- perceptual hash (aHash) over decoded images ----------------------------
@@ -510,19 +445,11 @@ def _phash16_from_pixels(px: "np.ndarray") -> dict:
 
 
 def bmp_phash16(images: DataFrame) -> DataFrame:
-    """Perceptual hashes for a binary image column via mapInPandas — the
-    image twin of text fingerprinting: identical/near-identical renders
+    """Perceptual hashes for a binary image column via the codec stage —
+    the image twin of text fingerprinting: identical/near-identical renders
     collide on phash16, so exact-dedup machinery (hash groupBy) extends to
     decoded pixels. Narrow, no shuffle."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_bmp_phash16(d) for d in pdf["image_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[["doc_id", "width", "height", "phash16"]]
-
-    return images.mapInPandas(extract, schema=PHASH_SCHEMA)
+    return codec_stage(images, _bmp_phash16, "image_bytes", PHASH_SCHEMA)
 
 
 # --- real PNG codec (stdlib zlib; 8-bit truecolor, filters 0-4, chunked IDAT)
@@ -701,36 +628,19 @@ def decode_png(data: bytes) -> dict:
 
 
 def attach_png_image(docs: DataFrame) -> DataFrame:
-    """Encode a real PNG payload per document (Arrow-batched; narrow)."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "image_bytes": [encode_png(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        encode, schema="doc_id bigint, image_bytes binary"
+    """Encode a real PNG payload per document (the codec stage; narrow)."""
+    return codec_stage(
+        docs,
+        lambda d: {"image_bytes": encode_png(d)},
+        "doc_id",
+        "doc_id bigint, image_bytes binary",
     )
 
 
 def decode_png_features(images: DataFrame) -> DataFrame:
     """Decode real PNG bytes back to features via ``_decode_real`` — the
-    compressed-codec round-trip on the same mapInPandas plumbing."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_decode_real(d) for d in pdf["image_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[
-                ["doc_id", "width", "height", "channels", "pix_sum", "corner_br"]
-            ]
-
-    return images.mapInPandas(extract, schema=PNG_FEATURES_SCHEMA)
+    compressed-codec round-trip through the same codec stage."""
+    return codec_stage(images, _decode_real, "image_bytes", PNG_FEATURES_SCHEMA)
 
 
 def _png_phash16(data: bytes) -> dict:
@@ -746,66 +656,41 @@ def _png_phash16(data: bytes) -> dict:
 
 def png_phash16(images: DataFrame) -> DataFrame:
     """PNG-container twin of :func:`bmp_phash16`: same fingerprint, same
-    mapInPandas shape, pixels reconstructed through the DEFLATE/filter
-    chain instead of the padded-row parser."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_png_phash16(d) for d in pdf["image_bytes"]]
-            out = pd.DataFrame(feats)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out[["doc_id", "width", "height", "phash16"]]
-
-    return images.mapInPandas(extract, schema=PHASH_SCHEMA)
+    codec stage, pixels reconstructed through the DEFLATE/filter chain
+    instead of the padded-row parser."""
+    return codec_stage(images, _png_phash16, "image_bytes", PHASH_SCHEMA)
 
 
 WAV_SAMPLES_SCHEMA = "doc_id bigint, i int, s int"
 
 
+def _wav_sample_rows(data: bytes) -> dict:
+    _, samples = _parse_wav(data)
+    return {"i": np.arange(samples.size), "s": samples}
+
+
 def decode_wav_samples(audio: DataFrame) -> DataFrame:
     """Decode real WAV bytes to one ROW PER SAMPLE ``(doc_id, i, s)`` —
     the long-format decode that feeds relational signal processing
-    (e.g. the DFT-as-join spectral query). Same shuffle-free
-    mapInPandas shape as :func:`decode_wav_features`; the fan-out is
-    bounded by the clip length."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idx, vals = [], [], []
-            for doc_id, data in zip(pdf["doc_id"], pdf["audio_bytes"]):
-                _, samples = _parse_wav(data)
-                n = samples.size
-                ids.extend([int(doc_id)] * n)
-                idx.extend(range(n))
-                vals.extend(int(v) for v in samples)
-            yield pd.DataFrame({"doc_id": ids, "i": idx, "s": vals})
-
-    return audio.mapInPandas(extract, schema=WAV_SAMPLES_SCHEMA)
+    (e.g. the DFT-as-join spectral query). Same shuffle-free codec stage
+    as :func:`decode_wav_features`; the fan-out is bounded by the clip
+    length."""
+    return codec_stage(audio, _wav_sample_rows, "audio_bytes", WAV_SAMPLES_SCHEMA)
 
 
 BMP_PIXELS_SCHEMA = "doc_id bigint, x int, y int, gray int"
+
+
+def _bmp_pixel_rows(data: bytes) -> dict:
+    gray = _bmp_pixel_array(data).sum(axis=2, dtype=np.int64)
+    y, x = np.indices(gray.shape)
+    return {"x": x.ravel(), "y": y.ravel(), "gray": gray.ravel()}
 
 
 def decode_bmp_pixels(images: DataFrame) -> DataFrame:
     """Decode real BMP bytes to one ROW PER PIXEL ``(doc_id, x, y,
     gray)`` with gray = B+G+R (exact integer, 0..765) — the long-format
     decode that feeds relational image processing (e.g. the DCT-hash
-    query). Shuffle-free mapInPandas; fan-out bounded by the image
+    query). Shuffle-free codec stage; fan-out bounded by the image
     area."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, xs, ys, gs = [], [], [], []
-            for doc_id, data in zip(pdf["doc_id"], pdf["image_bytes"]):
-                px = _bmp_pixel_array(data).astype(np.int64)
-                h, w, _ = px.shape
-                gray = px.sum(axis=2)
-                for y in range(h):
-                    for x in range(w):
-                        ids.append(int(doc_id))
-                        xs.append(x)
-                        ys.append(y)
-                        gs.append(int(gray[y, x]))
-            yield pd.DataFrame({"doc_id": ids, "x": xs, "y": ys, "gray": gs})
-
-    return images.mapInPandas(extract, schema=BMP_PIXELS_SCHEMA)
+    return codec_stage(images, _bmp_pixel_rows, "image_bytes", BMP_PIXELS_SCHEMA)

@@ -36,7 +36,7 @@ no multimodal surface; this extends SURVEY.md §2.9's codec family.
 from __future__ import annotations
 
 import struct
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 
@@ -45,12 +45,12 @@ from apache_beam_challange_spark.operators.jpeg import (
     encode_jpeg_gray_px,
     jpeg_dims,
 )
+from apache_beam_challange_spark.operators.multimodal import codec_stage
 from apache_beam_challange_spark.operators.parallelize import (
     spread_for_python_stage,
 )
 
 if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
     from pyspark.sql import DataFrame
 
 #: frames per synthetic clip; frame f's pixels are
@@ -219,25 +219,32 @@ def decode_mjpeg(data: bytes) -> tuple[int, int, list["np.ndarray"]]:
     return w, h, frames
 
 
-# --- DataFrame plumbing (mapInPandas, the codec-family shape) ------------------
+# --- DataFrame plumbing (the codec stage) --------------------------------------
 
 
 def attach_mjpeg_video(docs: "DataFrame") -> "DataFrame":
     """documents -> (doc_id, avi binary): per-doc deterministic MJPEG/AVI
-    bytes, Arrow-batched; spread off file-count parallelism by the shared
-    guard (operators/parallelize.py)."""
-    import pandas as pd
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "avi": [encode_mjpeg(int(i)) for i in ids]}
-            )
-
-    return spread_for_python_stage(docs.select("doc_id")).mapInPandas(
-        encode, "doc_id long, avi binary"
+    bytes through the codec stage; spread off file-count parallelism by
+    the shared guard (operators/parallelize.py)."""
+    return codec_stage(
+        spread_for_python_stage(docs.select("doc_id")),
+        lambda d: {"avi": encode_mjpeg(d)},
+        "doc_id",
+        "doc_id long, avi binary",
     )
+
+
+def _mjpeg_pixel_rows(blob: bytes) -> dict:
+    _, _, frames = decode_mjpeg(blob)
+    px = np.stack(frames)  # [frame][y][x]
+    f, y, x = np.indices(px.shape)
+    return {
+        "frame_idx": f.ravel(),
+        "y": y.ravel(),
+        "x": x.ravel(),
+        "recon": px.ravel(),
+        "dabs": np.abs(np.diff(px, axis=0, prepend=px[:1])).ravel(),  # frame 0: 0
+    }
 
 
 def decode_mjpeg_pixels(videos: "DataFrame") -> "DataFrame":
@@ -253,41 +260,10 @@ def decode_mjpeg_pixels(videos: "DataFrame") -> "DataFrame":
     the 10x scale check (77M-row localCheckpoint + broadcast OOM). One
     consumer, one groupBy, no checkpoint. Per-doc fan-out stays bounded
     (frames x <=384 px)."""
-    import pandas as pd
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fs, ys, xs, vals, dabs = [], [], [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["avi"]):
-                w, h, frames = decode_mjpeg(bytes(blob))
-                yy, xx = np.mgrid[0:h, 0:w]
-                for f, px in enumerate(frames):
-                    ids.append(np.full(w * h, int(doc_id), np.int64))
-                    fs.append(np.full(w * h, f, np.int64))
-                    ys.append(yy.ravel())
-                    xs.append(xx.ravel())
-                    vals.append(px.ravel())
-                    d = (
-                        np.abs(px - frames[f - 1])
-                        if f
-                        else np.zeros_like(px)
-                    )
-                    dabs.append(d.ravel())
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "frame_idx": np.concatenate(fs),
-                    "y": np.concatenate(ys),
-                    "x": np.concatenate(xs),
-                    "recon": np.concatenate(vals),
-                    "dabs": np.concatenate(dabs),
-                }
-            )
-
-    return videos.mapInPandas(
-        extract,
+    return codec_stage(
+        videos,
+        _mjpeg_pixel_rows,
+        "avi",
         "doc_id long, frame_idx long, y long, x long, recon long, dabs long",
     )
 
@@ -480,19 +456,30 @@ def decode_avi_av(
 
 def attach_av_video(docs: "DataFrame") -> "DataFrame":
     """documents -> (doc_id, avi binary): two-stream interleaved A/V
-    container per doc, Arrow-batched, spread by the shared guard."""
-    import pandas as pd
-
-    def encode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "avi": [encode_avi_av(int(i)) for i in ids]}
-            )
-
-    return spread_for_python_stage(docs.select("doc_id")).mapInPandas(
-        encode, "doc_id long, avi binary"
+    container per doc through the codec stage, spread by the shared
+    guard."""
+    return codec_stage(
+        spread_for_python_stage(docs.select("doc_id")),
+        lambda d: {"avi": encode_avi_av(d)},
+        "doc_id",
+        "doc_id long, avi binary",
     )
+
+
+def _demux_av_row(blob: bytes) -> dict:
+    w, h, frames, rate, samples = decode_avi_av(blob)
+    s64 = samples.astype(np.int64)
+    return {
+        "width": w,
+        "height": h,
+        "n_frames": len(frames),
+        "video_recon_sum": int(sum(int(px.sum()) for px in frames)),
+        "sample_rate": rate,
+        "n_samples": int(s64.size),
+        "audio_abs_sum": int(np.abs(s64).sum()),
+        "audio_first": int(s64[0]),
+        "audio_last": int(s64[-1]),
+    }
 
 
 def demux_av_features(videos: "DataFrame") -> "DataFrame":
@@ -501,36 +488,10 @@ def demux_av_features(videos: "DataFrame") -> "DataFrame":
     all frames, audio rate/sample count + |sample| sum and first/last
     sample (byte-order and chunk-order pins). Scalar features computed in
     the decoder (exact int64), replayed relationally by the oracle."""
-    import pandas as pd
-
-    def extract(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["avi"]):
-                w, h, frames, rate, samples = decode_avi_av(bytes(blob))
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "n_frames": len(frames),
-                        "video_recon_sum": int(
-                            sum(int(px.sum()) for px in frames)
-                        ),
-                        "sample_rate": rate,
-                        "n_samples": int(samples.size),
-                        "audio_abs_sum": int(
-                            np.abs(samples.astype(np.int64)).sum()
-                        ),
-                        "audio_first": int(samples[0]),
-                        "audio_last": int(samples[-1]),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return videos.mapInPandas(
-        extract,
+    return codec_stage(
+        videos,
+        _demux_av_row,
+        "avi",
         "doc_id long, width int, height int, n_frames int, "
         "video_recon_sum long, sample_rate int, n_samples int, "
         "audio_abs_sum long, audio_first int, audio_last int",

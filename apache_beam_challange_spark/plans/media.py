@@ -1,7 +1,8 @@
-"""Multimodal registry queries: binary-column plumbing through Arrow-batched
-mapInPandas (operators/multimodal.py). The fake byte-arithmetic decoder lets
-even the Python-UDF path be hash-verified: the DuckDB oracle recomputes the
-same features from the md5 hex string (hex-pair -> int via strpos)."""
+"""Multimodal registry queries: binary-column plumbing through the one
+Arrow-batched codec stage (``operators/multimodal.codec_stage``, a narrow
+mapInArrow). The fake byte-arithmetic decoder lets even the Python-UDF
+path be hash-verified: the DuckDB oracle recomputes the same features from
+the md5 hex string (hex-pair -> int via strpos)."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ from apache_beam_challange_spark.operators.multimodal import (
     attach_fake_image,
     attach_wav_audio,
     bmp_phash16,
-    decode_image_features,
+    decode_image_features_arrow,
     sample_frames,
 )
 from apache_beam_challange_spark.plans.registry import query
@@ -48,14 +49,9 @@ FROM hx
 """.strip(),
 )
 def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary image column -> decoded feature rows via mapInArrow (the
-    measured-faster twin of the mapInPandas path; both tested equal). The
-    decode kernel is the documented stub (no codecs in-container); the
-    Spark plumbing (binary col, Arrow batches, schema contract) is real."""
-    from apache_beam_challange_spark.operators.multimodal import (
-        decode_image_features_arrow,
-    )
-
+    """Binary image column -> decoded feature rows through the codec
+    stage. The decode kernel is the byte-arithmetic fake; the Spark
+    plumbing (binary col, Arrow batches, schema contract) is real."""
     docs = load_table(spark, sf_dir, "documents")
     return decode_image_features_arrow(attach_fake_image(docs))
 
@@ -75,7 +71,8 @@ FROM hx, idx
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary "video" payloads: every 4th byte as a
-    frame record, 1->N inside mapInPandas (ffmpeg keyframe-seek shape)."""
+    frame record, a 1->N fan-out in the codec stage (ffmpeg keyframe-seek
+    shape)."""
     docs = load_table(spark, sf_dir, "documents")
     return sample_frames(attach_fake_image(docs), every=4, n_frames=4)
 
@@ -111,7 +108,7 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image codec round-trip: encode a deterministic 24-bit BMP per
     document (actual file bytes — header, 4-byte row padding, bottom-up
     rows), then decode it back with the pure-numpy BMP parser behind the
-    mapInPandas plumbing. The oracle recomputes every decoded feature in
+    codec stage. The oracle recomputes every decoded feature in
     closed form from the pixel formula, so a decoder that mishandles
     padding, the pixel-data offset, or the row flip hash-fails (corner_br
     reads the bottom-right pixel, which lives in the FIRST stored row)."""
@@ -155,7 +152,7 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEFLATE, per-row filters cycling None/Sub/Up/Average/Paeth, the
     stream split across multiple IDAT chunks, CRC-32 per chunk — then
     decode it back with the pure-python parser behind the same
-    mapInPandas plumbing. The oracle recomputes every decoded feature in
+    codec stage. The oracle recomputes every decoded feature in
     closed form from the shared pixel formula (byte length is excluded —
     DEFLATE size is not closed-form): a decoder that mishandles any
     filter's reconstruction, skips IDAT reassembly, or ignores CRCs
@@ -253,7 +250,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     amplitude, zero-crossing count). The oracle recomputes all three in
     closed form from the generating series, so a wrong sample decode,
     endianness slip, or off-by-one in the crossing definition hash-fails.
-    Shuffle-free: encode and decode are narrow mapInPandas passes."""
+    Shuffle-free: encode and decode are narrow codec-stage passes."""
     from apache_beam_challange_spark.operators.multimodal import (
         decode_audio_features,
     )
@@ -314,7 +311,7 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooling bug (padding, row flip, cell assignment) flips bits and
     hash-fails. phash equality/Hamming distance then feeds the SAME
     dedup machinery as text fingerprints (hash groupBy / banded
-    pairing). Narrow mapInPandas; no shuffle until the downstream
+    pairing). Narrow codec stage; no shuffle until the downstream
     groupBy."""
     docs = load_table(spark, sf_dir, "documents")
     return bmp_phash16(attach_bmp_image(docs))
@@ -371,7 +368,7 @@ def image_phash_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic min-id canonical — the same hash-groupBy shape as
     `dedup_exact_docs`, proving pixel-derived fingerprints flow through
     the text-dedup machinery unchanged. Scale shape: narrow decode
-    (mapInPandas) then ONE hash-keyed groupBy — exactly how image
+    (the codec stage) then ONE hash-keyed groupBy — exactly how image
     exact-dedup runs at 100 TB (with a 64-bit pHash there; the BANDED
     Hamming near-dup variant is deliberately NOT built on this 16-bit
     hash — at 2^16 buckets the candidate volume is O(n^2/2^16), which

@@ -296,8 +296,9 @@ def stateful_user_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches DuckDB bit-for-bit. The ``transformWithStateInPandas`` twin
     (``streaming/stateful.py:user_session_stats_tws`` — typed
     ValueState/ListState per stat) runs the same semantics on the Spark 4
-    API; it needs google.protobuf + RocksDB, absent here, so it is
-    exercised by a protobuf-gated test rather than this registry entry."""
+    API; it needs google.protobuf + RocksDB, so it is exercised by the
+    protobuf-gated ``test_user_session_stats_tws_twin`` and
+    ``tools/check_tws.py`` rather than this registry entry."""
     from apache_beam_challange_spark.streaming.stateful import user_session_stats
 
     ev = events_stream(spark, f"{sf_dir}/events.parquet")

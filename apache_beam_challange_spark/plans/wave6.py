@@ -3775,7 +3775,7 @@ def audio_dominant_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     DFT — spectral analysis with no FFT library and no float anywhere
     until the two output divisions: the engine decodes the REAL RIFF/
     WAVE bytes to long-format samples (``decode_wav_samples``, a
-    shuffle-free mapInPandas), joins the pinned 1e-12 fixed-point
+    shuffle-free codec stage), joins the pinned 1e-12 fixed-point
     twiddle table on ``(k*i) mod {_DFT_N}``, and every DFT bin's
     re/im parts and power are EXACT integers (s <= 1000, so re_fp <=
     3.2e16 and powers fit DECIMAL(38,0)) — the argmax over bins and its

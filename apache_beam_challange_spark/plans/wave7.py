@@ -108,7 +108,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOF0, the Annex K luminance Huffman tables, DC prediction, byte
     stuffing — then decode the actual bytes back (marker walk, canonical
     Huffman decode, dequantize with the FILE's table, exact-integer
-    IDCT with the pinned 1e-6 cosine basis) behind mapInPandas. Because
+    IDCT with the pinned 1e-6 cosine basis) behind the codec stage. Because
     quantization is exact integer arithmetic on both sides, the oracle
     replays the full DCT->quantize->IDCT chain relationally from the
     closed-form pixels and the reconstruction matches bit-for-bit: a
@@ -483,7 +483,7 @@ def image_jpeg_dct_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data pipeline runs (web images arrive JPEG-compressed; the
     dedup hash must be computed on what decoders actually reconstruct,
     not on pristine source pixels). Engine: real byte decode
-    (mapInPandas) -> exact 4x3 integer pooling -> pinned-cosine 2-D DCT
+    (the codec stage) -> exact 4x3 integer pooling -> pinned-cosine 2-D DCT
     joins -> exact-median threshold hash. The oracle replays the ENTIRE
     chain — forward DCT, quantizer, IDCT, pooling, hash — relationally,
     so a slip anywhere in codec OR hash hash-fails. Bounded per-doc

@@ -136,7 +136,7 @@ def multimodal_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per frame (even-padded), idx1 keyframe index — then decode the
     actual container bytes back (chunk walk honoring pad bytes, header
     cross-checks, per-frame Huffman decode + exact-integer IDCT) behind
-    mapInPandas. The oracle replays every frame's DCT->quantize->IDCT
+    the codec stage. The oracle replays every frame's DCT->quantize->IDCT
     chain relationally from the closed-form pixels, so reconstruction
     matches bit-for-bit: a container slip (missed pad byte, wrong movi
     LIST, frame-order scramble) or any decoder slip hash-fails.

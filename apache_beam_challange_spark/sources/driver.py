@@ -9,7 +9,9 @@ back through :func:`collect_bounded`, which caps the rows that can
 reach the driver before the collect runs and fetches them in one Arrow
 job. Nothing else in the package builds a frame from driver rows or
 collects a multi-row result into pandas (tests/test_driver_boundary.py
-scans for it).
+scans for it). :func:`ddl_schemas` is the one DDL -> Spark/Arrow schema
+mapping, shared with the Arrow-batched codec stage
+(``operators/multimodal.codec_stage``).
 """
 
 from __future__ import annotations
@@ -19,11 +21,18 @@ from collections.abc import Iterable
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 
 class CollectCapExceeded(RuntimeError):
     """A bounded collect found more rows than its declared cap."""
+
+
+def ddl_schemas(ddl: str) -> tuple[StructType, pa.Schema]:
+    """The Spark schema of the DDL string ``ddl`` and its Arrow twin under
+    Spark's own type mapping."""
+    schema = DataType.fromDDL(ddl)
+    return schema, to_arrow_schema(schema)
 
 
 def local_frame(
@@ -31,8 +40,7 @@ def local_frame(
 ) -> DataFrame:
     """``rows`` (tuples in ``ddl`` column order; ``None`` is NULL) as a
     DataFrame over a local relation typed by the DDL string ``ddl``."""
-    schema = DataType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema)
+    schema, arrow = ddl_schemas(ddl)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.table(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow

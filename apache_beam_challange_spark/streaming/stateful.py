@@ -152,7 +152,7 @@ def user_session_stats(events: DataFrame) -> DataFrame:
 
     Runs on ``applyInPandasWithState``; :func:`user_session_stats_tws` is
     the same operator on the Spark 4 ``transformWithStateInPandas`` API
-    (protobuf-gated in this container, see :func:`running_key_counts_tws`)."""
+    (protobuf-gated, see :func:`running_key_counts_tws`)."""
     return events.groupBy("user_id").applyInPandasWithState(
         _session_stats_updates,
         outputStructType=SESSION_OUTPUT_SCHEMA,
@@ -166,15 +166,14 @@ def user_session_stats_tws(events: DataFrame) -> DataFrame:
     """:func:`user_session_stats` on ``transformWithStateInPandas`` with
     composable typed state — one ValueState per stat instead of a packed
     tuple, the shape the TWS API is designed for. Requires RocksDB state
-    store + a working ``google.protobuf`` (absent in this container; the
-    protobuf-gated test in tests/test_streaming.py asserts equality with
-    the batch GROUP BY where available).
-
-    UNVERIFIED IN THIS CONTAINER: the equality-with-batch contract is
-    never exercised here because the protobuf-gated tests skip —
-    ``tools/check_tws.py`` reports the gap loudly each round. The shared
-    :func:`_fold_session_batches` accumulator (the part that can diverge)
-    IS covered via the ``applyInPandasWithState`` twin."""
+    store + an importable ``google.protobuf``, which
+    ``streaming/tws_env.ensure_protobuf`` supplies from the App Engine
+    pure-python runtime where no protobuf is installed. The
+    equality-with-batch contract is exercised by
+    ``tests/test_streaming.py::test_user_session_stats_tws_twin`` and by
+    ``tools/check_tws.py`` (a two-batch file stream vs the batch GROUP
+    BY); both skip, loudly in the tool's case, only on a host with
+    neither protobuf source."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -244,9 +243,11 @@ def running_key_counts_tws(keyed: DataFrame, key_col: str = "key") -> DataFrame:
     Requires the RocksDB state store provider (the only provider
     transformWithState supports); callers set
     ``spark.sql.streaming.stateStore.providerClass`` accordingly. ALSO
-    requires a working ``google.protobuf`` (the TWS driver worker speaks
-    protobuf to the JVM state server) — absent in this container, so the
-    operator is exercised by a protobuf-gated test and the
+    requires an importable ``google.protobuf`` (the TWS driver worker
+    speaks protobuf to the JVM state server), supplied by
+    ``streaming/tws_env.ensure_protobuf`` where none is installed;
+    ``tests/test_streaming.py::test_transform_with_state_running_counts``
+    runs it, and skips only where neither protobuf source exists. The
     continuous-trigger proof runs on :func:`running_user_counts`
     (applyInPandasWithState needs no protobuf)."""
     from pyspark.sql.streaming.stateful_processor import (

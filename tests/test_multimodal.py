@@ -8,7 +8,7 @@ from apache_beam_challange_spark.operators.multimodal import (
     _decode_fake,
     _decode_real,
     attach_fake_image,
-    decode_image_features,
+    decode_image_features_arrow,
     sample_frames,
 )
 
@@ -20,7 +20,7 @@ def test_real_decoder_non_bmp_is_stubbed():
 
 def test_decode_features_exact(spark):
     docs = spark.createDataFrame([(1, "Hello World")], ["doc_id", "text"])
-    out = decode_image_features(attach_fake_image(docs)).collect()
+    out = decode_image_features_arrow(attach_fake_image(docs)).collect()
     digest = hashlib.md5(b"hello world").digest()
     assert len(out) == 1
     r = out[0]
@@ -37,20 +37,6 @@ def test_frame_sample_positions(spark):
     digest = hashlib.md5(b"abc").digest()
     got = {r["frame_idx"]: r["frame_byte"] for r in out}
     assert got == {i: digest[i * 4] for i in range(4)}
-
-
-def test_arrow_and_pandas_decoders_agree(spark):
-    from apache_beam_challange_spark.operators.multimodal import (
-        decode_image_features_arrow,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"doc number {i}") for i in range(20)], ["doc_id", "text"]
-    )
-    imgs = attach_fake_image(docs)
-    via_pandas = sorted(map(tuple, decode_image_features(imgs).collect()))
-    via_arrow = sorted(map(tuple, decode_image_features_arrow(imgs).collect()))
-    assert via_pandas == via_arrow
 
 
 def test_resize_halves_payload(spark):

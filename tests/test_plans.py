@@ -133,11 +133,11 @@ def test_lsh_signature_subtree_computed_once(plans):
 
 
 def test_bmp_decode_is_narrow(plans):
-    """Codec round-trip must be scan -> mapInPandas chains with no
+    """Codec round-trip must be scan -> Arrow codec-stage chains with no
     shuffle: each executor encodes/decodes its own partitions."""
     p = plans("multimodal_decode_bmp")
     assert "Exchange hashpartitioning" not in p
-    assert "ArrowEvalPython" in p or "MapInPandas" in p or "FlatMapInPandas" in p
+    assert p.count("MapInArrow") == 2  # encode stage + decode stage
 
 
 def test_geodesic_parity_is_broadcast_nlj(plans):

@@ -287,6 +287,14 @@ FLAGSHIPS = [
     "countmin_user_estimates",
     "dedup_exact_docs",
     "embedding_norms_by_label",
+    # the rest of the codec-stage family, so every media query's
+    # MapInArrow stages are on record
+    "multimodal_image_features",
+    "multimodal_decode_bmp",
+    "multimodal_decode_wav",
+    "multimodal_audio_features",
+    "multimodal_image_phash",
+    "multimodal_png_phash",
 ]
 
 #: Driver-tier queries deliberately absent from PLANS.md, with the reason
